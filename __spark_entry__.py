@@ -93,7 +93,8 @@ _SENTINELS = (
     # check per registered row): ALL 33 remaining rows whose latest
     # check is r11, then the 13 alphabetically-first r12 rows to fill
     # the window. After this window no registry row's latest check
-    # predates r12. _CHANGED_THIS_ROUND is empty (see above).
+    # predates r12. Both _CHANGED_THIS_ROUND rows
+    # (corpus_perplexity_buckets, corpus_dsir_select) sit in this window.
     "corpus_contamination",
     "corpus_dsir_select",
     "corpus_oov_rate",

@@ -20,8 +20,9 @@ identical either way — callers never branch (pinned by
 ``tests/test_plans.py::test_durable_checkpoint_honors_checkpoint_dir``).
 
 Reliable-checkpoint FILES are reaped by the ContextCleaner when
-``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (set it on
-clusters that configure a checkpoint dir); the eager block release in
+``spark.cleaner.referenceTracking.cleanCheckpoints=true``, which
+``session.get_spark`` sets whenever ``SPARK_GRAFT_CHECKPOINT_DIR`` is
+set (set it yourself on a session built elsewhere); the eager block release in
 ``release_local_checkpoint`` / ``llmprep._retire_anchor`` remains a
 block-level optimization and is a safe no-op on reliable checkpoints.
 """

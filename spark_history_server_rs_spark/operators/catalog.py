@@ -76,15 +76,21 @@ def applications(ev: DataFrame, limit: int = 100) -> DataFrame:
 
     Reference: duckdb_store_backup.rs:156-218.
     """
-    return (
-        ev.groupBy("app_id")
-        .agg(
-            epoch_ms(F.min("event_ts")).alias("start_ms"),
-            epoch_ms(F.max("event_ts")).alias("end_ms"),
-            F.count("*").alias("event_count"),
-        )
-        .orderBy(F.desc("end_ms"), "app_id")
-        .limit(limit)
+    return filter_applications(application_rows(ev), limit=limit).drop(
+        "completed"
+    )
+
+
+def application_rows(ev: DataFrame) -> DataFrame:
+    """A1's per-app aggregate plus the J3 ``completed`` flag, unfiltered
+    and unordered: the one-row-per-application input that
+    :func:`filter_applications` filters. The REST layer caches it once
+    per served snapshot."""
+    return ev.groupBy("app_id").agg(
+        epoch_ms(F.min("event_ts")).alias("start_ms"),
+        epoch_ms(F.max("event_ts")).alias("end_ms"),
+        F.count("*").alias("event_count"),
+        (F.count(F.when(F.col("is_app_end"), 1)) > 0).alias("completed"),
     )
 
 
@@ -105,12 +111,21 @@ def applications_filtered(
 
     Post-agg filters on a per-app aggregate — the filter input is one row
     per application, so this costs nothing extra at any event scale."""
-    apps = ev.groupBy("app_id").agg(
-        epoch_ms(F.min("event_ts")).alias("start_ms"),
-        epoch_ms(F.max("event_ts")).alias("end_ms"),
-        F.count("*").alias("event_count"),
-        (F.count(F.when(F.col("is_app_end"), 1)) > 0).alias("completed"),
+    return filter_applications(
+        application_rows(ev), statuses, min_end_ms, max_end_ms, limit
     )
+
+
+def filter_applications(
+    apps: DataFrame,
+    statuses: list[str] | None = None,
+    min_end_ms: int | None = None,
+    max_end_ms: int | None = None,
+    limit: int = 100,
+) -> DataFrame:
+    """The filter, order and limit half of :func:`applications_filtered`,
+    over any frame holding :func:`application_rows`' columns (extra
+    columns ride along)."""
     if statuses:
         wanted = {s.strip().upper() for s in statuses}
         allowed = [c for s, c in (("COMPLETED", True), ("RUNNING", False)) if s in wanted]
@@ -218,7 +233,11 @@ def executor_summary(ev: DataFrame) -> DataFrame:
                 "total_shuffle_write_mb"
             ),
         )
-        .orderBy("executor_id")
+        # one row per executor: sorting it in a single partition skips
+        # the range sort's sampling job and second shuffle (4 → 2 Spark
+        # jobs per call, measured on the per-app executors route)
+        .coalesce(1)
+        .sortWithinPartitions("executor_id")
     )
 
 

@@ -57,12 +57,19 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     # Reliable-checkpoint knob (functions/checkpoints.py): when set, every
     # maintenance/training lineage anchor survives executor loss; unset
     # (the local default) the anchors stay executor-local localCheckpoints.
+    # The ContextCleaner then also deletes each reliable checkpoint's
+    # files once its RDD is garbage-collected, so the dir does not grow
+    # with every pass.
     ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    if ckpt_dir:
+        builder = builder.config(
+            "spark.cleaner.referenceTracking.cleanCheckpoints", "true"
+        )
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     if ckpt_dir and spark.sparkContext.getCheckpointDir() is None:
         spark.sparkContext.setCheckpointDir(ckpt_dir)
     return spark

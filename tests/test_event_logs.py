@@ -4458,3 +4458,56 @@ def test_meta_rows_cache_sees_rewrites_and_deletes(spark, tmp_path):
     # deletion must read as absent again
     _delete_path(spark, f"{path}/meta")
     assert read_meta_rows_cached(spark, path) is None
+
+
+def test_relation_fingerprint_walks_partition_dirs(spark, tmp_path):
+    """The serving caches' freshness key lists with per-directory
+    ``listStatus``: the same (path, size, mtime) tuples as the recursive
+    ``listFiles`` walk it replaced, and it changes when a file lands in
+    an existing partition dir or a file is rewritten in place."""
+    import glob
+
+    from spark_history_server_rs_spark.sources.dedup_index import (
+        _relation_fingerprint,
+    )
+
+    def list_files_fingerprint(target):
+        jvm = spark.sparkContext._jvm
+        p = jvm.org.apache.hadoop.fs.Path(target)
+        fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        it, out = fs.listFiles(p, True), []
+        while it.hasNext():
+            st = it.next()
+            out.append((st.getPath().toString(), st.getLen(),
+                        st.getModificationTime()))
+        return tuple(sorted(out))
+
+    rel = str(tmp_path / "rel")
+    days = spark.createDataFrame(
+        [(d, f"2024-01-0{d % 3 + 1}") for d in range(30)],
+        "v int, event_date string",
+    )
+    days.write.partitionBy("event_date").parquet(rel)
+    fp = _relation_fingerprint(spark, rel)
+    assert fp == list_files_fingerprint(rel)
+    assert {os.path.basename(os.path.dirname(p)) for p, _, _ in fp} >= {
+        "event_date=2024-01-01", "event_date=2024-01-03"}
+    assert _relation_fingerprint(spark, str(tmp_path / "absent")) == ()
+
+    # an append inside an existing partition dir
+    days.filter("event_date = '2024-01-02'").write.mode("append").partitionBy(
+        "event_date").parquet(rel)
+    fp2 = _relation_fingerprint(spark, rel)
+    assert fp2 != fp and len(fp2) > len(fp)
+    assert fp2 == list_files_fingerprint(rel)
+
+    # in-place rewrites: a new size, then only a new mtime
+    victim = sorted(glob.glob(rel + "/event_date=2024-01-01/*.parquet"))[0]
+    with open(victim, "ab") as f:
+        f.write(b"\0")
+    fp3 = _relation_fingerprint(spark, rel)
+    assert fp3 != fp2
+    st = os.stat(victim)
+    os.utime(victim, ns=(st.st_atime_ns, st.st_mtime_ns + 5_000_000_000))
+    fp4 = _relation_fingerprint(spark, rel)
+    assert fp4 != fp3 and [s for _, s, _ in fp4] == [s for _, s, _ in fp3]

@@ -1879,15 +1879,52 @@ def test_durable_checkpoint_honors_checkpoint_dir(spark, tmp_path):
     finally:
         # restore the no-dir default for the rest of the suite
         # (checkpointDir is a plain var on SparkContext; the setter-only
-        # public API has no unset, so reach the scala field with a
-        # fallback that leaves the dir configured — harmless, reliable
-        # checkpoints are still correct anchors)
-        try:
-            getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-                sc._jvm.scala.Option.empty()
-            )
-        except Exception:
-            pass
+        # public API has no unset, so reach the scala field)
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.empty()
+        )
+    assert checkpoint_dir(src) is None
+
+
+def test_checkpoint_dir_env_turns_on_checkpoint_cleaning(monkeypatch):
+    """``SPARK_GRAFT_CHECKPOINT_DIR`` also turns on the ContextCleaner's
+    checkpoint-file cleanup, so reliable anchors do not pile up in the
+    dir; without it the conf is left alone."""
+    from spark_history_server_rs_spark import session
+
+    class _Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, _):  # noqa: N802 (SparkSession.Builder API)
+            return self
+
+        def master(self, _):
+            return self
+
+        def config(self, k, v):
+            self.conf[k] = v
+            return self
+
+        def getOrCreate(self):  # noqa: N802
+            sc = type("SC", (), {
+                "setLogLevel": lambda self, _: None,
+                "getCheckpointDir": lambda self: "set",
+            })()
+            return type("S", (), {"sparkContext": sc})()
+
+    key = "spark.cleaner.referenceTracking.cleanCheckpoints"
+    for env, want in ((None, None), ("/ckpt", "true")):
+        builder = _Builder()
+        monkeypatch.setattr(
+            session, "SparkSession", type("SS", (), {"builder": builder})
+        )
+        if env is None:
+            monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+        else:
+            monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", env)
+        session.get_spark()
+        assert builder.conf.get(key) == want
 
 
 def test_bpe_distributed_training_never_mutates_shared_aqe(
