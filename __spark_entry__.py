@@ -677,38 +677,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gc_time_trends": _q(catalog.gc_time_trends),
         "cpu_utilization": _q(catalog.cpu_utilization),
         "memory_usage": _q(catalog.memory_usage),
-        # S17 rollup-served twins: A5-A8 answered by re-aggregating the
-        # session-cached partial relation (sources/metrics_rollup.py) —
-        # same oracles as the raw twins, so the driver differential
+        # S17 rollup-served twins, one per metrics_rollup.ROLLUP_TWINS row:
+        # each re-aggregates the session-cached partial relations and
+        # shares its raw twin's oracle, so the oracle differential
         # proves serve-from-partials ≡ scan-from-events
-        "performance_trends_rollup": _q(metrics_rollup.performance_trends_rollup),
-        "gc_time_trends_rollup": _q(metrics_rollup.gc_time_trends_rollup),
-        "cpu_utilization_rollup": _q(metrics_rollup.cpu_utilization_rollup),
-        "memory_usage_rollup": _q(metrics_rollup.memory_usage_rollup),
-        "top_resource_consumers_rollup": _q(
-            metrics_rollup.top_resource_consumers_rollup
-        ),
-        "efficiency_analysis_rollup": _q(
-            metrics_rollup.efficiency_analysis_rollup
-        ),
-        "capacity_trends_rollup": _q(metrics_rollup.capacity_trends_rollup),
-        "cost_optimization_rollup": _q(metrics_rollup.cost_optimization_rollup),
-        "applications_rollup": _q(metrics_rollup.applications_rollup),
-        "executor_summary_rollup": _q(metrics_rollup.executor_summary_rollup),
-        "executor_utilization_rollup": _q(
-            metrics_rollup.executor_utilization_rollup
-        ),
-        "resource_utilization_metrics_rollup": _q(
-            metrics_rollup.resource_utilization_metrics_rollup
-        ),
-        # r13: the three analytics the r12 verdict flagged as still
-        # raw-scan-only — A3 (v2 all-events grain), A9 (task +
-        # all-events), A10 (per-stage relation) — now rollup-served
-        "resource_usage_summary_rollup": _q(
-            metrics_rollup.resource_usage_summary_rollup
-        ),
-        "cross_app_summary_rollup": _q(metrics_rollup.cross_app_summary_rollup),
-        "task_distribution_rollup": _q(metrics_rollup.task_distribution_rollup),
+        **{
+            f"{name}_rollup": _q(getattr(metrics_rollup, f"{name}_rollup"))
+            for name in metrics_rollup.ROLLUP_TWINS
+        },
         "cross_app_summary": _q(catalog.cross_app_summary),
         "task_distribution": _q(catalog.task_distribution),
         "job_metrics": _q(catalog.job_metrics),

@@ -7,11 +7,29 @@ Routes (reference ``api.rs:22-56``, ``analytics_api.rs:16-32``):
 - ``/api/v1/applications/{id}`` ; ``/{id}/executors``
 - ``/{id}/jobs|stages|storage/rdd|environment`` — stubs returning ``[]``
   (the reference stubs these too, ``api.rs:153-159``)
-- ``/api/v1/version`` ; ``/health``
+- ``/api/v1/version`` ; ``/health`` ; ``/api/v1/circuit-breaker``
 - ``/api/v1/optimization/resource-hogs`` ; ``.../efficiency-analysis``
 - ``/api/v1/capacity/usage-trends`` ; ``.../cost-optimization``
+  (:data:`PLATFORM_ROUTES`)
+- ``/api/v1/dashboard/summary`` and the server-rendered ``/optimize``
+  view (also ``/`` and ``/dashboard``) — the four platform analytics
+  folded into summary cards; ``/resources`` and ``/teams`` are the
+  reference's redirect and placeholder pages
 - deprecated ``/api/v1/analytics/*`` → 404
   (``analytics_api_test.rs:199-206``)
+
+Beyond the reference:
+
+- ``/api/v1/metrics/{slug}`` (+ ``limit``, day-granular
+  ``startDate``/``endDate``) — the rollup twins of
+  ``metrics_rollup.ROLLUP_TWINS`` listed in :data:`METRIC_SLUGS`, served
+  from an attached S17 rollup, else by the live catalog op; plus
+  ``task-duration-percentiles`` (DDSketch when a rollup is attached)
+- ``/api/v1/engagement/{funnel,retention,transitions,active-users,
+  segments}`` — engagement analytics over the warm events frame
+- ``/api/v1/corpus/*`` — corpus-health analytics (needs ``documents``)
+- ``/api/v1/ann/*`` — embedding/ANN health routes (needs ``embeddings``)
+- ``/api/v1/applications/{id}/jobs?detailed=true`` — the per-job rollup
 - ``/api/v1/indexes/status`` (+ ``?validate=1``) — §8 extension: the
   durable-artifact lifecycle ops view (meta-served counts, tombstones,
   opt-in manifest validation)
@@ -48,7 +66,9 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expressions import date_str
 from ..operators import catalog
+from ..sources import metrics_rollup as MR
 from ..sources.event_logs import applications_with_attempts, executor_details
 from ..sources.index_manifest import CorpusDriftError
 from .circuit_breaker import CircuitBreaker
@@ -261,6 +281,40 @@ def _wire_cost(r: dict) -> dict:
         "optimization_details": r["details"],
         "formatted_savings": f"${savings:.4f}",
     }
+
+
+#: the four platform analytics (reference analytics_api.rs:16-32), in the
+#: optimize view's panel order: route → (catalog name, wire adapter,
+#: dashboard row limit). The routes default to the twin's own limit.
+PLATFORM_ROUTES = {
+    "/api/v1/optimization/resource-hogs": (
+        "top_resource_consumers", _wire_resource_hog, 20
+    ),
+    "/api/v1/optimization/efficiency-analysis": (
+        "efficiency_analysis", _wire_efficiency, 20
+    ),
+    "/api/v1/capacity/usage-trends": ("capacity_trends", _wire_capacity, 30),
+    "/api/v1/capacity/cost-optimization": (
+        "cost_optimization", _wire_cost, 20
+    ),
+}
+
+#: /api/v1/metrics/{slug} → the analytic it serves: rollup twins
+#: (metrics_rollup.ROLLUP_TWINS) plus the percentile sketch
+METRIC_SLUGS = {
+    "performance-trends": "performance_trends",
+    "gc-trends": "gc_time_trends",
+    "cpu-utilization": "cpu_utilization",
+    "memory-usage": "memory_usage",
+    "top-resource-consumers": "top_resource_consumers",
+    "efficiency-analysis": "efficiency_analysis",
+    "capacity-trends": "capacity_trends",
+    "cost-optimization": "cost_optimization",
+    "resource-usage-summary": "resource_usage_summary",
+    "cross-app-summary": "cross_app_summary",
+    "task-distribution": "task_distribution",
+    "task-duration-percentiles": "task_duration_percentiles",
+}
 
 
 class AnalyticsHandler(BaseHTTPRequestHandler):
@@ -497,27 +551,21 @@ class AnalyticsHandler(BaseHTTPRequestHandler):
         ev = self.server.events  # type: ignore[attr-defined]
         p17 = getattr(self.server, "metrics_rollup_path", None)
         if p17 is not None:
-            from ..sources import metrics_rollup as MR
-
             rel = MR.materialized_rollup_relation(ev.sparkSession, p17)
 
             def _run(name, limit):
-                return MR.FROM_PARTIALS[name](rel, limit=limit)
+                return MR.ROLLUP_TWINS[name].finalize(rel, limit=limit)
         else:
 
             def _run(name, limit):
                 return getattr(catalog, name)(ev, limit=limit)
 
-        panels = (
-            ("top_resource_consumers", 20, _wire_resource_hog),
-            ("efficiency_analysis", 20, _wire_efficiency),
-            ("capacity_trends", 30, _wire_capacity),
-            ("cost_optimization", 20, _wire_cost),
-        )
-        with ThreadPoolExecutor(len(panels)) as pool:
-            hogs, eff, trends, cost = pool.map(
-                lambda p: [p[2](r) for r in _rows(_run(p[0], p[1]))], panels
-            )
+        def _panel(spec):
+            name, wire, limit = spec
+            return [wire(r) for r in _rows(_run(name, limit))]
+
+        with ThreadPoolExecutor(len(PLATFORM_ROUTES)) as pool:
+            hogs, eff, trends, cost = pool.map(_panel, PLATFORM_ROUTES.values())
         total_savings = round(sum(r["potential_cost_savings"] for r in eff), 6)
         # the reference's SummaryStats fold (dashboard.rs:100-131),
         # generalized from its single cost struct to the full list
@@ -683,59 +731,30 @@ class AnalyticsHandler(BaseHTTPRequestHandler):
             # reference stubs these with [] (api.rs:153-159)
             return self._send(200, [])
 
-        m = re.fullmatch(
-            r"/api/v1/metrics/"
-            r"(performance-trends|gc-trends|cpu-utilization|memory-usage"
-            r"|top-resource-consumers|efficiency-analysis|capacity-trends"
-            r"|cost-optimization|resource-usage-summary|cross-app-summary"
-            r"|task-distribution|task-duration-percentiles)",
-            path,
-        )
-        if m:
-            # beyond-reference: the A5-A8 analytics served from the
-            # durable S17 metrics rollup when one is attached — the
-            # dashboard refresh reads the pre-aggregated day-partitioned
-            # relation instead of rescanning the fact table (the whole
-            # point of the rollup at 100 TB); the live-op fallback keeps
-            # the routes available on rollup-less servers. The attached
+        m = re.fullmatch(r"/api/v1/metrics/([a-z-]+)", path)
+        if m and m.group(1) in METRIC_SLUGS:
+            # beyond-reference: the rollup twins served from the durable
+            # S17 metrics rollup when one is attached — the dashboard
+            # refresh reads the pre-aggregated day-partitioned relations
+            # instead of rescanning the fact table (the whole point of
+            # the rollup at 100 TB); the live-op fallback keeps the
+            # routes available on rollup-less servers. The attached
             # rollup is authoritative for these routes: it is the
             # continuously-maintained artifact, while the server's warm
             # frame may itself be a window of the corpus.
-            from ..operators import catalog as _cat
-            from ..sources import metrics_rollup as MR
-
-            name = {
-                "performance-trends": "performance_trends",
-                "gc-trends": "gc_time_trends",
-                "cpu-utilization": "cpu_utilization",
-                "memory-usage": "memory_usage",
-                "top-resource-consumers": "top_resource_consumers",
-                "efficiency-analysis": "efficiency_analysis",
-                "capacity-trends": "capacity_trends",
-                "cost-optimization": "cost_optimization",
-                "resource-usage-summary": "resource_usage_summary",
-                "cross-app-summary": "cross_app_summary",
-                "task-distribution": "task_distribution",
-                "task-duration-percentiles": "task_duration_percentiles",
-            }[m.group(1)]
-            defaults = {
-                "performance_trends": 500,
-                "gc_time_trends": 500,
-                "cpu_utilization": 1000,
-                "memory_usage": 1000,
-                "top_resource_consumers": 10,
-                "efficiency_analysis": 10,
-                "capacity_trends": 30,
-                "cost_optimization": 10,
-                # A3/A9 take no limit in the catalog (reference returns
-                # the full grouping / one global row)
-                "task_distribution": 500,
+            name = METRIC_SLUGS[m.group(1)]
+            # task_duration_percentiles is the DECLARED divergence (the
+            # sketch contract, reference analytics_api.rs:308's
+            # declared-but-unimplemented surface): a rollup-attached
+            # server answers from the DDSketch relation (raw-scan-free,
+            # ≤1% relative error), the fallback runs the exact holistic
+            # op — values agree within tolerance, not bit-identically,
+            # unlike every exact twin
+            twin = MR.ROLLUP_TWINS.get(name, MR.DURATION_SKETCH)
+            kw = {} if twin.limit is None else {
+                "limit": self._limit(qs, twin.limit)
             }
-            limit = (
-                self._limit(qs, defaults[name])
-                if name in defaults
-                else None
-            )
+
             # optional DAY-granular window (?startDate/?endDate, same
             # parser as /applications): the rollup is partitioned by
             # day, so the bound prunes partitions on a cold read and
@@ -754,64 +773,24 @@ class AnalyticsHandler(BaseHTTPRequestHandler):
                 ).strftime("%Y-%m-%d")
 
             start_day, end_day = _day("startDate"), _day("endDate")
+
+            def _window(df, day):
+                if start_day:
+                    df = df.filter(day >= start_day)
+                if end_day:
+                    df = df.filter(day <= end_day)
+                return df
+
             p17 = getattr(self.server, "metrics_rollup_path", None)
             if p17 is not None:
-                sp = ev.sparkSession
-
-                def _rel(rel="partials"):
-                    p = MR.materialized_rollup_relation(sp, p17, rel)
-                    if start_day:
-                        p = p.filter(F.col("event_date") >= start_day)
-                    if end_day:
-                        p = p.filter(F.col("event_date") <= end_day)
-                    return p
-
-                # the r13 trio reads other relations of the rollup (A3/
-                # A9 the all-events grain, A10 the per-stage grain); the
-                # original eight stay on the single-relation dispatch
-                if name == "resource_usage_summary":
-                    df = MR.resource_usage_summary_from_partials(
-                        _rel("app_events")
-                    )
-                elif name == "cross_app_summary":
-                    df = MR.cross_app_summary_from_partials(
-                        _rel(), _rel("app_events")
-                    )
-                elif name == "task_distribution":
-                    df = MR.task_distribution_from_partials(
-                        _rel("stage_events"), limit=limit
-                    )
-                elif name == "task_duration_percentiles":
-                    # DECLARED divergence from the fallback (the r14
-                    # sketch contract, reference analytics_api.rs:308's
-                    # declared-but-unimplemented surface): a rollup-
-                    # attached server answers from the DDSketch
-                    # relation (raw-scan-free, ≤1% relative error); the
-                    # rollup-less fallback below runs the exact
-                    # holistic op — values agree within tolerance, not
-                    # bit-identically, unlike every other metrics route
-                    df = MR.task_duration_percentiles_from_hist(
-                        _rel("dur_hist")
-                    )
-                else:
-                    df = MR.FROM_PARTIALS[name](_rel(), limit=limit)
+                df = twin.serve(lambda rel: _window(
+                    MR.materialized_rollup_relation(ev.sparkSession, p17, rel),
+                    F.col("event_date"),
+                ), **kw)
             else:
-                from ..functions.expressions import date_str
-
-                src = ev
-                if start_day:
-                    src = src.filter(
-                        date_str(F.col("event_date")) >= start_day
-                    )
-                if end_day:
-                    src = src.filter(date_str(F.col("event_date")) <= end_day)
-                if name in (
-                    "resource_usage_summary", "cross_app_summary",
-                    "task_duration_percentiles",
-                ):
-                    df = getattr(_cat, name)(src)
-                else:
-                    df = getattr(_cat, name)(src, limit=limit)
+                df = getattr(catalog, name)(
+                    _window(ev, date_str(F.col("event_date"))), **kw
+                )
             return self._send(200, _rows(df))
 
         m = re.fullmatch(r"/api/v1/engagement/(funnel|retention|transitions|active-users|segments)", path)
@@ -1034,26 +1013,13 @@ class AnalyticsHandler(BaseHTTPRequestHandler):
             rows = _rows(fn(emb).limit(self._limit(qs, 1000)))
             return self._send(200, rows)
 
-        if path == "/api/v1/optimization/resource-hogs":
-            df = catalog.top_resource_consumers(
-                self._filtered_events(qs), limit=self._limit(qs, 10)
+        if path in PLATFORM_ROUTES:
+            name, wire, _ = PLATFORM_ROUTES[path]
+            df = getattr(catalog, name)(
+                self._filtered_events(qs),
+                limit=self._limit(qs, MR.ROLLUP_TWINS[name].limit),
             )
-            return self._send(200, [_wire_resource_hog(r) for r in _rows(df)])
-        if path == "/api/v1/optimization/efficiency-analysis":
-            df = catalog.efficiency_analysis(
-                self._filtered_events(qs), limit=self._limit(qs, 10)
-            )
-            return self._send(200, [_wire_efficiency(r) for r in _rows(df)])
-        if path == "/api/v1/capacity/usage-trends":
-            df = catalog.capacity_trends(
-                self._filtered_events(qs), limit=self._limit(qs, 30)
-            )
-            return self._send(200, [_wire_capacity(r) for r in _rows(df)])
-        if path == "/api/v1/capacity/cost-optimization":
-            df = catalog.cost_optimization(
-                self._filtered_events(qs), limit=self._limit(qs, 10)
-            )
-            return self._send(200, [_wire_cost(r) for r in _rows(df)])
+            return self._send(200, [wire(r) for r in _rows(df)])
 
         if path in ("/", "/optimize", "/dashboard"):
             # dashboard render (reference dashboard.rs:47-51 routes "/"
@@ -1110,10 +1076,10 @@ def serve(
     ``/applications/{id}``, and the per-executor table
     (``executor_details``, only when the frame has ``src_file``) behind
     the detail side of ``/{id}/executors``. Both are cached plans over the
-    events frame, so their freshness ends where the frame's does: a write
-    into the served path through this session makes Spark re-cache the
-    frame and both tables; files changed by another process are not seen
-    until the next ``serve()``.
+    events frame, one partition each, so their freshness ends where the
+    frame's does: a write into the served path through this session makes
+    Spark re-cache the frame and both tables; files changed by another
+    process are not seen until the next ``serve()``.
 
     The two table builds run in one 4-thread pool with the ``warmup``
     queries (the dashboard panels and the executor summary, run once so
@@ -1152,11 +1118,11 @@ def serve(
     ``training_shards_path`` (optional) attaches an S15 shard export.
 
     ``metrics_rollup_path`` (optional) points the ``/api/v1/metrics/*``
-    routes at a durable S17 metrics rollup
-    (``sources.metrics_rollup.write_metrics_rollup``) so the A5-A8
-    dashboard analytics are answered from the pre-aggregated
-    day-partitioned partials instead of rescanning the warm fact frame;
-    without it the routes fall back to the live catalog operators.
+    routes and the dashboard's four panels at a durable S17 metrics
+    rollup (``sources.metrics_rollup.write_metrics_rollup``) so those
+    analytics are answered from the pre-aggregated day-partitioned
+    partials instead of rescanning the warm fact frame; without it they
+    fall back to the live catalog operators.
     Any attached durable artifact also surfaces on the read-only
     ``/api/v1/indexes/status`` ops route — relations present,
     meta-served membership counts, tombstone counts; add
@@ -1171,9 +1137,14 @@ def serve(
     if embeddings is not None:
         embeddings = embeddings.cache()
         embeddings.count()
-    apps = app_table(events).cache()
+    # one partition each: a cached plan keeps its shuffle's partition
+    # count (8 for a few dozen apps), and every route then pays a task
+    # per empty partition
+    apps = app_table(events).coalesce(1).cache()
     executors = (
-        executor_details(events).cache() if "src_file" in events.columns else None
+        executor_details(events).coalesce(1).cache()
+        if "src_file" in events.columns
+        else None
     )
     jobs = [t.count for t in (apps, executors) if t is not None]
     if warmup:

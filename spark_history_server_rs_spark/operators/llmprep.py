@@ -2775,19 +2775,6 @@ def km_trained_centroids_df(
     return out
 
 
-def km_trained_centroids(
-    emb: DataFrame, steps: int = KMEANS_TRAIN_STEPS
-) -> list[tuple[int, list[float]]]:
-    """Driver-side ``(cid, double[])`` view of
-    :func:`km_trained_centroids_df` — kept for tests/small-k callers;
-    index builds use the DataFrame form directly."""
-    df = km_trained_centroids_df(emb, steps)
-    try:
-        return [(r.label, list(r.centroid)) for r in df.orderBy("label").collect()]
-    finally:
-        _retire_anchor(df)
-
-
 def _km_train_oracle(steps: int) -> str:
     elems = _KM_ELEMS_DUCK.format(scale=EMBED_SCALE)
     parts = [

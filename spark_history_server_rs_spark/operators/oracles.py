@@ -20,6 +20,7 @@ DuckDB-vs-Spark portability rules observed here:
 from __future__ import annotations
 
 from ..sources.generic import duckdb_events_cte
+from ..sources.metrics_rollup import ROLLUP_TWINS
 
 _CTE = duckdb_events_cte()
 
@@ -564,20 +565,11 @@ LIMIT 200
 """
 
 # --------------------------------------------------------------------------
-# S17 rollup-served twins (A5R-A8R, sources/metrics_rollup.py): each shares
-# its raw twin's oracle VERBATIM — the differential then proves the
+# S17 rollup-served twins (sources/metrics_rollup.py ROLLUP_TWINS): each
+# shares its raw twin's oracle VERBATIM — the differential then proves the
 # two-level partial-aggregate plan reproduces the single-pass scan exactly
 # (the dedup_embedding_cosine_prefiltered precedent: same oracle, different
 # physical path — never a self-consistency check).
 # --------------------------------------------------------------------------
-for _raw_twin in (
-    "performance_trends", "gc_time_trends", "cpu_utilization", "memory_usage",
-    "top_resource_consumers", "efficiency_analysis", "capacity_trends",
-    "cost_optimization", "applications", "executor_summary",
-    "executor_utilization", "resource_utilization_metrics",
-    # r13: the last three raw-scan analytics joined the rollup —
-    # A3 from the v2 all-events grain (+event_type), A9 from the
-    # task + all-events relations, A10 from the per-stage relation
-    "resource_usage_summary", "cross_app_summary", "task_distribution",
-):
+for _raw_twin in ROLLUP_TWINS:
     ORACLE_SQL[f"{_raw_twin}_rollup"] = ORACLE_SQL[_raw_twin]

@@ -164,23 +164,35 @@ def _project_events(
             # parent dir for flat layouts, merging every app into one.
             F.coalesce(
                 j["App ID"],
-                # eventlog_v2_<appId> rollover dirs: the app id is the dir
-                # name MINUS the prefix (Spark's EventLogFileWriter v2
-                # naming), so events before ApplicationStart coalesce to
-                # the same app as events after it
-                F.nullif(
-                    F.regexp_replace(
-                        F.regexp_extract(
-                            F.col("src_file"),
-                            r"(application_[\w.-]+|app-[\w.-]+|eventlog_v2_[\w.-]+)(?:/[^/]*)?$",
-                            1,
+                # the writer's suffixes are not part of the id: a flat
+                # `local-<ms>.inprogress` (or `<app>.zstd`) log keys the
+                # events after ApplicationStart by the same app as its
+                # `App ID`. The `_<attemptId>` suffix stays: it is
+                # ambiguous against YARN ids.
+                F.regexp_replace(
+                    F.coalesce(
+                        # eventlog_v2_<appId> rollover dirs: the app id is
+                        # the dir name MINUS the prefix (Spark's
+                        # EventLogFileWriter v2 naming), so events before
+                        # ApplicationStart coalesce to the same app as
+                        # events after it
+                        F.nullif(
+                            F.regexp_replace(
+                                F.regexp_extract(
+                                    F.col("src_file"),
+                                    r"(application_[\w.-]+|app-[\w.-]+|eventlog_v2_[\w.-]+)(?:/[^/]*)?$",
+                                    1,
+                                ),
+                                r"^eventlog_v2_",
+                                "",
+                            ),
+                            F.lit(""),
                         ),
-                        r"^eventlog_v2_",
-                        "",
+                        F.regexp_extract(F.col("src_file"), r"([^/]+)$", 1),
                     ),
-                    F.lit(""),
+                    r"(\.(lz4|lzf|snappy|zstd))?(\.inprogress)?$",
+                    "",
                 ),
-                F.regexp_extract(F.col("src_file"), r"([^/]+)$", 1),
             ),
         )
         .withColumn(

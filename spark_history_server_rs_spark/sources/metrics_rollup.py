@@ -104,6 +104,10 @@ re-association.
 
 from __future__ import annotations
 
+import inspect
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.checkpoints import durable_checkpoint
@@ -137,18 +141,6 @@ STAGE_GRAIN = ("event_date", "app_id", "stage_id")
 #: scans the fact table. ``app_id`` is in the grain solely so the
 #: tombstone suppression (per-app retention/erasure) stays exact.
 DUR_HIST_GRAIN = ("event_date", "app_id", "event_type", "bucket")
-
-#: every analytics twin served BOTH raw-scan (catalog.<name>) and from
-#: the rollup (<name>_from_rollup / <name>_rollup) — the serve≡scan
-#: differential surface (tests iterate this, incl. the real-log pin)
-ROLLUP_TWINS = (
-    "performance_trends", "gc_time_trends", "cpu_utilization",
-    "memory_usage", "top_resource_consumers", "efficiency_analysis",
-    "capacity_trends", "cost_optimization", "applications",
-    "executor_summary", "executor_utilization",
-    "resource_utilization_metrics", "resource_usage_summary",
-    "cross_app_summary", "task_distribution",
-)
 
 #: relations attested by the manifest
 ROLLUP_RELATIONS = (
@@ -360,78 +352,44 @@ def dur_hist_partials(ev: DataFrame) -> DataFrame:
     )
 
 
-def merge_dur_hist(p: DataFrame) -> DataFrame:
-    """Compaction merge for the duration-histogram partials — pure
-    count SUM (the sketch's whole merge state is the counter)."""
-    return p.groupBy(*DUR_HIST_GRAIN).agg(F.sum("n").alias("n"))
+#: how a partial column merges, by its name's prefix: counts (``n``,
+#: ``n_*``) and ``sum_*`` by SUM, ``max_*`` by MAX, ``min_*`` by MIN —
+#: every builder above names its columns by this rule
+_MERGE_BY_PREFIX = {"n": F.sum, "sum": F.sum, "max": F.max, "min": F.min}
 
 
-def merge_partials(p: DataFrame) -> DataFrame:
-    """Merge partial cells that share a grain key (stream batches of the
-    same day/app/executor, or duplicate-retry rows already key-deduped).
-    Associative by construction — used by compaction; the serving twins
-    skip it and re-aggregate straight to their own (coarser) grain."""
-    sums = [
-        "n_tasks", "n_failed",
-        "n_duration", "sum_duration_ms",
-        "sum_cpu_ms", "sum_gc_ms",
-        "n_input", "sum_input_mb",
-        "n_output", "sum_output_mb",
-        "n_peak", "sum_peak_memory_mb",
-        "sum_mem_spill_mb", "sum_disk_spill_mb",
-        "sum_shuffle_read_mb", "sum_shuffle_write_mb",
-        "n_loc_process", "n_loc_node", "n_loc_rack", "n_loc_any",
+def merge_cells(p: DataFrame, grain: tuple[str, ...]) -> DataFrame:
+    """Compaction merge: fold the partial cells that share a grain key
+    (stream batches of the same cell, or duplicate-retry rows already
+    key-deduped) into one. Associative by construction; the serving
+    twins skip it and re-aggregate straight to their own (coarser)
+    grain. The ingest tags are dropped — the caller stamps the fold."""
+    values = [
+        c for c in p.columns if c not in grain and not c.startswith("ingest_")
     ]
-    maxes = [
-        "max_jvm_heap_mb", "max_peak_memory_mb", "max_event_ts",
-        "max_peak_c0", "max_jvm_c1024",
-    ]
-    return p.groupBy(*GRAIN).agg(
-        *[F.sum(c).alias(c) for c in sums],
-        *[F.max(c).alias(c) for c in maxes],
-        F.min("min_event_ts").alias("min_event_ts"),
+    return p.groupBy(*grain).agg(
+        *[_MERGE_BY_PREFIX[c.split("_")[0]](c).alias(c) for c in values]
     )
 
 
-def merge_exec_events(p: DataFrame) -> DataFrame:
-    """Compaction merge for the executor-lifecycle partials."""
-    return p.groupBy(*EXEC_GRAIN).agg(
-        F.sum("n_add").alias("n_add"),
-        F.sum("n_rem").alias("n_rem"),
-        F.min("min_add_ts").alias("min_add_ts"),
-        F.max("max_rem_ts").alias("max_rem_ts"),
-        F.max("max_add_cores").alias("max_add_cores"),
-    )
+class Relation(NamedTuple):
+    """One partial relation: its grain and its builder (events →
+    partial cells)."""
+
+    grain: tuple[str, ...]
+    build: Callable[[DataFrame], DataFrame]
 
 
-def merge_app_events(p: DataFrame) -> DataFrame:
-    """Compaction merge for the all-events partials."""
-    return p.groupBy(*APP_GRAIN).agg(
-        F.sum("n_events").alias("n_events"),
-        F.sum("n_app_end").alias("n_app_end"),
-        F.min("min_ts").alias("min_ts"),
-        F.max("max_ts").alias("max_ts"),
-        F.sum("n_duration").alias("n_duration"),
-        F.sum("sum_duration_ms").alias("sum_duration_ms"),
-        F.sum("sum_input_c0").alias("sum_input_c0"),
-        F.max("max_cores").alias("max_cores"),
-    )
-
-
-def merge_stage_events(p: DataFrame) -> DataFrame:
-    """Compaction merge for the per-stage task partials."""
-    return p.groupBy(*STAGE_GRAIN).agg(
-        F.sum("n_tasks").alias("n_tasks"),
-        F.sum("n_failed").alias("n_failed"),
-        F.sum("n_duration").alias("n_duration"),
-        F.sum("sum_duration_ms").alias("sum_duration_ms"),
-        F.min("min_duration_ms").alias("min_duration_ms"),
-        F.max("max_duration_ms").alias("max_duration_ms"),
-        F.sum("n_loc_process").alias("n_loc_process"),
-        F.sum("n_loc_node").alias("n_loc_node"),
-        F.sum("n_loc_rack").alias("n_loc_rack"),
-        F.sum("n_loc_any").alias("n_loc_any"),
-    )
+#: the five partial relations, keyed by their directory under the
+#: rollup path (the session cache keys by the same names); the stream
+#: updater appends in this order, the all-events relation last
+_RELATIONS = {
+    "partials": Relation(GRAIN, rollup_partials),
+    "exec_events": Relation(EXEC_GRAIN, exec_events_partials),
+    "stage_events": Relation(STAGE_GRAIN, stage_events_partials),
+    "dur_hist": Relation(DUR_HIST_GRAIN, dur_hist_partials),
+    "app_events": Relation(APP_GRAIN, app_events_partials),
+}
 
 
 # ==========================================================================
@@ -639,8 +597,6 @@ def cost_optimization_from_partials(
     return cost_optimization_derived(agg, limit)
 
 
-#: registered-query serving twins keyed by their raw-twin oracle name —
-#: the rollup queries share the RAW queries' DuckDB oracles verbatim
 def applications_from_partials(app_p: DataFrame, limit: int = 100) -> DataFrame:
     """A1 served from the per-app all-events partials (twin of
     ``catalog.applications``, reference duckdb_store_backup.rs:156-218)."""
@@ -903,154 +859,109 @@ def task_distribution_from_partials(
     )
 
 
-FROM_PARTIALS = {
-    "performance_trends": performance_trends_from_partials,
-    "gc_time_trends": gc_time_trends_from_partials,
-    "cpu_utilization": cpu_utilization_from_partials,
-    "memory_usage": memory_usage_from_partials,
-    "top_resource_consumers": top_resource_consumers_from_partials,
-    "efficiency_analysis": efficiency_analysis_from_partials,
-    "capacity_trends": capacity_trends_from_partials,
-    "cost_optimization": cost_optimization_from_partials,
+# ==========================================================================
+# the twin table — one row per rollup-served analytic drives every form
+# ==========================================================================
+class Twin(NamedTuple):
+    """How one analytic is served from partial cells: its finalizer and
+    the partial relations it reads, in the finalizer's argument order."""
+
+    finalize: Callable[..., DataFrame]
+    relations: tuple[str, ...]
+
+    @property
+    def limit(self) -> int | None:
+        """The finalizer's default ``limit`` (the REST default too), or
+        None for a twin that takes none."""
+        param = inspect.signature(self.finalize).parameters.get("limit")
+        return None if param is None else param.default
+
+    def serve(self, relation: Callable[[str], DataFrame], **kw) -> DataFrame:
+        """Finalize over ``relation(name)`` for each relation the twin
+        reads; ``kw`` (``limit``) passes to the finalizer."""
+        return self.finalize(*map(relation, self.relations), **kw)
+
+
+#: every analytic served BOTH raw-scan (``catalog.<name>``) and from the
+#: rollup with the same rows — the serve≡scan differential surface. Each
+#: row generates ``<name>_rollup(ev)`` (session-cached partials; the
+#: registered query) and ``<name>_from_rollup(spark, path[, limit])``
+#: (the durable rollup); the registry, the oracle aliases and the
+#: ``/api/v1/metrics/*`` routes loop over it. Order is registry order.
+#: The percentile sketch is not an exact twin (see DURATION_SKETCH).
+ROLLUP_TWINS: dict[str, Twin] = {
+    "performance_trends": Twin(performance_trends_from_partials, ("partials",)),
+    "gc_time_trends": Twin(gc_time_trends_from_partials, ("partials",)),
+    "cpu_utilization": Twin(cpu_utilization_from_partials, ("partials",)),
+    "memory_usage": Twin(memory_usage_from_partials, ("partials",)),
+    "top_resource_consumers": Twin(
+        top_resource_consumers_from_partials, ("partials",)
+    ),
+    "efficiency_analysis": Twin(efficiency_analysis_from_partials, ("partials",)),
+    "capacity_trends": Twin(capacity_trends_from_partials, ("partials",)),
+    "cost_optimization": Twin(cost_optimization_from_partials, ("partials",)),
+    "applications": Twin(applications_from_partials, ("app_events",)),
+    "executor_summary": Twin(
+        executor_summary_from_partials, ("partials", "exec_events")
+    ),
+    "executor_utilization": Twin(
+        executor_utilization_from_partials, ("partials",)
+    ),
+    "resource_utilization_metrics": Twin(
+        resource_utilization_metrics_from_partials, ("partials", "app_events")
+    ),
+    "resource_usage_summary": Twin(
+        resource_usage_summary_from_partials, ("app_events",)
+    ),
+    "cross_app_summary": Twin(
+        cross_app_summary_from_partials, ("partials", "app_events")
+    ),
+    "task_distribution": Twin(task_distribution_from_partials, ("stage_events",)),
 }
 
 
-# --------------------------------------------------------------------------
-# registered-query path: session-cached partials (no disk round-trip)
-# --------------------------------------------------------------------------
-def materialized_rollup_partials_df(ev: DataFrame) -> DataFrame:
-    """The partial relation behind the eight registered ``*_rollup``
-    queries — built ONCE per events frame through the shared keyed
-    cache (the dedup shingle-cache pattern), so the query family's
-    fan-out reads one persisted tiny relation instead of eight raw
-    scans. This is the in-session analog of the durable ``partials/``
-    relation; the disk lifecycle below serves cross-session."""
+def materialized_session_relation(ev: DataFrame, rel: str) -> DataFrame:
+    """One partial relation of ``ev``, built ONCE per events frame
+    through the shared keyed cache (the dedup shingle-cache pattern), so
+    the registered ``*_rollup`` queries read persisted tiny relations
+    instead of re-scanning the events. This is the in-session analog of
+    the durable relation :func:`materialized_rollup_relation` serves."""
     from ..operators.dedup import _materialized_df
 
-    spark = ev.sparkSession
     return _materialized_df(
-        spark, "_metrics_rollup_partials", ev.semanticHash(),
-        lambda: rollup_partials(ev),
+        ev.sparkSession, f"_metrics_rollup_{rel}", ev.semanticHash(),
+        lambda: _RELATIONS[rel].build(ev),
     )
 
 
-def performance_trends_rollup(ev: DataFrame) -> DataFrame:
-    """A5R: performance trends served from the cached rollup partials —
-    same oracle as A5, proving the two-level plan exactly."""
-    return performance_trends_from_partials(materialized_rollup_partials_df(ev))
+def _serving_forms(name: str, twin: Twin) -> tuple[Callable, Callable]:
+    """``<name>_rollup`` and ``<name>_from_rollup`` for one table row."""
+
+    def rollup(ev: DataFrame) -> DataFrame:
+        return twin.serve(lambda rel: materialized_session_relation(ev, rel))
+
+    def from_rollup(spark: SparkSession, path: str, **kw) -> DataFrame:
+        return twin.serve(
+            lambda rel: materialized_rollup_relation(spark, path, rel), **kw
+        )
+
+    rels = " + ".join(twin.relations)
+    for fn, suffix, source in (
+        (rollup, "rollup", f"the session-cached {rels} partials of ``ev``"),
+        (from_rollup, "from_rollup", f"the durable rollup's {rels} at ``path``"),
+    ):
+        fn.__name__ = fn.__qualname__ = f"{name}_{suffix}"
+        fn.__doc__ = (
+            f"``catalog.{name}`` served from {source}; same rows, same "
+            "oracle. Generated from ROLLUP_TWINS."
+        )
+    return rollup, from_rollup
 
 
-def gc_time_trends_rollup(ev: DataFrame) -> DataFrame:
-    """A6R: GC trends from rollup partials (oracle = A6's)."""
-    return gc_time_trends_from_partials(materialized_rollup_partials_df(ev))
-
-
-def cpu_utilization_rollup(ev: DataFrame) -> DataFrame:
-    """A7R: CPU utilization from rollup partials (oracle = A7's)."""
-    return cpu_utilization_from_partials(materialized_rollup_partials_df(ev))
-
-
-def memory_usage_rollup(ev: DataFrame) -> DataFrame:
-    """A8R: memory usage from rollup partials (oracle = A8's)."""
-    return memory_usage_from_partials(materialized_rollup_partials_df(ev))
-
-
-def top_resource_consumers_rollup(ev: DataFrame) -> DataFrame:
-    """A13R: resource hogs from rollup partials (oracle = A13's)."""
-    return top_resource_consumers_from_partials(
-        materialized_rollup_partials_df(ev)
+for _name, _twin in ROLLUP_TWINS.items():
+    globals()[f"{_name}_rollup"], globals()[f"{_name}_from_rollup"] = (
+        _serving_forms(_name, _twin)
     )
-
-
-def efficiency_analysis_rollup(ev: DataFrame) -> DataFrame:
-    """A14R: efficiency analysis from rollup partials (oracle = A14's)."""
-    return efficiency_analysis_from_partials(materialized_rollup_partials_df(ev))
-
-
-def capacity_trends_rollup(ev: DataFrame) -> DataFrame:
-    """A15R: capacity trends from rollup partials (oracle = A15's)."""
-    return capacity_trends_from_partials(materialized_rollup_partials_df(ev))
-
-
-def cost_optimization_rollup(ev: DataFrame) -> DataFrame:
-    """A16R: cost optimization from rollup partials (oracle = A16's)."""
-    return cost_optimization_from_partials(materialized_rollup_partials_df(ev))
-
-
-def _materialized_aux_df(ev: DataFrame, slot: str, build) -> DataFrame:
-    from ..operators.dedup import _materialized_df
-
-    return _materialized_df(ev.sparkSession, slot, ev.semanticHash(), build)
-
-
-def materialized_exec_events_df(ev: DataFrame) -> DataFrame:
-    """Session-cached executor-lifecycle partials (A4's add/remove side)."""
-    return _materialized_aux_df(
-        ev, "_metrics_rollup_exec", lambda: exec_events_partials(ev)
-    )
-
-
-def materialized_app_events_df(ev: DataFrame) -> DataFrame:
-    """Session-cached all-events partials (A1 + A3 + A9 + A12 liveness)."""
-    return _materialized_aux_df(
-        ev, "_metrics_rollup_app", lambda: app_events_partials(ev)
-    )
-
-
-def materialized_stage_events_df(ev: DataFrame) -> DataFrame:
-    """Session-cached per-stage task partials (A10)."""
-    return _materialized_aux_df(
-        ev, "_metrics_rollup_stage", lambda: stage_events_partials(ev)
-    )
-
-
-def applications_rollup(ev: DataFrame) -> DataFrame:
-    """A1R: the application listing from the per-app partials (oracle =
-    A1's)."""
-    return applications_from_partials(materialized_app_events_df(ev))
-
-
-def executor_summary_rollup(ev: DataFrame) -> DataFrame:
-    """A4R: executor summary from the task + lifecycle partials (oracle
-    = A4's)."""
-    return executor_summary_from_partials(
-        materialized_rollup_partials_df(ev), materialized_exec_events_df(ev)
-    )
-
-
-def executor_utilization_rollup(ev: DataFrame) -> DataFrame:
-    """A11R: executor utilization from rollup partials (oracle = A11's)."""
-    return executor_utilization_from_partials(
-        materialized_rollup_partials_df(ev)
-    )
-
-
-def resource_utilization_metrics_rollup(ev: DataFrame) -> DataFrame:
-    """A12R: the 20-aggregate resource rollup from the task + per-app
-    partials (oracle = A12's)."""
-    return resource_utilization_metrics_from_partials(
-        materialized_rollup_partials_df(ev), materialized_app_events_df(ev)
-    )
-
-
-def resource_usage_summary_rollup(ev: DataFrame) -> DataFrame:
-    """A3R: per-(app, type, day) usage from the all-events partials
-    (oracle = A3's)."""
-    return resource_usage_summary_from_partials(materialized_app_events_df(ev))
-
-
-def cross_app_summary_rollup(ev: DataFrame) -> DataFrame:
-    """A9R: the global platform summary from the task + all-events
-    partials (oracle = A9's)."""
-    return cross_app_summary_from_partials(
-        materialized_rollup_partials_df(ev), materialized_app_events_df(ev)
-    )
-
-
-def task_distribution_rollup(ev: DataFrame) -> DataFrame:
-    """A10R: per-(app, stage) task distribution from the per-stage
-    partials (oracle = A10's)."""
-    return task_distribution_from_partials(materialized_stage_events_df(ev))
 
 
 # ==========================================================================
@@ -1097,17 +1008,19 @@ def write_metrics_rollup(ev: DataFrame, path: str) -> None:
 
     spark = ev.sparkSession
     invalidate_count_row(spark, path)
-    partials = _stamp(rollup_partials(ev), _BATCH_BUILD, _BATCH_LINEAGE)
     # cluster by the partition key: ONE file per day directory instead
-    # of shuffle-partition-count files — the relation is cells-sized, so
-    # per-file open/seek and the serving cache's per-call fingerprint
+    # of shuffle-partition-count files — the relations are cells-sized,
+    # so per-file open/seek and the serving cache's per-call fingerprint
     # listing dominate scan cost when files are many and tiny (measured
     # at the 10x tier: 960 files → 30 cut the warm serve ~2x). A day
     # whose cells outgrow one healthy file is what compaction's
     # maxRecordsPerFile-free rewrite is for at this relation's scale.
     # Explicit width so the day writes run as PARALLEL tasks (r15 —
     # see _day_clustered).
-    partials = _day_clustered(partials)
+    rels = [
+        (rel, _day_clustered(_stamp(r.build(ev), _BATCH_BUILD, _BATCH_LINEAGE)))
+        for rel, r in _RELATIONS.items()
+    ]
     # The five partial relations are independent aggregations of the
     # same events frame writing to five disjoint directories — run the
     # writes overlapped (guide §2.6) so each relation's reduce/write
@@ -1125,17 +1038,6 @@ def write_metrics_rollup(ev: DataFrame, path: str) -> None:
             f"{path}/{rel}"
         )
 
-    rels: list[tuple[str, DataFrame]] = [("partials", partials)]
-    for rel, build in (
-        ("exec_events", exec_events_partials),
-        ("app_events", app_events_partials),
-        ("stage_events", stage_events_partials),
-        ("dur_hist", dur_hist_partials),
-    ):
-        rels.append((
-            rel,
-            _day_clustered(_stamp(build(ev), _BATCH_BUILD, _BATCH_LINEAGE)),
-        ))
     # pool width = the relation count: five bounded cells-sized write
     # jobs don't fight for executors even on a busy cluster, and a
     # 3-wide pool measurably serialized the last two writes behind the
@@ -1197,16 +1099,7 @@ def read_rollup_partials(spark: SparkSession, path: str) -> DataFrame:
     the serving twins go through :func:`materialized_rollup_relation`,
     which runs this ONCE per index state and keeps the result
     persisted."""
-    return _read_rollup_relation(spark, path, "partials", GRAIN)
-
-
-_REL_GRAINS = {
-    "partials": GRAIN,
-    "exec_events": EXEC_GRAIN,
-    "app_events": APP_GRAIN,
-    "stage_events": STAGE_GRAIN,
-    "dur_hist": DUR_HIST_GRAIN,
-}
+    return _read_rollup_relation(spark, path, "partials")
 
 
 def _check_rollup_layout(df: DataFrame, where: str) -> None:
@@ -1225,14 +1118,14 @@ def _check_rollup_layout(df: DataFrame, where: str) -> None:
         )
 
 
-def _read_rollup_relation(
-    spark: SparkSession, path: str, rel: str, grain: tuple[str, ...]
-) -> DataFrame:
+def _read_rollup_relation(spark: SparkSession, path: str, rel: str) -> DataFrame:
     p = spark.read.parquet(f"{path}/{rel}").withColumn(
         "event_date", F.col("event_date").cast("string")
     )
     _check_rollup_layout(p, f"{path}/{rel}")
-    p = p.dropDuplicates([*grain, "ingest_lineage", "ingest_batch"])
+    p = p.dropDuplicates(
+        [*_RELATIONS[rel].grain, "ingest_lineage", "ingest_batch"]
+    )
     tomb = _tombstoned_app_ids(spark, path)
     if tomb is not None:
         p = p.join(tomb, "app_id", "left_anti")
@@ -1278,138 +1171,7 @@ def materialized_rollup_relation(
         spark,
         f"_rollup_{rel}_served",
         key,
-        lambda: _read_rollup_relation(
-            spark, path, rel, _REL_GRAINS[rel]
-        ).coalesce(n_parts),
-    )
-
-
-def performance_trends_from_rollup(
-    spark: SparkSession, path: str, limit: int = 500
-) -> DataFrame:
-    """A5 from the durable rollup — no raw-event scan in the plan."""
-    return performance_trends_from_partials(
-        materialized_rollup_relation(spark, path), limit
-    )
-
-
-def gc_time_trends_from_rollup(
-    spark: SparkSession, path: str, limit: int = 500
-) -> DataFrame:
-    """A6 from the durable rollup."""
-    return gc_time_trends_from_partials(materialized_rollup_relation(spark, path), limit)
-
-
-def cpu_utilization_from_rollup(
-    spark: SparkSession, path: str, limit: int = 1000
-) -> DataFrame:
-    """A7 from the durable rollup."""
-    return cpu_utilization_from_partials(materialized_rollup_relation(spark, path), limit)
-
-
-def memory_usage_from_rollup(
-    spark: SparkSession, path: str, limit: int = 1000
-) -> DataFrame:
-    """A8 from the durable rollup."""
-    return memory_usage_from_partials(materialized_rollup_relation(spark, path), limit)
-
-
-def top_resource_consumers_from_rollup(
-    spark: SparkSession, path: str, limit: int = 10
-) -> DataFrame:
-    """A13 from the durable rollup."""
-    return top_resource_consumers_from_partials(
-        materialized_rollup_relation(spark, path), limit
-    )
-
-
-def efficiency_analysis_from_rollup(
-    spark: SparkSession, path: str, limit: int = 10
-) -> DataFrame:
-    """A14 from the durable rollup."""
-    return efficiency_analysis_from_partials(
-        materialized_rollup_relation(spark, path), limit
-    )
-
-
-def capacity_trends_from_rollup(
-    spark: SparkSession, path: str, limit: int = 30
-) -> DataFrame:
-    """A15 from the durable rollup."""
-    return capacity_trends_from_partials(
-        materialized_rollup_relation(spark, path), limit
-    )
-
-
-def cost_optimization_from_rollup(
-    spark: SparkSession, path: str, limit: int = 10
-) -> DataFrame:
-    """A16 from the durable rollup."""
-    return cost_optimization_from_partials(
-        materialized_rollup_relation(spark, path), limit
-    )
-
-
-def applications_from_rollup(
-    spark: SparkSession, path: str, limit: int = 100
-) -> DataFrame:
-    """A1 from the durable rollup's per-app relation."""
-    return applications_from_partials(
-        materialized_rollup_relation(spark, path, "app_events"), limit
-    )
-
-
-def executor_summary_from_rollup(spark: SparkSession, path: str) -> DataFrame:
-    """A4 from the durable rollup's task + lifecycle relations."""
-    return executor_summary_from_partials(
-        materialized_rollup_relation(spark, path),
-        materialized_rollup_relation(spark, path, "exec_events"),
-    )
-
-
-def executor_utilization_from_rollup(
-    spark: SparkSession, path: str, limit: int = 20
-) -> DataFrame:
-    """A11 from the durable rollup."""
-    return executor_utilization_from_partials(
-        materialized_rollup_relation(spark, path), limit
-    )
-
-
-def resource_utilization_metrics_from_rollup(
-    spark: SparkSession, path: str, limit: int = 1000
-) -> DataFrame:
-    """A12 from the durable rollup's task + per-app relations."""
-    return resource_utilization_metrics_from_partials(
-        materialized_rollup_relation(spark, path),
-        materialized_rollup_relation(spark, path, "app_events"),
-        limit,
-    )
-
-
-def resource_usage_summary_from_rollup(
-    spark: SparkSession, path: str
-) -> DataFrame:
-    """A3 from the durable rollup's all-events relation."""
-    return resource_usage_summary_from_partials(
-        materialized_rollup_relation(spark, path, "app_events")
-    )
-
-
-def cross_app_summary_from_rollup(spark: SparkSession, path: str) -> DataFrame:
-    """A9 from the durable rollup's task + all-events relations."""
-    return cross_app_summary_from_partials(
-        materialized_rollup_relation(spark, path),
-        materialized_rollup_relation(spark, path, "app_events"),
-    )
-
-
-def task_distribution_from_rollup(
-    spark: SparkSession, path: str, limit: int = 500
-) -> DataFrame:
-    """A10 from the durable rollup's per-stage relation."""
-    return task_distribution_from_partials(
-        materialized_rollup_relation(spark, path, "stage_events"), limit
+        lambda: _read_rollup_relation(spark, path, rel).coalesce(n_parts),
     )
 
 
@@ -1487,6 +1249,12 @@ def task_duration_percentiles_from_hist(hist: DataFrame) -> DataFrame:
             for _, name in qs
         ],
     ).orderBy("event_type")
+
+
+#: the percentile sketch, served like a twin but kept OUT of
+#: ROLLUP_TWINS: it estimates the exact holistic op within tolerance, so
+#: it shares no oracle and has no registered query
+DURATION_SKETCH = Twin(task_duration_percentiles_from_hist, ("dur_hist",))
 
 
 # --------------------------------------------------------------------------
@@ -1659,13 +1427,8 @@ def stream_update_metrics_rollup(
                 return
             hwm = _read_folded_hwm(spark, path)
             to_append, replayed = [], False
-            for rel, frame in (
-                ("partials", rollup_partials(batch_df)),
-                ("exec_events", exec_events_partials(batch_df)),
-                ("stage_events", stage_events_partials(batch_df)),
-                ("dur_hist", dur_hist_partials(batch_df)),
-                ("app_events", app_part),
-            ):
+            for rel, r in _RELATIONS.items():
+                frame = app_part if rel == "app_events" else r.build(batch_df)
                 if int(batch_id) <= hwm.get((rel, lineage), -1):
                     # compaction already folded this batch's rows into
                     # this relation — re-appending would double-count
@@ -1785,7 +1548,7 @@ def compact_metrics_rollup(spark: SparkSession, path: str) -> list[dict]:
 
     invalidate_count_row(spark, path)
     hwm = _read_folded_hwm(spark, path)
-    for rel in _REL_GRAINS:
+    for rel in _RELATIONS:
         if not path_exists(spark, f"{path}/{rel}"):
             continue
         on_disk = spark.read.parquet(f"{path}/{rel}")
@@ -1809,34 +1572,27 @@ def compact_metrics_rollup(spark: SparkSession, path: str) -> list[dict]:
     # fold, tombstones retire after every fold, count rewritten last)
     from concurrent.futures import ThreadPoolExecutor
 
-    def _fold(rel: str, merge) -> dict | None:
+    def _fold(rel: str) -> dict | None:
         if not path_exists(spark, f"{path}/{rel}"):
             return None  # legacy layout / stream never carried this one
         folded = _day_clustered(_stamp(
-            merge(_read_rollup_relation(spark, path, rel, _REL_GRAINS[rel])),
+            merge_cells(
+                _read_rollup_relation(spark, path, rel), _RELATIONS[rel].grain
+            ),
             _BATCH_BUILD, _BATCH_LINEAGE,
         ))  # one file per day dir, written as parallel per-day tasks
         return {
             "relation": rel,
             "rows_after": compact_relation_swap(
                 spark, folded, f"{path}/{rel}", "event_date",
-                sort_cols=[c for c in _REL_GRAINS[rel][1:]],
+                sort_cols=list(_RELATIONS[rel].grain[1:]),
             ),
         }
 
     # same pool-width reasoning as the build's relation writes: five
     # bounded folds, one slot each
     with ThreadPoolExecutor(max_workers=5) as pool:
-        futures = [
-            pool.submit(_fold, rel, merge)
-            for rel, merge in (
-                ("partials", merge_partials),
-                ("exec_events", merge_exec_events),
-                ("app_events", merge_app_events),
-                ("stage_events", merge_stage_events),
-                ("dur_hist", merge_dur_hist),
-            )
-        ]
+        futures = [pool.submit(_fold, rel) for rel in _RELATIONS]
         out = [r for r in (f.result() for f in futures) if r is not None]
     if path_exists(spark, f"{path}/deleted_apps"):
         out.append(

@@ -932,28 +932,24 @@ def test_metrics_routes_rollup_served_and_fallback(spark, api):
     status route reports the attached rollup from meta-served state."""
     import tempfile
 
-    from spark_history_server_rs_spark.api.server import serve
+    from spark_history_server_rs_spark.api.server import METRIC_SLUGS, serve
     from spark_history_server_rs_spark.sources.metrics_rollup import (
+        ROLLUP_TWINS,
         delete_from_metrics_rollup,
         refresh_rollup_manifest,
         write_metrics_rollup,
     )
 
-    routes = (
-        "/api/v1/metrics/performance-trends",
-        "/api/v1/metrics/gc-trends",
-        "/api/v1/metrics/cpu-utilization",
-        "/api/v1/metrics/memory-usage?limit=40",
-        "/api/v1/metrics/top-resource-consumers",
-        "/api/v1/metrics/efficiency-analysis",
-        "/api/v1/metrics/capacity-trends",
-        "/api/v1/metrics/cost-optimization",
-        # the r13 trio: A3 (all-events grain), A9 (one global row),
-        # A10 (per-stage grain) — rollup-served like their siblings
-        "/api/v1/metrics/resource-usage-summary",
-        "/api/v1/metrics/cross-app-summary",
-        "/api/v1/metrics/task-distribution?limit=40",
+    # every exact-twin route of the slug table (the percentile sketch
+    # agrees within tolerance only — see its own test); two carry an
+    # explicit limit
+    limited = {"memory-usage", "task-distribution"}
+    routes = tuple(
+        f"/api/v1/metrics/{slug}" + ("?limit=40" if slug in limited else "")
+        for slug, name in METRIC_SLUGS.items()
+        if name in ROLLUP_TWINS
     )
+    assert len(routes) == len(METRIC_SLUGS) - 1
     live = {}
     for r in routes:
         code, rows = _get(api, r)
@@ -1302,44 +1298,46 @@ def test_app_tables_match_per_request_path_real_logs(spark):
 
 
 def test_attempts_fold_whole_log_unit(spark, tmp_path):
-    """Declared difference from the per-request path. A flat in-progress
-    log ``local-<ms>.inprogress`` keys every event but ApplicationStart
-    by its file name, so one log unit spans two app ids. The per-request
-    path folded attempts over the LISTED apps' events only, so the
-    attempt of ``local-<ms>`` changed with the page: listed alone it
-    lost the LogStart's Spark version and the later events' last-updated
-    time. The per-app table folds the whole unit, the reference's
-    per-file rule (one file, one attempt), whatever the page."""
+    """A flat in-progress log is ONE app. Its events other than
+    ApplicationStart carry no ``App ID`` and key by the file name, from
+    which the app-id rule strips Spark's writer suffixes (``.inprogress``
+    and the codec extension): both ``local-<ms>.inprogress`` and
+    ``app-<ts>-<n>.inprogress`` read back under their ``App ID``. Before,
+    they split into a second ``<id>.inprogress`` app. The per-app table
+    folds the whole unit (the reference's per-file rule: one file, one
+    attempt), and so does the per-request fold of the app alone."""
     from spark_history_server_rs_spark.sources.event_logs import (
         read_event_logs,
     )
 
-    app = "local-1700486400000"
-    evs = _app_log(app, 0, 3, finished=False)
-    (tmp_path / f"{app}.inprogress").write_text(
-        "".join(json.dumps(e) + "\n" for e in evs))
+    apps = ("local-1700486400000", "app-20231120000000-0001")
+    logs = {}
+    for day, app in enumerate(apps):
+        logs[app] = _app_log(app, day, 3, finished=False)
+        (tmp_path / f"{app}.inprogress").write_text(
+            "".join(json.dumps(e) + "\n" for e in logs[app]))
     ev = read_event_logs(spark, str(tmp_path) + "/*")
-    assert {r.app_id for r in ev.select("app_id").distinct().collect()} == {
-        app, f"{app}.inprogress"}
-    last = max(e["Timestamp"] for e in evs)
-
-    # per request: the attempt depends on which apps were listed
-    alone, _ = _per_request_attempts(ev, app)
-    assert alone[0]["app_spark_version"] == "unknown"
-    assert alone[0]["last_updated_ms"] != last
+    assert {r.app_id for r in ev.select("app_id").distinct().collect()} == set(
+        apps)
 
     httpd, base = _boot(ev)
     try:
-        code, one = _get(base, f"/api/v1/applications/{app}")
-        assert code == 200
-        att = one["attempts"]
-        assert len(att) == 1 and att[0]["appSparkVersion"] == "3.5.3"
-        assert att[0]["lastUpdatedEpoch"] == last
-        for limit in (1, 2):
-            code, page = _get(base, f"/api/v1/applications?limit={limit}")
-            for a in page:
-                # the file-name-keyed rows carry no attempt of their own
-                assert a["attempts"] == (att if a["app_id"] == app else [])
+        for app in apps:
+            last = max(e["Timestamp"] for e in logs[app])
+            alone, _ = _per_request_attempts(ev, app)
+            assert alone[0]["app_spark_version"] == "3.5.3"
+            assert alone[0]["last_updated_ms"] == last
+            code, one = _get(base, f"/api/v1/applications/{app}")
+            assert code == 200
+            att = one["attempts"]
+            assert len(att) == 1 and att[0]["appSparkVersion"] == "3.5.3"
+            assert att[0]["lastUpdatedEpoch"] == last
+            for limit in (1, 2):
+                code, page = _get(base, f"/api/v1/applications?limit={limit}")
+                assert code == 200 and len(page) == limit
+                for a in page:
+                    if a["app_id"] == app:
+                        assert a["attempts"] == att
     finally:
         httpd.shutdown()
 

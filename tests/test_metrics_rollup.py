@@ -413,23 +413,25 @@ def test_rebuild_retires_tombstones_last(spark, tmp_path, monkeypatch):
 
 
 def test_percentiles_not_servable_documented():
-    """Guard the scope line: FROM_PARTIALS maps only the oracle-shared
+    """Guard the scope line: ROLLUP_TWINS holds only the oracle-shared
     algebraic twins — the EXACT percentile op is holistic and must not
     grow a silent partial-served variant. Its scale path is the r14
-    DDSketch relation (``task_duration_percentiles_from_rollup``),
-    which is deliberately OUTSIDE FROM_PARTIALS: sketch estimates are
-    algorithm-specific, so it is tolerance-pinned against the exact op
-    instead of sharing a DuckDB oracle (the HLL-sibling contract)."""
-    assert set(mr.FROM_PARTIALS) == {
-        "performance_trends", "gc_time_trends", "cpu_utilization",
-        "memory_usage", "top_resource_consumers", "efficiency_analysis",
-        "capacity_trends", "cost_optimization",
-    }
-    assert "task_duration_percentiles" not in mr.FROM_PARTIALS
+    DDSketch relation (``task_duration_percentiles_from_rollup``,
+    ``DURATION_SKETCH``), which is deliberately OUTSIDE ROLLUP_TWINS:
+    sketch estimates are algorithm-specific, so it is tolerance-pinned
+    against the exact op instead of sharing a DuckDB oracle (the
+    HLL-sibling contract). Every twin has both served forms, and its
+    served default ``limit`` is the raw twin's."""
+    import inspect
+
+    assert "task_duration_percentiles" not in mr.ROLLUP_TWINS
+    assert mr.DURATION_SKETCH not in mr.ROLLUP_TWINS.values()
     assert callable(mr.task_duration_percentiles_from_rollup)
-    for name in RAW_TWINS:
+    for name, twin in mr.ROLLUP_TWINS.items():
         assert callable(getattr(mr, f"{name}_from_rollup"))
         assert callable(getattr(mr, f"{name}_rollup"))
+        raw = inspect.signature(RAW_TWINS[name]).parameters.get("limit")
+        assert twin.limit == (None if raw is None else raw.default), name
 
 
 # --------------------------------------------------------------------------
@@ -454,7 +456,7 @@ def test_replay_after_compaction_skipped_by_watermark(spark, tmp_path):
     lin = mr._checkpoint_lineage(spark, ckpt)
     mr.compact_metrics_rollup(spark, path)
     assert mr._read_folded_hwm(spark, path) == {
-        (rel, lin): 1 for rel in mr._REL_GRAINS
+        (rel, lin): 1 for rel in mr._RELATIONS
     }
 
     # the crash shape: batch 1's commit never landed (drop the local

@@ -1268,6 +1268,24 @@ def test_driver_window_invariant():
     assert not no_oracle, no_oracle
 
 
+def test_rollup_registry_follows_twin_table():
+    """The registered ``*_rollup`` queries and their oracle aliases are
+    derived from ``metrics_rollup.ROLLUP_TWINS`` — exactly one per twin,
+    each alias the raw twin's oracle verbatim."""
+    import __spark_entry__ as entrymod
+
+    from spark_history_server_rs_spark.operators.oracles import ORACLE_SQL
+    from spark_history_server_rs_spark.sources.metrics_rollup import (
+        ROLLUP_TWINS,
+    )
+
+    want = {f"{n}_rollup" for n in ROLLUP_TWINS}
+    assert {n for n in entrymod.queries() if n.endswith("_rollup")} == want
+    assert {n for n in ORACLE_SQL if n.endswith("_rollup")} == want
+    for n in ROLLUP_TWINS:
+        assert ORACLE_SQL[f"{n}_rollup"] == ORACLE_SQL[n]
+
+
 def test_knn_graph_build_plan_block_kernel(spark, tmp_path):
     """The S16 build's pair enumeration (VERDICT r08 #1): candidates run
     through balanced block-pair groups feeding the vectorized Arrow
