@@ -68,7 +68,13 @@ def _e(fn) -> Callable[[SparkSession, str], DataFrame]:
 #: themselves untouched), maintenance overlap, the BPE driver-local
 #: trainer's internals (bit-identical by differential+fuzz pin), test
 #: suite runtime, and bench evidence plumbing.
-_CHANGED_THIS_ROUND = ("corpus_perplexity_buckets", "corpus_dsir_select")
+#: `executor_summary_rollup`: its finalizer now sorts its one row per
+#: executor in a single partition, as the raw twin does, instead of a
+#: global range sort — same rows and order, two fewer Spark jobs per warm
+#: call (5 → 3 at sf0.01); it takes the last filler slot of the window.
+_CHANGED_THIS_ROUND = (
+    "corpus_perplexity_buckets", "corpus_dsir_select", "executor_summary_rollup"
+)
 
 # The driver's correctness harness checks the FIRST 50 registrations only.
 # Registration order is therefore a coverage schedule, not cosmetics:
@@ -128,8 +134,8 @@ _SENTINELS = (
     "text_quality_classifier",
     "tpch_q10_returned_items",
     "tpch_q1_pricing_summary",
-    # window filler — the 13 alphabetically-first r12-checked rows; the
-    # remaining 31 r12 rows are the r16 queue (all pytest-oracle-green
+    # window filler — the 12 alphabetically-first r12-checked rows; the
+    # remaining 32 r12 rows are the r16 queue (all pytest-oracle-green
     # every session regardless)
     "ann_cosine_topk",
     "ann_crossencoder_rerank",
@@ -143,7 +149,8 @@ _SENTINELS = (
     "capacity_trends",
     "capacity_trends_rollup",
     "cost_optimization",
-    "cost_optimization_rollup",
+    # changed this round (see _CHANGED_THIS_ROUND)
+    "executor_summary_rollup",
 )
 
 #: round-14 window (all 50 driver-green in CORRECTNESS_r14.json;

@@ -1,38 +1,28 @@
 """REST API — the reference's HTTP surface (SURVEY.md §2.11) as a thin
 stdlib ``http.server`` layer over the query catalog.
 
-Routes (reference ``api.rs:22-56``, ``analytics_api.rs:16-32``):
+Every route is one row of :data:`ROUTES` (path pattern → handler; the
+reference's router is ``api.rs:22-56``, ``analytics_api.rs:16-32``), and
+each slug family is one table:
 
-- ``/api/v1/applications`` (+ ``limit``/``minDate``/``maxDate`` params)
-- ``/api/v1/applications/{id}`` ; ``/{id}/executors``
-- ``/{id}/jobs|stages|storage/rdd|environment`` — stubs returning ``[]``
-  (the reference stubs these too, ``api.rs:153-159``)
-- ``/api/v1/version`` ; ``/health`` ; ``/api/v1/circuit-breaker``
-- ``/api/v1/optimization/resource-hogs`` ; ``.../efficiency-analysis``
-- ``/api/v1/capacity/usage-trends`` ; ``.../cost-optimization``
-  (:data:`PLATFORM_ROUTES`)
-- ``/api/v1/dashboard/summary`` and the server-rendered ``/optimize``
-  view (also ``/`` and ``/dashboard``) — the four platform analytics
-  folded into summary cards; ``/resources`` and ``/teams`` are the
-  reference's redirect and placeholder pages
-- deprecated ``/api/v1/analytics/*`` → 404
-  (``analytics_api_test.rs:199-206``)
-
-Beyond the reference:
-
-- ``/api/v1/metrics/{slug}`` (+ ``limit``, day-granular
-  ``startDate``/``endDate``) — the rollup twins of
-  ``metrics_rollup.ROLLUP_TWINS`` listed in :data:`METRIC_SLUGS`, served
-  from an attached S17 rollup, else by the live catalog op; plus
-  ``task-duration-percentiles`` (DDSketch when a rollup is attached)
-- ``/api/v1/engagement/{funnel,retention,transitions,active-users,
-  segments}`` — engagement analytics over the warm events frame
-- ``/api/v1/corpus/*`` — corpus-health analytics (needs ``documents``)
-- ``/api/v1/ann/*`` — embedding/ANN health routes (needs ``embeddings``)
-- ``/api/v1/applications/{id}/jobs?detailed=true`` — the per-job rollup
-- ``/api/v1/indexes/status`` (+ ``?validate=1``) — §8 extension: the
-  durable-artifact lifecycle ops view (meta-served counts, tombstones,
-  opt-in manifest validation)
+- ``/api/v1/applications[/{id}[/executors|jobs|stages|...]]`` — the
+  reference's application surface (jobs/stages/storage/environment are
+  ``[]`` stubs as in ``api.rs:153-159``; ``jobs?detailed=true`` is the
+  per-job rollup)
+- :data:`PLATFORM_ROUTES` — the four platform analytics; the
+  ``/api/v1/dashboard/summary`` fold and the server-rendered ``/optimize``
+  view (also ``/``, ``/dashboard``) run them as summary cards
+- :data:`METRIC_SLUGS` — ``/api/v1/metrics/{slug}``, the rollup twins
+  (served from an attached S17 rollup, else the live op)
+- :data:`ENGAGEMENT_OPS` — ``/api/v1/engagement/{slug}``
+- :data:`CORPUS_OPS` / :data:`ANN_OPS` — ``/api/v1/corpus/{slug}`` (needs
+  ``documents``) and ``/api/v1/ann/{slug}`` (needs ``embeddings``); the
+  slugs of :data:`SERVED_FORMS` read an attached durable index first
+- ``/api/v1/indexes/status`` (+ ``?validate=1``) — one
+  :data:`_ARTIFACTS` row per attachable durable artifact
+- ``/health``, ``/api/v1/version``, ``/api/v1/circuit-breaker``,
+  ``/resources`` and ``/teams``; deprecated ``/api/v1/analytics/*`` → 404
+  (``analytics_api_test.rs:199-206``); anything else → 404 ``not found``
 
 Design: the events DataFrame is normalized+cached once at server start
 (the warm serving state — the analog of the reference's open DuckDB file),
@@ -61,16 +51,33 @@ from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 from html import escape as html_escape
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from typing import Callable, NamedTuple
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.expressions import date_str
-from ..operators import catalog
+from ..operators import catalog, corpus, llmprep, similarity, textprep
+from ..operators.dedup import dedup_threshold_sweep
+from ..operators.relational import run_events_tail
+from ..sources import ann_index as AI
+from ..sources import dedup_index as DI
 from ..sources import metrics_rollup as MR
+from ..sources import training_shards as TS
 from ..sources.event_logs import applications_with_attempts, executor_details
-from ..sources.index_manifest import CorpusDriftError
+from ..sources.index_manifest import (
+    ANN_INDEX_RELATIONS,
+    DEDUP_INDEX_RELATIONS,
+    CorpusDriftError,
+    path_exists,
+)
+from ..sources.knn_graph import (
+    KNN_GRAPH_RELATIONS,
+    ann_graph_expand2_from_index,
+    ann_graph_expand_from_index,
+    validate_knn_graph,
+)
 from .circuit_breaker import CircuitBreaker
 
 VERSION = {"version": "1.0.0", "engine": "pyspark"}
@@ -316,6 +323,224 @@ METRIC_SLUGS = {
     "task-duration-percentiles": "task_duration_percentiles",
 }
 
+#: /api/v1/engagement/{slug} → the registered events-SQL shape (R29-R33)
+#: run over the warm frame; /api/v1/analytics/* stays a deprecated 404
+ENGAGEMENT_OPS = {
+    "funnel": "funnel_conversion",
+    "retention": "retention_cohorts",
+    "transitions": "event_transition_matrix",
+    "active-users": "rolling_active_users",
+    "segments": "set_ops_user_segments",
+}
+
+# The two frame families: every operator takes the attached frame and uses
+# per-call scoped views over thread-safe materialized caches, so different
+# routes run concurrently with no global lock (pinned by
+# tests/test_api.py::test_corpus_routes_concurrent).
+
+#: /api/v1/corpus/{slug} → live operator over the ``documents`` frame
+CORPUS_OPS = {
+    "profile": llmprep.profile_table,
+    "quality": textprep.gopher_rules,
+    "zipf": corpus.zipf_fit,
+    "sources": corpus.source_overlap,
+    "domain-weights": corpus.doremi_reweight,
+    "fertility": llmprep.bpe_fertility,
+    "boilerplate": textprep.line_boilerplate,
+    "encoding": textprep.encoding_artifacts,
+    "survivorship": corpus.dedup_survivorship,
+    "novelty": corpus.novelty_curve,
+    "filter-agreement": textprep.filter_agreement,
+    "surprisal": llmprep.bigram_logprob,
+    "compression": llmprep.bpe_compression,
+    "dedup-sweep": dedup_threshold_sweep,
+    "curriculum": corpus.curriculum_stages,
+    "vocab-curve": llmprep.bpe_vocab_curve,
+    "fragmentation": llmprep.pack_fragmentation,
+}
+
+#: /api/v1/ann/{slug} → live operator over the ``embeddings`` frame
+ANN_OPS = {
+    "nprobe-recall": similarity.ann_nprobe_recall,
+    "truncated-recall": similarity.ann_truncated_recall,
+    "dim-stats": llmprep.embedding_dim_stats,
+    "outliers": llmprep.embedding_outliers,
+    "int8-audit": llmprep.embedding_int8_audit,
+    "anisotropy": llmprep.embedding_anisotropy,
+    "abtt": llmprep.embedding_abtt_audit,
+    "graph-expand": similarity.ann_graph_expand,
+    "graph-depth": similarity.ann_graph_expand2,
+    "rerank": similarity.ann_crossencoder_rerank,
+}
+
+
+class Served(NamedTuple):
+    """The durable form of a frame route: when the server has a path at
+    ``attr``, ``form(spark, path, frame)`` answers from that artifact
+    instead of re-running the live op, or returns None when the
+    artifact lacks what the route needs."""
+
+    attr: str
+    form: Callable
+
+
+def _dedup_sweep_served(spark, path, docs):
+    # docs=None: the denominator comes from the index's own doc_ids
+    # membership, so the fractions stay consistent with the indexed
+    # pairs even if the frame drifted; a legacy pre-doc_ids index is
+    # measured against the frame
+    legacy = not path_exists(spark, f"{path}/doc_ids")
+    return DI.dedup_threshold_sweep_from_index(
+        spark, path, docs if legacy else None
+    )
+
+
+def _audit_served(name: str) -> Callable:
+    """A persisted ``write_ann_audits`` relation; None on an audit-less
+    index."""
+    return lambda spark, path, emb: (
+        AI.read_ann_audit(spark, path, name)
+        if AI.has_ann_audit(spark, path, name)
+        else None
+    )
+
+
+#: frame-route slug → its durable form: the S13 τ-sweep over persisted
+#: shingles, the S16 graph hops over persisted adjacency, the S14 sweep
+#: and rerank shortlist over persisted codes (every index configuration
+#: states its own system), and the persisted corpus-scan audits. One
+#: fallback rule covers every row (``_frame_route``): a drift refusal
+#: (``CorpusDriftError``) is logged and the live op serves; any other
+#: error surfaces as a 500.
+SERVED_FORMS = {
+    "dedup-sweep": Served("dedup_index_path", _dedup_sweep_served),
+    "graph-expand": Served("knn_graph_path", ann_graph_expand_from_index),
+    "graph-depth": Served("knn_graph_path", ann_graph_expand2_from_index),
+    "nprobe-recall": Served("ann_index_path", AI.ann_nprobe_recall_from_index),
+    "rerank": Served("ann_index_path", AI.ann_crossencoder_rerank_from_index),
+    "int8-audit": Served("ann_index_path", _audit_served("int8_audit")),
+    "anisotropy": Served("ann_index_path", _audit_served("anisotropy")),
+    "abtt": Served("ann_index_path", _audit_served("abtt")),
+}
+
+
+def _count(ids: DataFrame | None) -> int:
+    return 0 if ids is None else ids.count()
+
+
+def _discrepancies(validator: Callable) -> Callable:
+    return lambda spark, path: {
+        "discrepancies": [r.asDict() for r in validator(spark, path).collect()]
+    }
+
+
+def _ann_counts(spark, path):
+    # the S14 tombstone relation is a SEQUENCED log, not a live set: rows
+    # out-sequenced by revived vectors (and historical retries) stay
+    # until compaction, so a raw count can exceed the suppressed
+    # population; it is reported under the name of what it measures
+    tombs = f"{path}/tombstones"
+    return {
+        "n_codes": DI._read_count_row(spark, path, "n_codes"),
+        "n_tombstone_rows": (
+            spark.read.parquet(tombs).count() if path_exists(spark, tombs) else 0
+        ),
+    }
+
+
+def _ann_validated(spark, path):
+    # the true suppressed count: one bounded join against the latest code
+    # seqs — maintenance-slot cost, like the manifest diff
+    n_distinct = (
+        spark.read.parquet(f"{path}/codes")
+        .where("vec_id IS NOT NULL").select("vec_id").distinct().count()
+    )
+    return {
+        "n_suppressed": n_distinct - AI._live_vec_ids(spark, path).count(),
+        **_discrepancies(AI.validate_ann_index)(spark, path),
+    }
+
+
+def _rollup_counts(spark, path):
+    return {
+        "n_cells": DI._read_count_row(spark, path, "n_cells"),
+        "n_tombstones": _count(MR._tombstoned_app_ids(spark, path)),
+        # the replay-closure watermark: the highest stream batch
+        # compaction has folded per (relation, checkpoint lineage) — []
+        # until the first compaction
+        "folded_batch_hwm": [
+            {"relation": rel, "lineage": lin, "folded_batch": b}
+            for (rel, lin), b in sorted(MR._read_folded_hwm(spark, path).items())
+        ],
+    }
+
+
+def _shard_counts(spark, path):
+    # per-shard doc counts ride the manifest rows (≤ n_shards rows — no
+    # shard scan); n_shards is the export's declared modulus from meta/
+    manifest = f"{path}/manifest"
+    rows = (
+        spark.read.parquet(manifest).collect()
+        if path_exists(spark, manifest)
+        else []
+    )
+    return {
+        "shards": TS._list_shard_ids(spark, path),
+        "manifest_rows": len(rows),
+        "n_shards": TS._read_meta_n_shards(spark, path),
+        "shard_docs": {int(r["shard"]): int(r["n_docs"]) for r in rows},
+        "n_docs": sum(int(r["n_docs"]) for r in rows),
+    }
+
+
+class _Artifact(NamedTuple):
+    key: str  # the /indexes/status entry name
+    relations: tuple | None  # listed when present (None: not listed)
+    counts: Callable  # (spark, path) → cheap meta-served fields
+    validated: Callable  # (spark, path) → the ?validate=1 fields
+
+
+#: server path attribute → its /api/v1/indexes/status entry. Tombstones
+#: of the dedup and rollup families count DISTINCT ids: suppression is a
+#: per-id anti-join, so distinct IS the live suppressed count.
+_ARTIFACTS = {
+    "dedup_index_path": _Artifact(
+        "dedup_index",
+        DEDUP_INDEX_RELATIONS + ("meta",),
+        lambda spark, path: {
+            "n_docs": DI._meta_n_docs(spark, path),
+            "n_tombstones": _count(DI._tombstoned_doc_ids(spark, path)),
+        },
+        _discrepancies(DI.validate_dedup_index),
+    ),
+    "ann_index_path": _Artifact(
+        "ann_index",
+        ANN_INDEX_RELATIONS + ("counts", "tombstones"),
+        _ann_counts,
+        _ann_validated,
+    ),
+    "knn_graph_path": _Artifact(
+        "knn_graph",
+        KNN_GRAPH_RELATIONS + ("counts",),
+        lambda spark, path: {
+            "n_nodes": DI._read_count_row(spark, path, "n_nodes")
+        },
+        _discrepancies(validate_knn_graph),
+    ),
+    "metrics_rollup_path": _Artifact(
+        "metrics_rollup",
+        MR.ROLLUP_RELATIONS + ("counts",),
+        _rollup_counts,
+        _discrepancies(MR.validate_metrics_rollup),
+    ),
+    "training_shards_path": _Artifact(
+        "training_shards",
+        None,
+        _shard_counts,
+        _discrepancies(TS.validate_training_shards),
+    ),
+}
+
 
 class AnalyticsHandler(BaseHTTPRequestHandler):
     """One handler instance per request; the events DataFrame and the
@@ -324,24 +549,23 @@ class AnalyticsHandler(BaseHTTPRequestHandler):
     server_version = "spark-history-analytics/1.0"
 
     # ---- helpers ----------------------------------------------------------
-    def _send(self, code: int, payload) -> None:
-        body = json.dumps(payload, default=str).encode()
+    def _write(self, code: int, content_type: str, body: bytes) -> None:
         self.send_response(code)
-        self.send_header("Content-Type", "application/json")
+        self.send_header("Content-Type", content_type)
         self.send_header("Content-Length", str(len(body)))
         self.end_headers()
         self.wfile.write(body)
+
+    def _send(self, code: int, payload) -> None:
+        self._write(
+            code, "application/json", json.dumps(payload, default=str).encode()
+        )
+
+    def _send_html(self, html: str) -> None:
+        self._write(200, "text/html; charset=utf-8", html.encode())
 
     def log_message(self, fmt, *args):  # quiet test runs
         pass
-
-    def _send_html(self, html: str) -> None:
-        body = html.encode()
-        self.send_response(200)
-        self.send_header("Content-Type", "text/html; charset=utf-8")
-        self.send_header("Content-Length", str(len(body)))
-        self.end_headers()
-        self.wfile.write(body)
 
     def _indexes_status(self, validate: bool) -> dict:
         """Per-attached-artifact lifecycle status. Cheap by default:
@@ -349,175 +573,24 @@ class AnalyticsHandler(BaseHTTPRequestHandler):
         one-row counts (None = invalidated mid-stream; readers fall
         back to scans, this probe does NOT), tombstones counted from
         their own small relation. ``validate=True`` adds the manifest
-        diff — one scan per relation, the maintenance-slot cost."""
-        from ..sources import dedup_index as DI
-        from ..sources.index_manifest import (
-            ANN_INDEX_RELATIONS,
-            DEDUP_INDEX_RELATIONS,
-            path_exists,
-        )
-
+        diff — one scan per relation, the maintenance-slot cost, which
+        no status probe should pay per request at 100 TB."""
         spark = self.server.events.sparkSession  # type: ignore[attr-defined]
-
-        def _present(path, relations):
-            return [r for r in relations if path_exists(spark, f"{path}/{r}")]
-
-        def _n(path, rel):
-            if not path_exists(spark, f"{path}/{rel}"):
-                return 0
-            return spark.read.parquet(f"{path}/{rel}").count()
-
         out: dict = {}
-        p13 = getattr(self.server, "dedup_index_path", None)
-        if p13 is not None:
-            # DISTINCT doc_ids, not raw rows: the dedup family's
-            # suppression is a per-doc anti-join, so distinct IS the
-            # live suppressed-doc count (and retries no longer append
-            # duplicates anyway — see delete_from_dedup_index)
-            tomb13 = DI._tombstoned_doc_ids(spark, p13)
-            entry = {
-                "path": p13,
-                "relations": _present(p13, DEDUP_INDEX_RELATIONS + ("meta",)),
-                "n_docs": DI._meta_n_docs(spark, p13),
-                "n_tombstones": 0 if tomb13 is None else tomb13.count(),
-            }
+        for attr, art in _ARTIFACTS.items():
+            path = getattr(self.server, attr)
+            if path is None:
+                continue
+            entry = {"path": path}
+            if art.relations is not None:
+                entry["relations"] = [
+                    r for r in art.relations
+                    if path_exists(spark, f"{path}/{r}")
+                ]
+            entry.update(art.counts(spark, path))
             if validate:
-                entry["discrepancies"] = [
-                    r.asDict()
-                    for r in DI.validate_dedup_index(spark, p13).collect()
-                ]
-            out["dedup_index"] = entry
-        p14 = getattr(self.server, "ann_index_path", None)
-        if p14 is not None:
-            from ..sources.ann_index import validate_ann_index
-
-            # the S14 tombstone relation is a SEQUENCED log, not a live
-            # set: rows out-sequenced by revived vectors (and
-            # historical retries) stay until compaction, so a raw count
-            # can exceed the currently-suppressed population. Report it
-            # under the name of what it measures (ADVICE r11);
-            # ``validate=1`` adds the true suppressed count (one
-            # bounded join against latest code seqs — maintenance-slot
-            # cost, like the manifest diff).
-            entry = {
-                "path": p14,
-                "relations": _present(
-                    p14, ANN_INDEX_RELATIONS + ("counts", "tombstones")
-                ),
-                "n_codes": DI._read_count_row(spark, p14, "n_codes"),
-                "n_tombstone_rows": _n(p14, "tombstones"),
-            }
-            if validate:
-                from ..sources.ann_index import _live_vec_ids
-
-                codes = spark.read.parquet(f"{p14}/codes")
-                n_distinct = (
-                    codes.where("vec_id IS NOT NULL")
-                    .select("vec_id").distinct().count()
-                )
-                entry["n_suppressed"] = (
-                    n_distinct - _live_vec_ids(spark, p14).count()
-                )
-                entry["discrepancies"] = [
-                    r.asDict()
-                    for r in validate_ann_index(spark, p14).collect()
-                ]
-            out["ann_index"] = entry
-        p16 = getattr(self.server, "knn_graph_path", None)
-        if p16 is not None:
-            from ..sources.knn_graph import (
-                KNN_GRAPH_RELATIONS,
-                validate_knn_graph,
-            )
-
-            entry = {
-                "path": p16,
-                "relations": _present(
-                    p16, KNN_GRAPH_RELATIONS + ("counts",)
-                ),
-                "n_nodes": DI._read_count_row(spark, p16, "n_nodes"),
-            }
-            if validate:
-                entry["discrepancies"] = [
-                    r.asDict()
-                    for r in validate_knn_graph(spark, p16).collect()
-                ]
-            out["knn_graph"] = entry
-        p17 = getattr(self.server, "metrics_rollup_path", None)
-        if p17 is not None:
-            from ..sources.metrics_rollup import (
-                ROLLUP_RELATIONS,
-                _read_folded_hwm,
-                _tombstoned_app_ids,
-                validate_metrics_rollup,
-            )
-
-            # live-cell count is meta-served (one row); tombstones are
-            # the live suppressed-app set (distinct, like S13's — the
-            # family's suppression key is the app, and retried deletes
-            # never append duplicates)
-            tomb17 = _tombstoned_app_ids(spark, p17)
-            entry = {
-                "path": p17,
-                "relations": _present(
-                    p17, ROLLUP_RELATIONS + ("counts",)
-                ),
-                "n_cells": DI._read_count_row(spark, p17, "n_cells"),
-                "n_tombstones": 0 if tomb17 is None else tomb17.count(),
-                # ops visibility for the replay-closure watermark: the
-                # highest stream batch compaction has folded per
-                # (relation, checkpoint lineage) — ([] until the first
-                # compaction); a stream restart of the SAME lineage
-                # replaying at-or-below these appends nothing
-                "folded_batch_hwm": [
-                    {"relation": rel, "lineage": lin, "folded_batch": b}
-                    for (rel, lin), b in sorted(
-                        _read_folded_hwm(spark, p17).items()
-                    )
-                ],
-            }
-            if validate:
-                entry["discrepancies"] = [
-                    r.asDict()
-                    for r in validate_metrics_rollup(spark, p17).collect()
-                ]
-            out["metrics_rollup"] = entry
-        p15 = getattr(self.server, "training_shards_path", None)
-        if p15 is not None:
-            from ..sources.training_shards import (
-                _list_shard_ids,
-                validate_training_shards,
-            )
-
-            # per-shard doc counts ride the manifest rows already being
-            # read (≤ n_shards rows — no shard scan); n_shards is the
-            # export's declared modulus when meta/ exists
-            from ..sources.training_shards import _read_meta_n_shards
-
-            manifest_rows = (
-                [
-                    r.asDict()
-                    for r in spark.read.parquet(f"{p15}/manifest").collect()
-                ]
-                if path_exists(spark, f"{p15}/manifest")
-                else []
-            )
-            entry = {
-                "path": p15,
-                "shards": _list_shard_ids(spark, p15),
-                "manifest_rows": len(manifest_rows),
-                "n_shards": _read_meta_n_shards(spark, p15),
-                "shard_docs": {
-                    int(r["shard"]): int(r["n_docs"]) for r in manifest_rows
-                },
-                "n_docs": sum(int(r["n_docs"]) for r in manifest_rows),
-            }
-            if validate:
-                entry["discrepancies"] = [
-                    r.asDict()
-                    for r in validate_training_shards(spark, p15).collect()
-                ]
-            out["training_shards"] = entry
+                entry.update(art.validated(spark, path))
+            out[art.key] = entry
         if not out:
             raise ValueError(
                 "no durable index attached to this server — pass "
@@ -639,409 +712,216 @@ class AnalyticsHandler(BaseHTTPRequestHandler):
             self._send(500, {"error": str(ex)})
 
     def _route(self, path: str, qs: dict) -> None:
-        ev = self.server.events  # type: ignore[attr-defined]
-
-        if path == "/health":
-            return self._send(200, {"status": "healthy"})
-        if path == "/api/v1/version":
-            return self._send(200, VERSION)
-        if path.startswith("/api/v1/analytics"):
-            # deprecated endpoints must 404 (analytics_api_test.rs:199-206)
-            return self._send(404, {"error": "deprecated endpoint"})
-
-        if path == "/api/v1/indexes/status":
-            # read-only ops surface for the durable artifacts: cheap by
-            # default (FS listings + the meta-served one-row counts —
-            # zero index scans on a warm unchanged index), full
-            # manifest validation behind ?validate=1 because that is
-            # one scan PER RELATION — a per-request cost no status
-            # probe should pay at 100 TB
-            return self._send(
-                200, self._indexes_status("validate" in qs)
-            )
-
-        if path == "/api/v1/applications":
-            # full reference param surface (api.rs:62-99): status list,
-            # start-window (minDate/maxDate, P4), end-window
-            # (minEndDate/maxEndDate), limit. Unwindowed, the list is a
-            # filter over the per-app table; an event window recomputes
-            # the A1 columns over the windowed events and takes only the
-            # names and attempts from the table.
-            status = qs.get("status", [None])[0]
-            min_end = qs.get("minEndDate", [None])[0]
-            max_end = qs.get("maxEndDate", [None])[0]
-            apps = self.server.app_table  # type: ignore[attr-defined]
-            if any(qs.get(k) for k in _EVENT_WINDOW_PARAMS):
-                apps = catalog.application_rows(self._filtered_events(qs)).join(
-                    apps.select("app_id", "app_name", "attempts"),
-                    "app_id",
-                    "left",
-                )
-            df = catalog.filter_applications(
-                apps,
-                statuses=status.split(",") if status else None,
-                min_end_ms=parse_date_param(min_end) if min_end else None,
-                max_end_ms=parse_date_param(max_end) if max_end else None,
-                limit=self._limit(qs, 100),
-            )
-            return self._send(200, [_wire_app_row(r) for r in _rows(df)])
-
-        m = re.fullmatch(r"/api/v1/applications/([^/]+)", path)
-        if m:
-            table = self.server.app_table  # type: ignore[attr-defined]
-            rows = _rows(
-                table.filter(F.col("app_id") == m.group(1)).drop("completed")
-            )
-            if not rows:
-                return self._send(404, {"error": "unknown application"})
-            return self._send(200, _wire_app_row(rows[0]))
-
-        m = re.fullmatch(r"/api/v1/applications/([^/]+)/executors", path)
-        if m:
-            app_ev = ev.filter(ev["app_id"] == m.group(1))
-            rows = _rows(catalog.executor_summary(app_ev))
-            detail: dict = {}
-            executors = self.server.executor_table  # type: ignore[attr-defined]
-            if executors is not None:
-                # real-log source: the executor_details fold supplies the
-                # metadata fields (log/attribute maps, remove reason, ...)
-                detail = {
-                    r["executor_id"]: r
-                    for r in _rows(
-                        executors.filter(F.col("app_id") == m.group(1))
-                    )
-                }
-            return self._send(
-                200,
-                [_wire_executor(r, detail.get(r.get("executor_id"))) for r in rows],
-            )
-
-        m = re.fullmatch(r"/api/v1/applications/([^/]+)/jobs", path)
-        if m and qs.get("detailed", ["false"])[0].lower() == "true":
-            # extension: the real per-job rollup (the reference stubs jobs
-            # with [], api.rs:153-159 — stub behavior preserved below)
-            df = catalog.job_metrics(ev.filter(ev["app_id"] == m.group(1)))
-            return self._send(200, _rows(df))
-
-        m = re.fullmatch(
-            r"/api/v1/applications/([^/]+)/(jobs|stages|storage/rdd|environment)",
-            path,
-        )
-        if m:
-            # reference stubs these with [] (api.rs:153-159)
-            return self._send(200, [])
-
-        m = re.fullmatch(r"/api/v1/metrics/([a-z-]+)", path)
-        if m and m.group(1) in METRIC_SLUGS:
-            # beyond-reference: the rollup twins served from the durable
-            # S17 metrics rollup when one is attached — the dashboard
-            # refresh reads the pre-aggregated day-partitioned relations
-            # instead of rescanning the fact table (the whole point of
-            # the rollup at 100 TB); the live-op fallback keeps the
-            # routes available on rollup-less servers. The attached
-            # rollup is authoritative for these routes: it is the
-            # continuously-maintained artifact, while the server's warm
-            # frame may itself be a window of the corpus.
-            name = METRIC_SLUGS[m.group(1)]
-            # task_duration_percentiles is the DECLARED divergence (the
-            # sketch contract, reference analytics_api.rs:308's
-            # declared-but-unimplemented surface): a rollup-attached
-            # server answers from the DDSketch relation (raw-scan-free,
-            # ≤1% relative error), the fallback runs the exact holistic
-            # op — values agree within tolerance, not bit-identically,
-            # unlike every exact twin
-            twin = MR.ROLLUP_TWINS.get(name, MR.DURATION_SKETCH)
-            kw = {} if twin.limit is None else {
-                "limit": self._limit(qs, twin.limit)
-            }
-
-            # optional DAY-granular window (?startDate/?endDate, same
-            # parser as /applications): the rollup is partitioned by
-            # day, so the bound prunes partitions on a cold read and
-            # row-prunes the warm in-memory relation; the live fallback
-            # applies the identical day predicate so the two paths stay
-            # wire-identical. Day granularity is the rollup's native
-            # resolution — deliberately coarser than /applications'
-            # millisecond window.
-            def _day(param):
-                raw = qs.get(param, [None])[0]
-                if not raw:
-                    return None
-                ms = parse_date_param(raw)
-                return datetime.fromtimestamp(
-                    ms / 1000.0, tz=timezone.utc
-                ).strftime("%Y-%m-%d")
-
-            start_day, end_day = _day("startDate"), _day("endDate")
-
-            def _window(df, day):
-                if start_day:
-                    df = df.filter(day >= start_day)
-                if end_day:
-                    df = df.filter(day <= end_day)
-                return df
-
-            p17 = getattr(self.server, "metrics_rollup_path", None)
-            if p17 is not None:
-                df = twin.serve(lambda rel: _window(
-                    MR.materialized_rollup_relation(ev.sparkSession, p17, rel),
-                    F.col("event_date"),
-                ), **kw)
-            else:
-                df = getattr(catalog, name)(
-                    _window(ev, date_str(F.col("event_date"))), **kw
-                )
-            return self._send(200, _rows(df))
-
-        m = re.fullmatch(r"/api/v1/engagement/(funnel|retention|transitions|active-users|segments)", path)
-        if m:
-            # beyond-reference: the engagement analytics surface (R29-R33)
-            # served from the warm normalized frame; /api/v1/analytics/*
-            # stays a deprecated 404 per the reference's contract
-            from ..operators.relational import run_events_tail
-
-            name = {
-                "funnel": "funnel_conversion",
-                "retention": "retention_cohorts",
-                "transitions": "event_transition_matrix",
-                "active-users": "rolling_active_users",
-                "segments": "set_ops_user_segments",
-            }[m.group(1)]
-            df = run_events_tail(self._filtered_events(qs), name)
-            return self._send(200, _rows(df))
-
-        m = re.fullmatch(
-            r"/api/v1/corpus/(profile|quality|zipf|sources|domain-weights"
-            r"|fertility|boilerplate|encoding|survivorship|novelty"
-            r"|filter-agreement|surprisal|compression|dedup-sweep"
-            r"|curriculum|vocab-curve|fragmentation)",
-            path,
-        )
-        if m:
-            # beyond-reference: corpus analytics served from an optional
-            # warm documents frame (serve(..., documents=...)); 404s with
-            # a hint when the server was started events-only
-            docs = getattr(self.server, "documents", None)
-            if docs is None:
-                return self._send(
-                    404,
-                    {"error": "no documents frame attached to this server"},
-                )
-            from ..operators import corpus, llmprep, textprep
-            from ..operators.dedup import (
-                dedup_threshold_sweep as _corpus_dedup_sweep,
-            )
-
-            didx = getattr(self.server, "dedup_index_path", None)
-            if m.group(1) == "dedup-sweep" and didx is not None:
-                # served from the durable S13 index: the sweep reads
-                # persisted shingles (no re-tokenization per cold call);
-                # the live-op fallback below keeps the route available
-                # on index-less servers
-                from ..sources.dedup_index import (
-                    dedup_threshold_sweep_from_index,
-                )
-
-                # docs=None: the denominator comes from the index's own
-                # doc_ids membership, so the reported fractions are
-                # self-consistent with the indexed pairs even if the
-                # server's docs frame has drifted from the index (a
-                # legacy pre-doc_ids index falls back to the frame)
-                from ..sources.index_manifest import path_exists
-
-                df = dedup_threshold_sweep_from_index(
-                    docs.sparkSession,
-                    didx,
-                    None
-                    if path_exists(docs.sparkSession, f"{didx}/doc_ids")
-                    else docs,
-                )
-                return self._send(
-                    200, _rows(df.limit(self._limit(qs, 1000)))
-                )
-
-            fn = {
-                "profile": llmprep.profile_table,
-                "quality": textprep.gopher_rules,
-                "zipf": corpus.zipf_fit,
-                "sources": corpus.source_overlap,
-                "domain-weights": corpus.doremi_reweight,
-                "fertility": llmprep.bpe_fertility,
-                "boilerplate": textprep.line_boilerplate,
-                "encoding": textprep.encoding_artifacts,
-                "survivorship": corpus.dedup_survivorship,
-                "novelty": corpus.novelty_curve,
-                "filter-agreement": textprep.filter_agreement,
-                "surprisal": llmprep.bigram_logprob,
-                "compression": llmprep.bpe_compression,
-                "dedup-sweep": _corpus_dedup_sweep,
-                "curriculum": corpus.curriculum_stages,
-                "vocab-curve": llmprep.bpe_vocab_curve,
-                "fragmentation": llmprep.pack_fragmentation,
-            }[m.group(1)]
-            # concurrent-safe, no global lock (pinned by
-            # tests/test_api.py::test_corpus_routes_concurrent):
-            # zipf/sources/domain-weights/quality/boilerplate use
-            # per-call scoped views (functions/views.py) over the
-            # thread-safe materialized caches
-            # (operators/dedup.py:_materialized_df); profile is pure
-            # DataFrame API; fertility serializes only its training
-            # (module merge-cache lock) and serves cached merges after
-            rows = _rows(fn(docs).limit(self._limit(qs, 1000)))
-            return self._send(200, rows)
-
-        m = re.fullmatch(
-            r"/api/v1/ann/(nprobe-recall|truncated-recall|dim-stats|outliers"
-            r"|int8-audit|anisotropy|abtt|graph-expand|graph-depth|rerank)",
-            path,
-        )
-        if m:
-            # beyond-reference: embedding/ANN health routes served from
-            # an optional warm embeddings frame (serve(...,
-            # embeddings=...)) — the index-sizing dashboard (probe-width
-            # and truncation recall curves, dimension stats, outlier
-            # audit) next to the corpus one. Same concurrency contract
-            # as /corpus/*: every operator uses per-call scoped views.
-            emb = getattr(self.server, "embeddings", None)
-            if emb is None:
-                return self._send(
-                    404,
-                    {"error": "no embeddings frame attached to this server"},
-                )
-            from ..operators import llmprep, similarity
-
-            knng = getattr(self.server, "knn_graph_path", None)
-            if m.group(1) in ("graph-expand", "graph-depth") and knng is not None:
-                # served from the durable S16 adjacency (no inline graph
-                # rebuild — the pair loop ran once, at index time); the
-                # live-op fallback below keeps the routes available on
-                # index-less servers
-                from ..sources.knn_graph import (
-                    ann_graph_expand2_from_index,
-                    ann_graph_expand_from_index,
-                )
-
-                served = {
-                    "graph-expand": ann_graph_expand_from_index,
-                    "graph-depth": ann_graph_expand2_from_index,
-                }[m.group(1)]
-                try:
-                    df = served(emb.sparkSession, knng, emb)
-                    return self._send(
-                        200, _rows(df.limit(self._limit(qs, 1000)))
-                    )
-                except CorpusDriftError as ex:
-                    # drifted graph index — live operator below. ONLY
-                    # the typed refusal degrades; a genuine bug in the
-                    # twin (any other error) must surface, not be
-                    # silently converted into serving the live op
-                    _log_index_fallback("knn-graph", ex)
-
-            aidx = getattr(self.server, "ann_index_path", None)
-            if aidx is not None and m.group(1) == "nprobe-recall":
-                # served from the durable S14 index for EVERY
-                # configuration (label/raw, trained cells, residual
-                # codec — the sweep states the index's own system):
-                # centroids/codebook/codes read from parquet, no
-                # per-cold-call IVFADC rebuild. Only a legacy or
-                # corpus-drifted index (the serving twin's loud
-                # refusals) falls through to the live operator.
-                from ..sources.ann_index import (
-                    ann_nprobe_recall_from_index,
-                )
-
-                try:
-                    df = ann_nprobe_recall_from_index(
-                        emb.sparkSession, aidx, emb
-                    )
-                    return self._send(
-                        200, _rows(df.limit(self._limit(qs, 1000)))
-                    )
-                except CorpusDriftError as ex:
-                    _log_index_fallback("ann-nprobe", ex)  # live sweep
-            if aidx is not None and m.group(1) == "rerank":
-                # X14 served from the durable index: the shortlist
-                # reads persisted codes (raw or residual per meta),
-                # the refine scorer touches only the nq × k pairs;
-                # a drifted/legacy index falls back to the live op
-                from ..sources.ann_index import (
-                    ann_crossencoder_rerank_from_index,
-                )
-
-                try:
-                    df = ann_crossencoder_rerank_from_index(
-                        emb.sparkSession, aidx, emb
-                    )
-                    return self._send(
-                        200, _rows(df.limit(self._limit(qs, 1000)))
-                    )
-                except CorpusDriftError as ex:
-                    _log_index_fallback("ann-rerank", ex)  # live rerank
-            if aidx is not None and m.group(1) in (
-                "int8-audit", "anisotropy", "abtt"
-            ):
-                # persisted corpus-scan audits (write_ann_audits): the
-                # dashboard reads parquet instead of re-scanning the
-                # corpus per cold call; audit-less indexes fall through
-                # to the live operators
-                from ..sources.ann_index import (
-                    has_ann_audit,
-                    read_ann_audit,
-                )
-
-                name = m.group(1).replace("int8-audit", "int8_audit").replace(
-                    "-", "_"
-                )
-                if has_ann_audit(emb.sparkSession, aidx, name):
-                    df = read_ann_audit(emb.sparkSession, aidx, name)
-                    return self._send(
-                        200, _rows(df.limit(self._limit(qs, 1000)))
-                    )
-
-            fn = {
-                "nprobe-recall": similarity.ann_nprobe_recall,
-                "truncated-recall": similarity.ann_truncated_recall,
-                "dim-stats": llmprep.embedding_dim_stats,
-                "int8-audit": llmprep.embedding_int8_audit,
-                "outliers": llmprep.embedding_outliers,
-                "anisotropy": llmprep.embedding_anisotropy,
-                "abtt": llmprep.embedding_abtt_audit,
-                "graph-expand": similarity.ann_graph_expand,
-                "graph-depth": similarity.ann_graph_expand2,
-                "rerank": similarity.ann_crossencoder_rerank,
-            }[m.group(1)]
-            rows = _rows(fn(emb).limit(self._limit(qs, 1000)))
-            return self._send(200, rows)
-
-        if path in PLATFORM_ROUTES:
-            name, wire, _ = PLATFORM_ROUTES[path]
-            df = getattr(catalog, name)(
-                self._filtered_events(qs),
-                limit=self._limit(qs, MR.ROLLUP_TWINS[name].limit),
-            )
-            return self._send(200, [wire(r) for r in _rows(df)])
-
-        if path in ("/", "/optimize", "/dashboard"):
-            # dashboard render (reference dashboard.rs:47-51 routes "/"
-            # and "/optimize" to the same view): server-side HTML like
-            # the reference's Askama template — summary-card row, then
-            # the four analytics sections, every value HTML-escaped
-            # (Askama's auto-escape equivalent)
-            return self._send_html(
-                _render_optimize_html(self._dashboard_payload())
-            )
-        if path == "/resources":
-            # analytics view retired → meta-refresh redirect to /optimize
-            # (reference dashboard.rs:161-187)
-            return self._send_html(_RESOURCES_REDIRECT_HTML)
-        if path == "/teams":
-            # static placeholder (reference dashboard.rs:189-214)
-            return self._send_html(_TEAMS_HTML)
-
-        if path == "/api/v1/dashboard/summary":
-            return self._send(200, self._dashboard_payload())
-
+        for pattern, handler in ROUTES:
+            m = pattern.fullmatch(path)
+            if m:
+                return handler(self, qs, *m.groups())
         self._send(404, {"error": "not found"})
+
+    # ---- route handlers (rows of ROUTES) ------------------------------------
+    def _applications(self, qs: dict) -> None:
+        # full reference param surface (api.rs:62-99): status list,
+        # start-window (minDate/maxDate, P4), end-window
+        # (minEndDate/maxEndDate), limit. Unwindowed, the list is a
+        # filter over the per-app table; an event window recomputes the
+        # A1 columns over the windowed events and takes only the names
+        # and attempts from the table.
+        status = qs.get("status", [None])[0]
+        min_end = qs.get("minEndDate", [None])[0]
+        max_end = qs.get("maxEndDate", [None])[0]
+        apps = self.server.app_table  # type: ignore[attr-defined]
+        if any(qs.get(k) for k in _EVENT_WINDOW_PARAMS):
+            apps = catalog.application_rows(self._filtered_events(qs)).join(
+                apps.select("app_id", "app_name", "attempts"), "app_id", "left"
+            )
+        df = catalog.filter_applications(
+            apps,
+            statuses=status.split(",") if status else None,
+            min_end_ms=parse_date_param(min_end) if min_end else None,
+            max_end_ms=parse_date_param(max_end) if max_end else None,
+            limit=self._limit(qs, 100),
+        )
+        self._send(200, [_wire_app_row(r) for r in _rows(df)])
+
+    def _application(self, qs: dict, app_id: str) -> None:
+        table = self.server.app_table  # type: ignore[attr-defined]
+        rows = _rows(table.filter(F.col("app_id") == app_id).drop("completed"))
+        if not rows:
+            return self._send(404, {"error": "unknown application"})
+        self._send(200, _wire_app_row(rows[0]))
+
+    def _executors(self, qs: dict, app_id: str) -> None:
+        ev = self.server.events  # type: ignore[attr-defined]
+        rows = _rows(catalog.executor_summary(ev.filter(ev["app_id"] == app_id)))
+        detail: dict = {}
+        executors = self.server.executor_table  # type: ignore[attr-defined]
+        if executors is not None:
+            # real-log source: the executor_details fold supplies the
+            # metadata fields (log/attribute maps, remove reason, ...)
+            detail = {
+                r["executor_id"]: r
+                for r in _rows(executors.filter(F.col("app_id") == app_id))
+            }
+        self._send(
+            200,
+            [_wire_executor(r, detail.get(r.get("executor_id"))) for r in rows],
+        )
+
+    def _app_stub(self, qs: dict, app_id: str, kind: str) -> None:
+        # the reference stubs these with [] (api.rs:153-159); the
+        # extension ?detailed=true serves the real per-job rollup
+        if kind == "jobs" and qs.get("detailed", ["false"])[0].lower() == "true":
+            ev = self.server.events  # type: ignore[attr-defined]
+            return self._send(
+                200, _rows(catalog.job_metrics(ev.filter(ev["app_id"] == app_id)))
+            )
+        self._send(200, [])
+
+    def _metric(self, qs: dict, slug: str) -> None:
+        # beyond-reference: the rollup twins served from the durable S17
+        # metrics rollup when one is attached — the dashboard refresh
+        # reads the pre-aggregated day-partitioned relations instead of
+        # rescanning the fact table; the live-op fallback keeps the
+        # routes available on rollup-less servers. The attached rollup is
+        # authoritative: it is the continuously-maintained artifact, while
+        # the server's warm frame may itself be a window of the corpus.
+        name = METRIC_SLUGS[slug]
+        # task_duration_percentiles is the DECLARED divergence (the sketch
+        # contract, reference analytics_api.rs:308): a rollup-attached
+        # server answers from the DDSketch relation (≤1% relative error),
+        # the fallback runs the exact holistic op
+        twin = MR.ROLLUP_TWINS.get(name, MR.DURATION_SKETCH)
+        kw = {} if twin.limit is None else {"limit": self._limit(qs, twin.limit)}
+
+        # optional DAY-granular window (?startDate/?endDate, same parser as
+        # /applications): the bound prunes the rollup's day partitions on a
+        # cold read and row-prunes the warm relation; the live fallback
+        # applies the identical day predicate so both stay wire-identical
+        def _day(param):
+            raw = qs.get(param, [None])[0]
+            if not raw:
+                return None
+            return datetime.fromtimestamp(
+                parse_date_param(raw) / 1000.0, tz=timezone.utc
+            ).strftime("%Y-%m-%d")
+
+        start_day, end_day = _day("startDate"), _day("endDate")
+
+        def _window(df, day):
+            if start_day:
+                df = df.filter(day >= start_day)
+            if end_day:
+                df = df.filter(day <= end_day)
+            return df
+
+        ev = self.server.events  # type: ignore[attr-defined]
+        p17 = getattr(self.server, "metrics_rollup_path", None)
+        if p17 is not None:
+            df = twin.serve(lambda rel: _window(
+                MR.materialized_rollup_relation(ev.sparkSession, p17, rel),
+                F.col("event_date"),
+            ), **kw)
+        else:
+            df = getattr(catalog, name)(
+                _window(ev, date_str(F.col("event_date"))), **kw
+            )
+        self._send(200, _rows(df))
+
+    def _engagement(self, qs: dict, slug: str) -> None:
+        df = run_events_tail(self._filtered_events(qs), ENGAGEMENT_OPS[slug])
+        self._send(200, _rows(df))
+
+    def _frame_route(self, qs: dict, slug: str, attr: str, ops: dict) -> None:
+        """A /corpus or /ann route over the attached ``attr`` frame (404
+        with a hint when absent): its :data:`SERVED_FORMS` row when that
+        artifact is attached, else the live op."""
+        frame = getattr(self.server, attr)
+        if frame is None:
+            return self._send(
+                404, {"error": f"no {attr} frame attached to this server"}
+            )
+
+        def send(df):
+            self._send(200, _rows(df.limit(self._limit(qs, 1000))))
+
+        served = SERVED_FORMS.get(slug)
+        path = getattr(self.server, served.attr) if served else None
+        if path is not None:
+            try:
+                df = served.form(frame.sparkSession, path, frame)
+                if df is not None:
+                    return send(df)
+            except CorpusDriftError as ex:
+                # only the typed refusal degrades: a genuine bug in a
+                # served form surfaces as a 500
+                _log_index_fallback(slug, ex)
+        send(ops[slug](frame))
+
+    def _platform(self, qs: dict, route: str) -> None:
+        name, wire, _ = PLATFORM_ROUTES[route]
+        df = getattr(catalog, name)(
+            self._filtered_events(qs),
+            limit=self._limit(qs, MR.ROLLUP_TWINS[name].limit),
+        )
+        self._send(200, [wire(r) for r in _rows(df)])
+
+
+def _slugs(prefix: str, table: dict) -> str:
+    """A pattern matching ``prefix`` plus exactly one key of ``table``
+    (captured), so an unknown slug falls through to 404."""
+    return prefix + "(" + "|".join(map(re.escape, table)) + ")"
+
+
+#: path pattern (``re.fullmatch`` over the path without trailing ``/``) →
+#: handler(handler, query params, *captured groups); first match wins
+ROUTES = [
+    (re.compile(pattern), handler)
+    for pattern, handler in (
+        ("/health", lambda h, qs: h._send(200, {"status": "healthy"})),
+        ("/api/v1/version", lambda h, qs: h._send(200, VERSION)),
+        # deprecated endpoints must 404 (analytics_api_test.rs:199-206)
+        (
+            "/api/v1/analytics(?s:.*)",
+            lambda h, qs: h._send(404, {"error": "deprecated endpoint"}),
+        ),
+        (
+            "/api/v1/indexes/status",
+            lambda h, qs: h._send(200, h._indexes_status("validate" in qs)),
+        ),
+        ("/api/v1/applications", AnalyticsHandler._applications),
+        ("/api/v1/applications/([^/]+)", AnalyticsHandler._application),
+        ("/api/v1/applications/([^/]+)/executors", AnalyticsHandler._executors),
+        (
+            "/api/v1/applications/([^/]+)/(jobs|stages|storage/rdd|environment)",
+            AnalyticsHandler._app_stub,
+        ),
+        (_slugs("/api/v1/metrics/", METRIC_SLUGS), AnalyticsHandler._metric),
+        (_slugs("/api/v1/engagement/", ENGAGEMENT_OPS), AnalyticsHandler._engagement),
+        (
+            _slugs("/api/v1/corpus/", CORPUS_OPS),
+            lambda h, qs, slug: h._frame_route(qs, slug, "documents", CORPUS_OPS),
+        ),
+        (
+            _slugs("/api/v1/ann/", ANN_OPS),
+            lambda h, qs, slug: h._frame_route(qs, slug, "embeddings", ANN_OPS),
+        ),
+        (_slugs("", PLATFORM_ROUTES), AnalyticsHandler._platform),
+        # the server-rendered dashboard (reference dashboard.rs:47-51 routes
+        # "/" and "/optimize" to the same view), every value HTML-escaped
+        (
+            "/|/optimize|/dashboard",
+            lambda h, qs: h._send_html(_render_optimize_html(h._dashboard_payload())),
+        ),
+        # the analytics view retired → redirect to /optimize, and a static
+        # placeholder (reference dashboard.rs:161-214)
+        ("/resources", lambda h, qs: h._send_html(_RESOURCES_REDIRECT_HTML)),
+        ("/teams", lambda h, qs: h._send_html(_TEAMS_HTML)),
+        (
+            "/api/v1/dashboard/summary",
+            lambda h, qs: h._send(200, h._dashboard_payload()),
+        ),
+    )
+]
 
 
 def app_table(events: DataFrame) -> DataFrame:
@@ -1086,34 +966,19 @@ def serve(
     whole-stage codegen is compiled before the first user request).
 
     ``documents`` (optional) attaches a corpus frame and enables the
-    ``/api/v1/corpus/*`` analytics routes (profile, Gopher quality
-    report, Zipf fit, source-overlap matrix, DoReMi domain weights,
-    BPE tokenizer fertility, CCNet line-boilerplate report) — the
-    corpus-health dashboard next to the cluster one.
+    ``/api/v1/corpus/*`` analytics (:data:`CORPUS_OPS`) — the
+    corpus-health dashboard next to the cluster one; ``embeddings``
+    (optional) likewise enables the ``/api/v1/ann/*`` embedding-health
+    routes (:data:`ANN_OPS`) — the index-sizing dashboard.
 
-    ``embeddings`` (optional) likewise enables the ``/api/v1/ann/*``
-    embedding-health routes (nprobe recall sweep, truncated-dim recall,
-    per-dimension stats, centroid-distance outliers) — the index-sizing
-    dashboard.
-
-    ``knn_graph_path`` (optional, requires ``embeddings``) points the
-    ``/api/v1/ann/graph-expand`` route at a durable S16 kNN-graph index
-    (``sources.knn_graph.write_knn_graph``) so serving reads persisted
-    adjacency instead of rebuilding the graph per cold call.
-
-    ``dedup_index_path`` (optional, requires ``documents``) points the
-    ``/api/v1/corpus/dedup-sweep`` route at a durable S13 dedup index
-    (``sources.dedup_index.write_dedup_index``) so the τ-sweep reads
-    persisted shingles instead of re-tokenizing per cold call.
-
-    ``ann_index_path`` (optional, requires ``embeddings``) points the
-    ``/api/v1/ann/nprobe-recall`` route at a durable S14 index — every
-    configuration (label/raw identical to the live sweep; trained/
-    residual state the index's own system) — and the
-    ``/api/v1/ann/{int8-audit,anisotropy,abtt}`` routes at its
-    persisted ``audits/`` relations (``write_ann_audits``); routes fall
-    back to the live operators when the index doesn't carry the needed
-    artifact (or the sweep refuses a drifted/legacy index).
+    ``dedup_index_path`` (S13, ``write_dedup_index``; needs
+    ``documents``), ``knn_graph_path`` (S16, ``write_knn_graph``) and
+    ``ann_index_path`` (S14, ``write_ann_index`` + ``write_ann_audits``;
+    both need ``embeddings``) point the :data:`SERVED_FORMS` routes at
+    those durable artifacts, so they read persisted shingles, adjacency,
+    codes and audits instead of recomputing per cold call; a route falls
+    back to the live operator when its artifact is missing or the served
+    form refuses a drifted index.
 
     ``training_shards_path`` (optional) attaches an S15 shard export.
 
@@ -1149,12 +1014,9 @@ def serve(
     jobs = [t.count for t in (apps, executors) if t is not None]
     if warmup:
         jobs += [
-            catalog.top_resource_consumers(events, limit=1).collect,
-            catalog.efficiency_analysis(events, limit=1).collect,
-            catalog.capacity_trends(events, limit=1).collect,
-            catalog.cost_optimization(events, limit=1).collect,
-            catalog.executor_summary(events).collect,
-        ]
+            getattr(catalog, name)(events, limit=1).collect
+            for name, _, _ in PLATFORM_ROUTES.values()
+        ] + [catalog.executor_summary(events).collect]
     with ThreadPoolExecutor(4) as pool:
         list(pool.map(lambda job: job(), jobs))
     httpd = ThreadingHTTPServer((host, port), AnalyticsHandler)
@@ -1218,28 +1080,20 @@ def _html_card(label: str, value, cls: str = "") -> str:
     )
 
 
+#: the optimize view's summary-card row: (label, summary key, card class)
+_CARDS = (
+    ("Resource hogs", "total_resource_hogs", "danger"),
+    ("Over-provisioned apps", "over_provisioned_apps", "warning"),
+    ("Under-provisioned apps", "under_provisioned_apps", ""),
+    ("Potential monthly savings", "potential_monthly_savings", "success"),
+    ("Apps needing optimization", "apps_needing_optimization", ""),
+    ("High-confidence optimizations", "high_confidence_optimizations", ""),
+)
+
+
 def _render_optimize_html(d: dict) -> str:
-    s = d["summary"]
     cards = "".join(
-        (
-            _html_card("Resource hogs", s["total_resource_hogs"], "danger"),
-            _html_card(
-                "Over-provisioned apps", s["over_provisioned_apps"], "warning"
-            ),
-            _html_card("Under-provisioned apps", s["under_provisioned_apps"]),
-            _html_card(
-                "Potential monthly savings",
-                s["potential_monthly_savings"],
-                "success",
-            ),
-            _html_card(
-                "Apps needing optimization", s["apps_needing_optimization"]
-            ),
-            _html_card(
-                "High-confidence optimizations",
-                s["high_confidence_optimizations"],
-            ),
-        )
+        _html_card(label, d["summary"][key], cls) for label, key, cls in _CARDS
     )
     return f"""<!doctype html>
 <html><head><meta charset="utf-8"><title>Spark Platform — Optimization</title>

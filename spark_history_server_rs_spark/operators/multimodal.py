@@ -64,15 +64,6 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def _real_decode(payload: bytes) -> tuple[int, int]:
-    """Real image decode — requires an image codec, absent in this
-    container. Kept as the marked extension point."""
-    raise NotImplementedError(
-        "image codecs (PIL/opencv) are not available in this environment; "
-        "using the deterministic fake decode instead"
-    )
-
-
 def _binary_payload(docs: DataFrame) -> DataFrame:
     """The multimodal ingestion contract: an opaque binary column + typed
     metadata. Here the synthetic ``text`` bytes stand in for image data."""

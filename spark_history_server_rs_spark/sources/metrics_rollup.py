@@ -666,7 +666,10 @@ def executor_summary_from_partials(
             F.coalesce(F.col("t_sread"), z).alias("total_shuffle_read_mb"),
             F.coalesce(F.col("t_swrite"), z).alias("total_shuffle_write_mb"),
         )
-        .orderBy("executor_id")
+        # one row per executor: sorted in a single partition like the
+        # raw twin, with no range sort's sampling job and second shuffle
+        .coalesce(1)
+        .sortWithinPartitions("executor_id")
     )
 
 

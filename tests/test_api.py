@@ -696,17 +696,81 @@ def test_corpus_routes_concurrent(spark):
 
 
 def test_corpus_endpoints_events_only_404(spark):
+    """On an events-only server every /corpus and /ann slug of the route
+    tables 404s with a hint naming the missing frame, and an unknown
+    slug in any slug family 404s ``not found``. No operator runs."""
+    from spark_history_server_rs_spark.api.server import (
+        ANN_OPS,
+        CORPUS_OPS,
+        ENGAGEMENT_OPS,
+        METRIC_SLUGS,
+    )
+
     ev = load_events(spark, SF_SMALL)
-    # events-only server → informative 404
     httpd2 = serve(ev, warmup=False)
     t2 = threading.Thread(target=httpd2.serve_forever, daemon=True)
     t2.start()
     base2 = f"http://127.0.0.1:{httpd2.server_address[1]}"
     try:
-        code, body = _get(base2, "/api/v1/corpus/zipf")
-        assert code == 404 and "documents" in body["error"]
+        for family, ops, frame in (
+            ("corpus", CORPUS_OPS, "documents"),
+            ("ann", ANN_OPS, "embeddings"),
+        ):
+            for slug in ops:
+                code, body = _get(base2, f"/api/v1/{family}/{slug}")
+                assert code == 404 and frame in body["error"], slug
+        for family, table in (
+            ("corpus", CORPUS_OPS),
+            ("ann", ANN_OPS),
+            ("engagement", ENGAGEMENT_OPS),
+            ("metrics", METRIC_SLUGS),
+        ):
+            assert "no-such-slug" not in table
+            code, body = _get(base2, f"/api/v1/{family}/no-such-slug")
+            assert (code, body) == (404, {"error": "not found"}), family
     finally:
         httpd2.shutdown()
+
+
+def test_served_form_fallback_rule(spark, monkeypatch, caplog):
+    """The one fallback rule of the SERVED_FORMS rows: a served form's
+    drift refusal (CorpusDriftError) is logged once and the live op
+    answers; any other error from a served form surfaces as a 500."""
+    import logging
+
+    from spark_history_server_rs_spark.api import server as S
+    from spark_history_server_rs_spark.operators import llmprep
+    from spark_history_server_rs_spark.sources.generic import load_table
+    from spark_history_server_rs_spark.sources.index_manifest import (
+        CorpusDriftError,
+    )
+
+    errors = iter([CorpusDriftError("index drifted"), RuntimeError("twin bug")])
+
+    def fake_form(spark_, path, frame):
+        raise next(errors)
+
+    row = S.SERVED_FORMS["anisotropy"]
+    monkeypatch.setitem(S.SERVED_FORMS, "anisotropy", row._replace(form=fake_form))
+    ev = load_events(spark, SF_SMALL)
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    # the fake form never reads the path; it only has to be attached
+    httpd = serve(ev, warmup=False, embeddings=emb, ann_index_path="/no/index")
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    base = f"http://127.0.0.1:{httpd.server_address[1]}"
+    live = json.loads(
+        json.dumps([r.asDict() for r in llmprep.embedding_anisotropy(emb).collect()])
+    )
+    try:
+        with caplog.at_level(logging.WARNING, logger=S._fallback_log.name):
+            code, rows = _get(base, "/api/v1/ann/anisotropy")
+        assert code == 200 and rows == live
+        warned = [r for r in caplog.records if "index drifted" in r.getMessage()]
+        assert len(warned) == 1
+        code, body = _get(base, "/api/v1/ann/anisotropy")
+        assert (code, body) == (500, {"error": "twin bug"})
+    finally:
+        httpd.shutdown()
 
 
 def test_dedup_sweep_route_served_from_index(spark):
