@@ -244,36 +244,14 @@ def _relation_fingerprint(spark: SparkSession, target: str):
     compaction swaps), so plan-keyed caching would silently serve a
     stale index; the listing changes with every append/compact
     (recursive, so files landing inside partition subdirectories —
-    band_keys appends — change it too).
+    band_keys appends — change it too). The walk is
+    :func:`index_manifest.list_tree` (one ``listStatus`` per directory;
+    its docstring records the local and object-store costs)."""
+    from .index_manifest import list_tree, path_exists
 
-    Walks the tree with ``listStatus``, one call per directory, not
-    ``listFiles``: on the local filesystem ``listFiles`` builds a
-    ``LocatedFileStatus`` per file (block locations plus a permission
-    load that forks a process), which made this check cost more than
-    the warm query it guards. On an object store this is one LIST per
-    partition directory (``listFiles`` there is one paged LIST of the
-    whole prefix)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(target)
-    fs = p.getFileSystem(conf)
-    if not fs.exists(p):
+    if not path_exists(spark, target):
         return ()
-    out = []
-    dirs = [p]
-    while dirs:
-        for st in fs.listStatus(dirs.pop()):
-            if st.isDirectory():
-                dirs.append(st.getPath())
-            else:
-                out.append(
-                    (
-                        st.getPath().toString(),
-                        st.getLen(),
-                        st.getModificationTime(),
-                    )
-                )
-    return tuple(sorted(out))
+    return tuple(sorted(list_tree(spark, target)))
 
 
 #: driver-side cache for the S14/S16 drift-refusal counts:

@@ -37,8 +37,12 @@ from __future__ import annotations
 import fnmatch
 import posixpath
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .index_manifest import list_tree
 
 #: S2/S3 discovery globs (reference hdfs_reader.rs:131-134, :183-186).
 APP_DIR_GLOBS = ("application_*", "app-*", "eventlog_v2_*")
@@ -152,17 +156,21 @@ def _project_events(
     # (org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart).
     short = F.element_at(F.split(short, "\\."), -1)
 
-    is_task_end = F.col("event_type") == "TaskEnd"
-    ev = (
-        ok.withColumn("event_type", short)
-        .withColumn(
-            "app_id",
+    # Two projection stages instead of one ``withColumn`` per column:
+    # every ``withColumn`` re-analyses the whole growing plan over the
+    # wide ``from_json`` struct, so the ~28-call chain spent 0.16-0.18 s
+    # of every frame build in those calls against 0.05-0.10 s for the
+    # two stages (4 vCPU). The optimizer collapses both spellings to the
+    # same plan, so tests pin the call count instead.
+    ev = ok.withColumns(
+        {
+            "event_type": short,
             # S8 fallback order: app-prefixed path component first (rollover
             # dir or flat file), else the FINAL path component (reference
             # main.rs:396-401 uses the file name). A single alternation with
             # a [^/]+ catch-all is wrong: leftmost-match would bind the
             # parent dir for flat layouts, merging every app into one.
-            F.coalesce(
+            "app_id": F.coalesce(
                 j["App ID"],
                 # the writer's suffixes are not part of the id: a flat
                 # `local-<ms>.inprogress` (or `<app>.zstd`) log keys the
@@ -194,126 +202,68 @@ def _project_events(
                     "",
                 ),
             ),
-        )
-        .withColumn(
-            "event_ts",
-            F.coalesce(
+            "event_ts": F.coalesce(
                 F.timestamp_millis(j["Timestamp"]),
                 F.timestamp_millis(F.lit(now_ms)),
             ),
-        )
-        .withColumn("event_date", F.to_date("event_ts"))
-        .withColumn("is_task", is_task_end)
-        .withColumn("is_app_start", F.col("event_type") == "ApplicationStart")
-        .withColumn("is_app_end", F.col("event_type") == "ApplicationEnd")
-        .withColumn("is_exec_add", F.col("event_type") == "ExecutorAdded")
-        .withColumn("is_exec_remove", F.col("event_type") == "ExecutorRemoved")
-        .withColumn(
-            "is_success",
-            F.coalesce(
+        }
+    )
+
+    event_type = F.col("event_type")
+    is_task_end = event_type == "TaskEnd"
+    metrics = j["Task Metrics"]
+
+    def task_mb(c: F.Column) -> F.Column:
+        return F.when(is_task_end, _snap_mb(c / _MB))
+
+    ev = ev.withColumns(
+        {
+            "event_date": F.to_date("event_ts"),
+            "is_task": is_task_end,
+            "is_app_start": event_type == "ApplicationStart",
+            "is_app_end": event_type == "ApplicationEnd",
+            "is_exec_add": event_type == "ExecutorAdded",
+            "is_exec_remove": event_type == "ExecutorRemoved",
+            "is_success": F.coalesce(
                 j["Task End Reason"]["Reason"] == "Success",
                 F.lit(True),
             ),
-        )
-        .withColumn("job_id", j["Job ID"])
-        .withColumn(
-            "stage_id",
+            "job_id": j["Job ID"],
             # TaskEnd carries it top-level; Stage events nest it
             # (spark_events.rs:165-171 handles both — so do we)
-            F.coalesce(
-                j["Stage ID"],
-                j["Stage Info"]["Stage ID"],
+            "stage_id": F.coalesce(j["Stage ID"], j["Stage Info"]["Stage ID"]),
+            "task_id": j["Task Info"]["Task ID"],
+            "duration_ms": F.when(is_task_end, metrics["Executor Run Time"]),
+            "cpu_ms": F.when(
+                is_task_end, _snap_ms(metrics["Executor CPU Time"] / 1e6)
             ),
-        )
-        .withColumn("task_id", j["Task Info"]["Task ID"])
-        .withColumn(
-            "duration_ms",
-            F.when(is_task_end, j["Task Metrics"]["Executor Run Time"]),
-        )
-        .withColumn(
-            "cpu_ms",
-            F.when(
-                is_task_end,
-                _snap_ms(j["Task Metrics"]["Executor CPU Time"] / 1e6),
+            "gc_ms": F.when(is_task_end, metrics["JVM GC Time"]),
+            "peak_memory_mb": task_mb(metrics["Peak Execution Memory"]),
+            "jvm_heap_mb": task_mb(j["Task Executor Metrics"]["JVMHeapMemory"]),
+            "mem_spill_mb": task_mb(metrics["Memory Bytes Spilled"]),
+            "disk_spill_mb": task_mb(metrics["Disk Bytes Spilled"]),
+            "input_mb": task_mb(metrics["Input Metrics"]["Bytes Read"]),
+            "output_mb": task_mb(metrics["Output Metrics"]["Bytes Written"]),
+            "shuffle_read_mb": task_mb(
+                metrics["Shuffle Read Metrics"]["Remote Bytes Read"]
             ),
-        )
-        .withColumn(
-            "gc_ms", F.when(is_task_end, j["Task Metrics"]["JVM GC Time"])
-        )
-        .withColumn(
-            "peak_memory_mb",
-            F.when(
-                is_task_end, _snap_mb(j["Task Metrics"]["Peak Execution Memory"] / _MB)
+            "shuffle_write_mb": task_mb(
+                metrics["Shuffle Write Metrics"]["Shuffle Bytes Written"]
             ),
-        )
-        .withColumn(
-            "jvm_heap_mb",
-            F.when(
-                is_task_end,
-                _snap_mb(j["Task Executor Metrics"]["JVMHeapMemory"] / _MB),
-            ),
-        )
-        .withColumn(
-            "mem_spill_mb",
-            F.when(is_task_end, _snap_mb(j["Task Metrics"]["Memory Bytes Spilled"] / _MB)),
-        )
-        .withColumn(
-            "disk_spill_mb",
-            F.when(is_task_end, _snap_mb(j["Task Metrics"]["Disk Bytes Spilled"] / _MB)),
-        )
-        .withColumn(
-            "input_mb",
-            F.when(
-                is_task_end,
-                _snap_mb(j["Task Metrics"]["Input Metrics"]["Bytes Read"] / _MB),
-            ),
-        )
-        .withColumn(
-            "output_mb",
-            F.when(
-                is_task_end,
-                _snap_mb(j["Task Metrics"]["Output Metrics"]["Bytes Written"] / _MB),
-            ),
-        )
-        .withColumn(
-            "shuffle_read_mb",
-            F.when(
-                is_task_end,
-                _snap_mb(
-                    j["Task Metrics"]["Shuffle Read Metrics"]["Remote Bytes Read"]
-                    / _MB
-                ),
-            ),
-        )
-        .withColumn(
-            "shuffle_write_mb",
-            F.when(
-                is_task_end,
-                _snap_mb(
-                    j["Task Metrics"]["Shuffle Write Metrics"]["Shuffle Bytes Written"]
-                    / _MB
-                ),
-            ),
-        )
-        .withColumn("total_cores", j["Executor Info"]["Total Cores"])
-        .withColumn(
-            "executor_id",
-            F.coalesce(
+            "total_cores": j["Executor Info"]["Total Cores"],
+            "executor_id": F.coalesce(
                 j["Task Info"]["Executor ID"], j["Executor ID"]
             ),
-        )
-        .withColumn("host", j["Task Info"]["Host"])
-        .withColumn("locality", j["Task Info"]["Locality"])
-        .withColumn(
-            "id",
+            "host": j["Task Info"]["Host"],
+            "locality": j["Task Info"]["Locality"],
             # S11: batch gets the monotonic writer counter (reference
             # semantics); streaming plans can't use it — there a stable
             # content hash is the right id anyway (idempotent across
             # micro-batch retries).
-            F.monotonically_increasing_id()
+            "id": F.monotonically_increasing_id()
             if not streaming
             else F.xxhash64("src_file", "raw_data", "event_ts"),
-        )
+        }
     )
     cols = [
         "id",
@@ -409,9 +359,10 @@ def is_event_log_path(base: str, path: str) -> bool:
 
 
 def _list_files(spark: SparkSession, base: str) -> list[tuple[str, int]]:
-    """Recursive (path, size) listing through the Hadoop FileSystem API —
-    works for file://, hdfs:// and s3a:// alike (S1/S4/S5), filtered by
-    the S2/S3 discovery globs so non-log files never reach the parser."""
+    """Recursive (path, size) listing through the Hadoop FileSystem API
+    (:func:`list_tree`) — works for file://, hdfs:// and s3a:// alike
+    (S1/S4/S5), filtered by the S2/S3 discovery globs so non-log files
+    never reach the parser."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     fs_path = jvm.org.apache.hadoop.fs.Path(base)
@@ -419,18 +370,12 @@ def _list_files(spark: SparkSession, base: str) -> list[tuple[str, int]]:
     # resolve the fully-qualified base (scheme + authority) so relative
     # inputs still prefix-match the listed absolute paths
     qualified = fs.makeQualified(fs_path).toString()
-    out: list[tuple[str, int]] = []
-    it = fs.listFiles(fs_path, True)
-    while it.hasNext():
-        status = it.next()
-        p = status.getPath().toString()
-        name = posixpath.basename(p)
-        if name.startswith(".") or name.startswith("_"):
-            continue
-        if not is_event_log_path(qualified, p):
-            continue
-        out.append((p, status.getLen()))
-    return out
+    return [
+        (p, size)
+        for p, size, _ in list_tree(spark, base)
+        if not posixpath.basename(p).startswith((".", "_"))
+        and is_event_log_path(qualified, p)
+    ]
 
 
 # --------------------------------------------------------------------------
@@ -519,7 +464,8 @@ def read_event_logs_auto(
         for p in paths
         if p.lower().endswith(COMPRESSED_LOG_EXTENSIONS)
     ]
-    plain = [p for p in paths if p not in set(zips) | set(comp)]
+    routed = set(zips) | set(comp)
+    plain = [p for p in paths if p not in routed]
     parts: list[DataFrame] = []
     if plain:
         parts.append(read_event_logs(spark, plain, now_ms=now_ms))
@@ -535,37 +481,45 @@ def read_event_logs_auto(
     return out
 
 
+#: the manifest table: one row per listed log (S10)
+_MANIFEST_DDL = "path string, size long, complete boolean"
+
+
 def plan_incremental(
     spark: SparkSession, base: str, manifest_dir: str
 ) -> tuple[list[str], DataFrame]:
     """Decide which files need (re-)ingest: new files always; known files
-    iff ``current_size > stored_size`` and not yet complete (reference
-    ``metadata_store.rs:91-102``). Returns (paths_to_ingest, new_manifest).
-    """
-    listed = spark.createDataFrame(
-        _list_files(spark, base), "path string, size long"
-    )
+    iff ``current_size > stored_size`` and not yet complete (a null
+    ``complete`` counts as not complete; reference
+    ``metadata_store.rs:91-102``). Returns (paths_to_ingest, new_manifest),
+    the paths in listing order.
+
+    The diff runs on the driver: the manifest has one row per log, so
+    one small collect and a dict lookup per listed file replace shipping
+    the listing to the JVM for a join. A missing or unreadable manifest
+    means every listed file is new."""
+    listed = _list_files(spark, base)
     try:
-        manifest = spark.read.parquet(manifest_dir).select(
-            F.col("path").alias("m_path"),
-            F.col("size").alias("m_size"),
-            F.col("complete").alias("m_complete"),
-        )
-    except Exception:
-        manifest = spark.createDataFrame(
-            [], "m_path string, m_size long, m_complete boolean"
-        )
-    joined = listed.join(manifest, listed["path"] == manifest["m_path"], "left")
-    todo = joined.filter(
-        F.col("m_path").isNull()
-        | ((F.col("size") > F.col("m_size")) & ~F.coalesce("m_complete", F.lit(False)))
-    ).select("path", "size")
-    new_manifest = listed.withColumn(
+        known = {
+            r.path: (r.size, r.complete)
+            for r in spark.read.schema(_MANIFEST_DDL).parquet(manifest_dir).collect()
+        }
+    except (PySparkException, Py4JJavaError):
+        known = {}
+    todo = []
+    for path, size in listed:
+        if path not in known:
+            todo.append(path)
+            continue
+        m_size, m_complete = known[path]
+        if m_size is not None and size > m_size and not m_complete:
+            todo.append(path)
+    new_manifest = spark.createDataFrame(
         # completion marker: not *.inprogress ⇒ complete (event_processor.rs:257)
-        "complete",
-        ~F.col("path").endswith(".inprogress"),
+        [(p, size, not p.endswith(".inprogress")) for p, size in listed],
+        _MANIFEST_DDL,
     )
-    return [r.path for r in todo.collect()], new_manifest
+    return todo, new_manifest
 
 
 def incremental_ingest(
@@ -579,11 +533,20 @@ def incremental_ingest(
     new/grown files, atomically replace their sink partitions, update the
     manifest. Returns number of files ingested.
 
+    What a pass costs: one listing walk (:func:`list_tree`), one
+    manifest read (one small Spark job), one write job for the files to
+    read (none when nothing changed) and one manifest rewrite. The
+    planning around them is driver-side Python, so a pass that adds one
+    small app pays for its events, not for planning.
+
     Exactly-once end state: the sink is partitioned by
     ``(event_date, ingest_src=md5(file))``; with dynamic partition
     overwrite, re-ingesting a grown file replaces exactly that file's
     previous rows. (Reference semantics are at-least-once with duplicates —
-    documented improvement.)
+    documented improvement.) The overwrite mode is a per-write option,
+    so the session's ``spark.sql.sources.partitionOverwriteMode`` is
+    never touched and a concurrent ``mode("overwrite")`` elsewhere in
+    the session keeps its own mode.
 
     Scale note: one pass reads only changed bytes' files and rewrites only
     their partitions. For 100 TB history the per-file partitioning creates
@@ -593,20 +556,24 @@ def incremental_ingest(
     todo, new_manifest = plan_incremental(spark, base, manifest_dir)
     if todo:
         events = read_event_logs_auto(spark, todo, now_ms=now_ms)
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                events.withColumn("ingest_src", F.md5("src_file"))
-                .write.partitionBy("event_date", "ingest_src")
-                .mode("overwrite")
-                .parquet(sink_dir)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        _overwrite_partitions(
+            events.withColumn("ingest_src", F.md5("src_file")), sink_dir
+        )
     # manifest swap (tiny table — rewrite wholesale)
     new_manifest.write.mode("overwrite").parquet(manifest_dir)
     return len(todo)
+
+
+def _overwrite_partitions(out: DataFrame, sink_dir: str) -> None:
+    """Replace exactly the ``(event_date, ingest_src)`` partitions present
+    in ``out`` (dynamic partition overwrite as a per-write option: the
+    session conf stays as it is)."""
+    (
+        out.write.partitionBy("event_date", "ingest_src")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(sink_dir)
+    )
 
 
 def write_bucketed_sink(
@@ -645,12 +612,11 @@ def compact_sink(spark: SparkSession, sink_dir: str, out_dir: str) -> None:
     )
 
 
-def _sink_partition_stats(
-    spark: SparkSession, sink_dir: str
-) -> dict[tuple[str, str], tuple[int, int]]:
-    """(event_date, ingest_src) → (file_count, total_bytes) for the
-    incremental sink layout, via one recursive Hadoop-FS listing (works
-    for file://, hdfs://, s3a:// alike — same path as :func:`_list_files`).
+def _sink_partition_files(spark: SparkSession, sink_dir: str):
+    """Yield ``((event_date, ingest_src), partition dir, bytes)`` per data
+    file of the incremental sink layout, from one :func:`list_tree` walk
+    (works for file://, hdfs://, s3a:// alike — same walk as
+    :func:`_list_files`).
 
     Partition values are Hive-UNESCAPED (``%3A`` → ``:`` etc.): Spark
     percent-escapes special characters (space, ':', '%', ...) when it
@@ -658,31 +624,37 @@ def _sink_partition_stats(
     partition columns carry the raw values. Comparing raw directory
     names against column values would make any ingest_src containing an
     escaped character match zero rows — the partition would be
-    re-selected by every compaction run yet never rewritten."""
+    re-selected by every compaction run yet never rewritten. The
+    directory path is kept raw (escaped form), so callers can delete it
+    without re-deriving Spark's escaping rules."""
     from urllib.parse import unquote
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs_path = jvm.org.apache.hadoop.fs.Path(sink_dir)
-    fs = fs_path.getFileSystem(conf)
-    stats: dict[tuple[str, str], tuple[int, int]] = {}
-    it = fs.listFiles(fs_path, True)
-    while it.hasNext():
-        status = it.next()
-        p = status.getPath().toString()
-        name = posixpath.basename(p)
-        if name.startswith("_") or name.startswith("."):
+
+    for p, size, _ in list_tree(spark, sink_dir):
+        if posixpath.basename(p).startswith(("_", ".")):
             continue
-        parts = p.split("/")
         date = src = None
-        for seg in parts:
+        keep = []
+        for seg in p.split("/"):
+            keep.append(seg)
             if seg.startswith("event_date="):
                 date = unquote(seg.split("=", 1)[1])
             elif seg.startswith("ingest_src="):
                 src = unquote(seg.split("=", 1)[1])
-        if date is None or src is None:
-            continue
-        n, b = stats.get((date, src), (0, 0))
-        stats[(date, src)] = (n + 1, b + status.getLen())
+                break  # the partition dir ends here
+        if date is not None and src is not None:
+            yield (date, src), "/".join(keep), size
+
+
+def _sink_partition_stats(
+    spark: SparkSession, sink_dir: str
+) -> dict[tuple[str, str], tuple[int, int]]:
+    """(event_date, ingest_src) → (file_count, total_bytes) for the
+    incremental sink layout (values unescaped, see
+    :func:`_sink_partition_files`)."""
+    stats: dict[tuple[str, str], tuple[int, int]] = {}
+    for key, _, size in _sink_partition_files(spark, sink_dir):
+        n, b = stats.get(key, (0, 0))
+        stats[key] = (n + 1, b + size)
     return stats
 
 
@@ -762,52 +734,16 @@ def compact_sink_inplace(
         .drop("__slice")
         .withColumn("event_date", F.col("event_date").cast("date"))
     )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.partitionBy("event_date", "ingest_src").mode("overwrite").parquet(
-            sink_dir
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    _overwrite_partitions(out, sink_dir)
     return plan
 
 
 def _sink_partition_dirs(
     spark: SparkSession, sink_dir: str
 ) -> dict[tuple[str, str], str]:
-    """(event_date, ingest_src) → partition DIRECTORY path, from one
-    recursive listing. Values are Hive-unescaped like
-    :func:`_sink_partition_stats`; the path kept is the raw on-disk
-    directory (escaped form), so callers can delete it without
-    re-deriving Spark's escaping rules."""
-    from urllib.parse import unquote
-
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs_path = jvm.org.apache.hadoop.fs.Path(sink_dir)
-    fs = fs_path.getFileSystem(conf)
-    dirs: dict[tuple[str, str], str] = {}
-    it = fs.listFiles(fs_path, True)
-    while it.hasNext():
-        p = it.next().getPath().toString()
-        name = posixpath.basename(p)
-        if name.startswith("_") or name.startswith("."):
-            continue
-        parts = p.split("/")
-        date = src = None
-        keep = []
-        for seg in parts:
-            keep.append(seg)
-            if seg.startswith("event_date="):
-                date = unquote(seg.split("=", 1)[1])
-            elif seg.startswith("ingest_src="):
-                src = unquote(seg.split("=", 1)[1])
-                break  # the partition dir ends here
-        if date is None or src is None:
-            continue
-        dirs[(date, src)] = "/".join(keep)
-    return dirs
+    """(event_date, ingest_src) → partition DIRECTORY path (raw on-disk
+    form, values unescaped in the key, see :func:`_sink_partition_files`)."""
+    return {key: d for key, d, _ in _sink_partition_files(spark, sink_dir)}
 
 
 #: widest OR-disjunction the erasure rewrite hands Catalyst in one plan —
@@ -911,40 +847,33 @@ def erase_apps_from_sink(
         # between chunks leaves untouched-or-fully-rewritten partitions
         # — the same non-atomic commit window the docstring documents,
         # and the verify probe still closes the loop).
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            ordered = sorted(survivor_keys)
-            for i in range(0, len(ordered), _ERASE_CLAUSE_CAP):
-                pred = None
-                for d, s in ordered[i:i + _ERASE_CLAUSE_CAP]:
-                    clause = (
-                        F.col("event_date") == F.to_date(F.lit(d))
-                    ) & (F.col("ingest_src") == s)
-                    pred = clause if pred is None else (pred | clause)
-                picked = df.filter(pred).withColumn(
-                    "event_date", F.col("event_date").cast("string")
-                )
-                survivors = picked.join(
-                    F.broadcast(victims), "app_id", "left_anti"
-                )
-                # repartition barrier, same reasoning as
-                # compact_sink_inplace: both joins above are broadcast
-                # (narrow, pipelined), so without a shuffle the in-place
-                # rewrite's read safety would rest on commit staging
-                # alone; the barrier materializes the scan before any
-                # output commit can touch a source file — and leaves one
-                # file per rewritten partition as a side effect
-                out = survivors.repartition(
+        ordered = sorted(survivor_keys)
+        for i in range(0, len(ordered), _ERASE_CLAUSE_CAP):
+            pred = None
+            for d, s in ordered[i:i + _ERASE_CLAUSE_CAP]:
+                clause = (
+                    F.col("event_date") == F.to_date(F.lit(d))
+                ) & (F.col("ingest_src") == s)
+                pred = clause if pred is None else (pred | clause)
+            picked = df.filter(pred).withColumn(
+                "event_date", F.col("event_date").cast("string")
+            )
+            survivors = picked.join(
+                F.broadcast(victims), "app_id", "left_anti"
+            )
+            # repartition barrier, same reasoning as
+            # compact_sink_inplace: both joins above are broadcast
+            # (narrow, pipelined), so without a shuffle the in-place
+            # rewrite's read safety would rest on commit staging
+            # alone; the barrier materializes the scan before any
+            # output commit can touch a source file — and leaves one
+            # file per rewritten partition as a side effect
+            _overwrite_partitions(
+                survivors.repartition(
                     F.col("event_date"), F.col("ingest_src")
-                ).withColumn("event_date", F.col("event_date").cast("date"))
-                out.write.partitionBy("event_date", "ingest_src").mode(
-                    "overwrite"
-                ).parquet(sink_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+                ).withColumn("event_date", F.col("event_date").cast("date")),
+                sink_dir,
+            )
     # all-victim partitions: no survivor output replaced them — delete
     # their directories outright or the erased app keeps serving
     empty_keys = affected_keys - survivor_keys

@@ -57,6 +57,41 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(conf).exists(p)
 
 
+def list_tree(spark: SparkSession, path: str) -> list[tuple[str, int, int]]:
+    """Every file under ``path`` (a file lists itself) as ``(path, size,
+    mtime)``, in ``FileSystem.listFiles(path, True)`` order: depth
+    first, each directory's entries in the order the filesystem lists
+    them, a subdirectory walked where it is met. Raises when ``path``
+    does not exist, like ``listFiles``. Works for file://, hdfs:// and
+    s3a:// alike.
+
+    One ``listStatus`` per directory instead of ``listFiles``: on the
+    local filesystem ``listFiles`` builds a ``LocatedFileStatus`` per
+    file (block locations plus a permission load that forks a process),
+    which made a 57-log history cost 0.31 s to list against 0.03-0.05 s
+    here. On an object store the trade goes the other way: this walk
+    sends one LIST request per directory, where ``listFiles`` pages one
+    LIST over the whole prefix, so a deep partition tree on S3 pays a
+    request per partition directory."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(conf)
+    out = []
+    walk = [iter(fs.listStatus(p))]
+    while walk:
+        st = next(walk[-1], None)
+        if st is None:
+            walk.pop()
+        elif st.isDirectory():
+            walk.append(iter(fs.listStatus(st.getPath())))
+        else:
+            out.append(
+                (st.getPath().toString(), st.getLen(), st.getModificationTime())
+            )
+    return out
+
+
 def _relation_stats(spark: SparkSession, path: str, rel: str) -> DataFrame:
     df = spark.read.parquet(f"{path}/{rel}")
     # sort column names: partition columns (band_idx, label) come back

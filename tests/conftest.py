@@ -13,7 +13,8 @@ SF_ORACLE = "/root/testdata/sf0.01"
 #: Long-running scenario/property sweeps (≥ ~15 s each on a quiet
 #: 32-core floor; measured r15, call-time profile in
 #: OPTIMIZATION_r15.md). The DEFAULT run excludes them (pytest.ini
-#: ``addopts = -m "not slow"``) so `python -m pytest tests/ -x -q`
+#: ``addopts = -m "not slow"``), all but one rotating slice (see
+#: :data:`SLOW_ROTATION`), so `python -m pytest tests/ -x -q`
 #: finishes inside the correctness driver's verify window (~16 min vs
 #: the 44-62 min full suite — VERDICT r14 "What's wrong #1"). The full
 #: suite still runs every round and before every release:
@@ -22,17 +23,22 @@ SF_ORACLE = "/root/testdata/sf0.01"
 #: the per-query oracle-parity rows (220 tests) remain IN the default
 #: run — what moves out is the heavyweight lifecycle/stream/crash
 #: scenarios and registry-wide property sweeps.
-SLOW_TESTS = {
+#:
+#: The order is the rotation order (see :data:`SLOW_ROTATION`): the
+#: sink-rewriting pins lead because the slice they form is the first
+#: one the default run admitted.
+SLOW_TESTS = (
+    "test_erase_apps_chunked_beyond_clause_cap",
+    "test_compaction_folds_and_erases",
+    "test_run_app_retention_fans_sink_and_rollup",
     "test_entire_registry_survives_null_bearing_corpus",
     "test_knn_graph_index_serves_batch_and_stream",
     "test_no_unbounded_single_partition_windows",
-    "test_compaction_folds_and_erases",
     "test_random_events_match_oracle",
     "test_random_embeddings_match_oracle",
     "test_all_analyze_at_small_sf",
     "test_no_float_canonicalization_of_integral_columns",
     "test_random_documents_match_oracle",
-    "test_run_app_retention_fans_sink_and_rollup",
     "test_dedup_index_delete_tombstone_lifecycle",
     "test_registered_queries_emit_scalar_columns_only",
     "test_random_documents_rank_vocab_manifest_match_oracle",
@@ -67,13 +73,31 @@ SLOW_TESTS = {
     "test_bpe_train_bounded_lineage_at_k64",
     "test_real_log_rollup_serve_equals_scan",
     "test_delete_erase_is_revive_proof",
-    "test_erase_apps_chunked_beyond_clause_cap",
-}
+)
+
+#: The slow-suite rotation. The default run admits the slice numbered
+#: SLOW_ROTATION of SLOW_ROTATION_SLICE consecutive names of
+#: :data:`SLOW_TESTS` (wrapping at its end), so every slow test
+#: re-enters the gate in turn: bump SLOW_ROTATION with each change. An
+#: admitted test is left unmarked, so it runs under the default
+#: ``-m "not slow"``; the rest stay deselected.
+SLOW_ROTATION = 0
+SLOW_ROTATION_SLICE = 3
+
+
+def admitted_slow_tests() -> set[str]:
+    start = SLOW_ROTATION * SLOW_ROTATION_SLICE
+    return {
+        SLOW_TESTS[(start + i) % len(SLOW_TESTS)]
+        for i in range(SLOW_ROTATION_SLICE)
+    }
 
 
 def pytest_collection_modifyitems(config, items):
+    admitted = admitted_slow_tests()
     for item in items:
-        if item.name.split("[")[0] in SLOW_TESTS:
+        name = item.name.split("[")[0]
+        if name in SLOW_TESTS and name not in admitted:
             item.add_marker(pytest.mark.slow)
 
 

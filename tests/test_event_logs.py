@@ -4511,3 +4511,286 @@ def test_relation_fingerprint_walks_partition_dirs(spark, tmp_path):
     os.utime(victim, ns=(st.st_atime_ns, st.st_mtime_ns + 5_000_000_000))
     fp4 = _relation_fingerprint(spark, rel)
     assert fp4 != fp3 and [s for _, s, _ in fp4] == [s for _, s, _ in fp3]
+
+
+# --------------------------------------------------------------------------
+# S10 planner: the rule as a table, and what one plan costs
+# --------------------------------------------------------------------------
+#: (case, file name, manifest row as (size delta, complete) or None for
+#: "not in the manifest", or "missing" / "unreadable" for the whole
+#: manifest, re-read?)
+PLANNER_RULE = [
+    ("new_file", "events_1", None, True),
+    ("grown_inprogress", "events_1.inprogress", (-10, False), True),
+    ("grown_complete", "events_1", (-10, True), False),
+    ("shrunk", "events_1.inprogress", (10, False), False),
+    ("unchanged", "events_1.inprogress", (0, False), False),
+    ("missing_manifest", "events_1", "missing", True),
+    ("unreadable_manifest", "events_1", "unreadable", True),
+    ("null_complete", "events_1", (-10, None), True),
+]
+
+
+@pytest.mark.parametrize(
+    "case,name,row,reread", PLANNER_RULE, ids=[c[0] for c in PLANNER_RULE]
+)
+def test_plan_incremental_rule(spark, tmp_path, case, name, row, reread):
+    """One row per case of the S10 rule: a file is (re-)read iff it is
+    new, or it grew and its ``complete`` flag is not true (null counts
+    as false). The new manifest lists every file with the unchanged
+    schema and completion rule."""
+    from spark_history_server_rs_spark.sources.event_logs import (
+        _list_files,
+        plan_incremental,
+    )
+
+    base = tmp_path / "logs"
+    (base / "application_rule").mkdir(parents=True)
+    _write_log(
+        str(base / "application_rule" / name),
+        _app_events("application_rule", 2, 0.5, 1 << 28),
+        extra_garbage=False,
+    )
+    # a second, unchanged and complete log keeps the manifest non-empty
+    _write_log(
+        str(base / "application_other.json"),
+        _app_events("application_other", 1, 0.5, 1 << 28),
+        extra_garbage=False,
+    )
+    (path, size), (other, other_size) = sorted(
+        _list_files(spark, str(base)), key=lambda r: "other" in r[0]
+    )
+    manifest = str(tmp_path / "manifest")
+    if row == "unreadable":
+        os.makedirs(manifest)
+        with open(os.path.join(manifest, "part-00000.parquet"), "wb") as f:
+            f.write(b"PAR1 not a parquet file")
+    elif row != "missing":
+        rows = [(other, other_size, True)]
+        if row is not None:
+            rows.append((path, size + row[0], row[1]))
+        spark.createDataFrame(
+            rows, "path string, size long, complete boolean"
+        ).write.parquet(manifest)
+
+    todo, new_manifest = plan_incremental(spark, str(base), manifest)
+    expected = [path] if reread else []
+    if row in ("missing", "unreadable"):
+        expected = [p for p, _ in _list_files(spark, str(base))]
+    assert todo == expected
+    assert new_manifest.schema.simpleString() == (
+        "struct<path:string,size:bigint,complete:boolean>"
+    )
+    assert sorted(new_manifest.collect()) == sorted(
+        [(path, size, not name.endswith(".inprogress")), (other, other_size, True)]
+    )
+
+
+def _jobs_in(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, Spark jobs)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_plan_incremental_unchanged_dir_one_job(spark, tmp_path):
+    """Planning an unchanged history dir costs at most one Spark job
+    (the manifest collect): the listing and the diff are driver-side."""
+    from spark_history_server_rs_spark.sources.event_logs import plan_incremental
+
+    base = tmp_path / "logs"
+    for app in ("application_a", "application_b"):
+        (base / app).mkdir(parents=True)
+        _write_log(
+            str(base / app / "events_1"),
+            _app_events(app, 2, 0.5, 1 << 28),
+            extra_garbage=False,
+        )
+    sink, manifest = str(tmp_path / "sink"), str(tmp_path / "manifest")
+    assert incremental_ingest(spark, str(base), sink, manifest) == 2
+    (todo, _), jobs = _jobs_in(
+        spark, lambda: plan_incremental(spark, str(base), manifest)
+    )
+    assert todo == []
+    assert jobs <= 1
+
+
+def test_list_tree_matches_os_walk(spark, tmp_path):
+    """The shared listing walk returns what ``os.walk`` sees (checksum
+    files aside, which the local Hadoop filesystem hides), in
+    ``listFiles`` order; the discovery filter on top of it drops every
+    decoy."""
+    from spark_history_server_rs_spark.sources.event_logs import (
+        _list_files,
+        is_event_log_path,
+    )
+    from spark_history_server_rs_spark.sources.index_manifest import list_tree
+
+    base = tmp_path / "logs"
+    for app in ("application_1", "app-2", "eventlog_v2_app-3"):
+        (base / app).mkdir(parents=True)
+        _write_log(
+            str(base / app / "events_1"),
+            _app_events(app, 1, 0.5, 1 << 28),
+            extra_garbage=False,
+        )
+    _write_log(
+        str(base / "app-flat.inprogress"),
+        _app_events("app-flat", 1, 0.5, 1 << 28),
+        extra_garbage=False,
+    )
+    (base / "README.md").write_text("# not an event log\n")
+    (base / "_SUCCESS").write_text("")
+    (base / "stray.parquet").write_bytes(b"PAR1 garbage")
+    (base / "application_1" / ".events_1.crc").write_bytes(b"crc")
+    (base / "application_1" / "_SUCCESS").write_text("")
+    (base / "tool-output" / "deep").mkdir(parents=True)
+    (base / "tool-output" / "deep" / "events_x").write_text("{}\n")
+
+    walked = sorted(
+        ("file:" + os.path.join(d, f), os.path.getsize(os.path.join(d, f)))
+        for d, _, fs in os.walk(base)
+        for f in fs
+    )
+    tree = list_tree(spark, str(base))
+    assert sorted((p, s) for p, s, _ in tree) == [
+        (p, s) for p, s in walked if not p.endswith("/.events_1.crc")
+    ]
+
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(str(base))
+    it = root.getFileSystem(
+        spark.sparkContext._jsc.hadoopConfiguration()
+    ).listFiles(root, True)
+    listed = []
+    while it.hasNext():
+        listed.append(it.next().getPath().toString())
+    assert [p for p, _, _ in tree] == listed
+
+    qualified = "file:" + str(base)
+    assert sorted(_list_files(spark, str(base))) == [
+        (p, s)
+        for p, s in walked
+        if not os.path.basename(p).startswith((".", "_"))
+        and is_event_log_path(qualified, p)
+    ]
+    assert len(_list_files(spark, str(base))) == 4
+    with pytest.raises(Exception):
+        list_tree(spark, str(tmp_path / "absent"))
+
+
+def test_grown_inprogress_overwrite_leaves_session_conf(spark, tmp_path):
+    """Dynamic partition overwrite is a per-write option: with the
+    session conf at ``static``, a grown ``.inprogress`` re-ingest still
+    replaces only its own partition (the other app's rows survive, no
+    duplicates), an erasure rewrites only its partitions, and the
+    session conf reads ``static`` afterwards."""
+    from spark_history_server_rs_spark.sources.event_logs import (
+        erase_apps_from_sink,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    try:
+        base = tmp_path / "logs"
+        (base / "application_grow").mkdir(parents=True)
+        (base / "application_keep").mkdir(parents=True)
+        grow = list(_app_events("application_grow", 4, 0.5, 1 << 28))
+        keep = list(_app_events("application_keep", 2, 0.5, 1 << 28))
+        log = str(base / "application_grow" / "events_1.inprogress")
+        _write_log(log, grow[:3], extra_garbage=False)
+        _write_log(
+            str(base / "application_keep" / "events_1"), keep, extra_garbage=False
+        )
+        sink, manifest = str(tmp_path / "sink"), str(tmp_path / "manifest")
+        assert incremental_ingest(spark, str(base), sink, manifest) == 2
+        _write_log(log, grow, extra_garbage=False)
+        assert incremental_ingest(spark, str(base), sink, manifest) == 1
+        assert spark.conf.get(key) == "static"
+        counts = {
+            r.app_id: r["count"]
+            for r in read_events_sink(spark, sink).groupBy("app_id").count().collect()
+        }
+        assert counts == {"application_grow": len(grow), "application_keep": len(keep)}
+        assert (
+            read_events_sink(spark, sink)
+            .groupBy("src_file", "raw_data")
+            .count()
+            .filter("count > 1")
+            .count()
+            == 0
+        )
+
+        # an erasure whose partitions keep survivors is a dynamic rewrite too
+        victims = spark.createDataFrame([("application_grow",)], "app_id string")
+        mixed = tmp_path / "mixed"
+        (mixed / "application_grow").mkdir(parents=True)
+        _write_log(
+            str(mixed / "application_grow" / "events_1"),
+            list(_app_events("application_grow", 2, 0.5, 1 << 28))
+            + list(_app_events("application_keep", 2, 0.5, 1 << 28)),
+            extra_garbage=False,
+        )
+        msink = str(tmp_path / "msink")
+        assert incremental_ingest(spark, str(mixed), msink, str(tmp_path / "m2")) == 1
+        before = read_events_sink(spark, msink).count()
+        res = erase_apps_from_sink(spark, msink, victims)
+        assert res["partitions_rewritten"] >= 1
+        assert spark.conf.get(key) == "static"
+        after = read_events_sink(spark, msink)
+        assert after.filter("app_id = 'application_grow'").count() == 0
+        assert after.count() == before - res["n_rows_erased"] > 0
+    finally:
+        spark.conf.unset(key)
+
+
+def test_event_projection_is_one_shot(spark, log_dir, tmp_path, monkeypatch):
+    """The normalised frame is built in two ``withColumns`` stages, not
+    a ~28-call ``withColumn`` chain. The optimized plan cannot show a
+    regression here (a chain collapses to the same plan), so the test
+    counts those calls while building the frames; it runs no job."""
+    import pyarrow as pa
+
+    from spark_history_server_rs_spark.sources.event_logs import (
+        read_compressed_event_logs,
+    )
+
+    cls = type(spark.range(1))
+    calls = {"withColumn": 0, "withColumns": 0}
+    for name in calls:
+        orig = getattr(cls, name)
+
+        def counted(self, *a, _orig=orig, _name=name, **k):
+            calls[_name] += 1
+            return _orig(self, *a, **k)
+
+        monkeypatch.setattr(cls, name, counted)
+
+    zpath = str(tmp_path / "application_z.zstd")
+    with pa.output_stream(zpath, compression="zstd") as f:
+        f.write(b'{"Event":"SparkListenerApplicationStart","App ID":"z"}\n')
+
+    def build(fn):
+        for name in calls:
+            calls[name] = 0
+        _, jobs = _jobs_in(spark, fn)
+        assert jobs == 0
+        return dict(calls)
+
+    # the reader's own src_file column, the from_json column, two stages
+    assert build(lambda: read_event_logs(spark, log_dir + "/*/*")) == {
+        "withColumn": 2,
+        "withColumns": 2,
+    }
+    assert build(lambda: read_compressed_event_logs(spark, zpath)) == {
+        "withColumn": 1,
+        "withColumns": 2,
+    }
