@@ -17,15 +17,18 @@ Methodology notes (BASELINE.md parity):
   memory, so per-query timings measure query execution, not parquet ingest.
 - Ingest (scan→normalize→persist) is reported separately as ingest_sec and
   events/s so the write-path baseline rows are comparable too.
+- Every timed row is one row of the op table (:func:`ops`), timed by
+  :func:`measure`: one cold run, then the min of 3 warm runs.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import tempfile
 import time
+from typing import Callable, NamedTuple
 
-from pyspark.sql import functions as F  # noqa: F401  (imported for parity with catalog)
 from pyspark.storagelevel import StorageLevel
 
 from spark_history_server_rs_spark.operators import catalog
@@ -42,132 +45,101 @@ SUITE = {
     "top_resource_consumers": catalog.top_resource_consumers,
 }
 
+#: every op at least this slow gets its own canary sampled right after it
+_HEAVY_BRACKET_SEC = 2.0
+#: an in-sequence group canary before every this-many-th extended row
+_CANARY_EVERY = 20
+
+
+def timed(fn: Callable[[], object]) -> tuple[object, float]:
+    """``fn()``'s result and its wall time in seconds."""
+    t = time.perf_counter()
+    out = fn()
+    return out, time.perf_counter() - t
+
+
+def measure(
+    fn: Callable[[], object],
+    warm: int = 3,
+    reset: Callable[[], None] | None = None,
+) -> tuple[float, float]:
+    """Time ``fn``: one cold run, then ``warm`` warm runs. Returns the
+    cold time and the best warm time in seconds (the cold time when
+    ``warm`` is 0). ``reset`` runs untimed before every run.
+
+    A single timed run samples the JVM's JIT ramp (measured on
+    dedup_minhash_lsh: identical plan executes in 32.6 → 5.9 → 1.9 →
+    1.7 s across consecutive runs) and swung r2→r3 by 2.6× on unchanged
+    code; the VM shows bursty CPU-steal noise, so the min of the warm
+    runs is the noise-robust latency estimator."""
+    times = []
+    for _ in range(1 + warm):
+        if reset is not None:
+            reset()
+        times.append(timed(fn)[1])
+    return times[0], min(times[1:] or times)
+
+
+def _min3(fn: Callable[[], object]) -> float:
+    """Min of three timed runs of ``fn`` (4 dp) — the canary estimator."""
+    return round(min(measure(fn, warm=2)), 4)
+
+
+# Machine-noise canaries: two fixed computations with zero
+# code-under-test. Cross-round query deltas that track these are machine
+# drift (VM contention, thermal), not regressions — measured 1.4x swings
+# on identical code within one session on this host.
+def range_sum(spark) -> None:
+    """Whole-stage-codegen throughput (compute): calib_range_sum_sec."""
+    # % bound keeps the ANSI-mode sum far from BIGINT overflow
+    spark.range(200_000_000).selectExpr("sum(xxhash64(id) % 1000000)").collect()
+
+
+def tiny_shuffle(spark) -> None:
+    """A tiny 32-partition shuffle round-trip — the scheduling/stage-
+    overhead floor that dominates the warm suite's per-query latency:
+    calib_shuffle_sec and every group canary."""
+    spark.range(0, 10_000).repartition(32).selectExpr(
+        "id % 13 AS k"
+    ).groupBy("k").count().collect()
+
 
 def _shuffle_canary(spark) -> float:
-    """The tiny 32-partition shuffle round-trip, min-of-3 — the
-    scheduling/stage-overhead floor. Sampled BETWEEN bench groups (not
+    """The tiny shuffle, min-of-3. Sampled BETWEEN bench groups (not
     only at the end) so per-op deltas late in the ~160-op sequence are
     attributable: if an untouched op slows while its group's canary
     slows too, that is session/VM drift, not a plan regression
     (VERDICT r10 'What's wrong #3')."""
-    vals = []
-    for _ in range(3):
-        t = time.perf_counter()
-        spark.range(0, 10_000).repartition(32).selectExpr(
-            "id % 13 AS k"
-        ).groupBy("k").count().collect()
-        vals.append(time.perf_counter() - t)
-    return round(min(vals), 4)
+    return _min3(lambda: tiny_shuffle(spark))
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.0
-    spark = get_spark("bench")
+class Op(NamedTuple):
+    """One timed row of the op table."""
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    key: str
+    fn: Callable[[], object]
+    #: warm runs after the cold one; 0 = a single timed run (a loop that
+    #: is sequential by nature, or a deletion that cannot be re-run)
+    warm: int = 3
+    #: a 7-query suite row: lands in "queries", its cold time in
+    #: "cold_queries"; every other row lands in "extended"
+    suite: bool = False
+    #: sample a canary right after the op when it is heavy
+    bracket: bool = True
+    #: untimed, before every run
+    reset: Callable[[], None] | None = None
+    #: counts toward the every-_CANARY_EVERY-rows group canary
+    paced: bool = False
 
-    # SAME-HOUR canary floor (VERDICT r13 #1): the recorded
-    # BASELINE_CANARY.json bands go stale faster than once-per-round
-    # re-calibration (r13's idle-session canary already exceeded the
-    # r12 band top). Measure a fresh floor in THIS session's prologue —
-    # fresh JVM, before any bench load, canary_floor.py's methodology
-    # at 4 trials — and report the in-band verdict against BOTH the
-    # stored bands (cross-round continuity) and the fresh ones (what
-    # the machine is doing the hour the numbers are judged).
-    def _range_sum():
-        spark.range(200_000_000).selectExpr(
-            "sum(xxhash64(id) % 1000000)"
-        ).collect()
 
-    def _tiny_shuffle():
-        spark.range(0, 10_000).repartition(32).selectExpr(
-            "id % 13 AS k"
-        ).groupBy("k").count().collect()
-
-    def _min3(fn) -> float:
-        vals = []
-        for _ in range(3):
-            t = time.perf_counter()
-            fn()
-            vals.append(time.perf_counter() - t)
-        return round(min(vals), 4)
-
-    _range_sum(), _tiny_shuffle()  # untimed JIT warmup, as canary_floor.py
-    floor_range = [_min3(_range_sum) for _ in range(4)]
-    floor_shuffle = [_min3(_tiny_shuffle) for _ in range(4)]
-    canary_floor_prologue = {
-        "range_sum_trials": floor_range,
-        "shuffle_trials": floor_shuffle,
-        "band_range_sum": [0.0, round(max(floor_range) * 1.25, 4)],
-        "band_shuffle": [0.0, round(max(floor_shuffle) * 1.25, 4)],
-    }
-
-    # rolling last-canary + per-heavy-op brackets (VERDICT r13 #1):
-    # between-group canaries cannot see a load spike INSIDE a group
-    # (three same-round measurements of knn_graph_index_build disagreed
-    # 4.7x in r13). Every op slower than _HEAVY_BRACKET_SEC gets its
-    # own canary sampled immediately AFTER it; paired with the nearest
-    # preceding sample it yields a per-op sec_per_canary that survives
-    # floor drift.
-    _HEAVY_BRACKET_SEC = 2.0
-    last_canary = {"v": min(floor_shuffle)}
-    op_brackets: dict[str, list] = {}
-
-    def _note_canary(v: float) -> None:
-        last_canary["v"] = v
-
-    def _bracket(name: str, secs: float) -> None:
-        if secs < _HEAVY_BRACKET_SEC:
-            return
-        before = last_canary["v"]
-        after = _shuffle_canary(spark)
-        last_canary["v"] = after
-        mid = (before + after) / 2
-        # 3dp keeps the headline JSON line (driver keeps ~2 KB of tail)
-        # inside the window even with ~22 bracketed rows at sf0.1
-        op_brackets[name] = [
-            round(before, 3), round(after, 3),
-            round(secs / mid, 2) if mid else None,
-        ]
-
-    t0 = time.perf_counter()
-    # parallelism: the sf tables are single parquet files; repartition the raw
-    # scan so the JSON-normalizing projection runs on all cores (a real corpus
-    # has file-level parallelism and skips this).
-    ev = load_events(spark, sf_dir, parallelism=cpus)
-    # Warm state = the normalized columns the catalog reads (raw_data excluded:
-    # no catalog query touches it — same column-pruning a real deployment gets
-    # from its parquet sink). Equivalent of the reference's ingested DuckDB file.
-    ev = ev.drop("raw_data").persist(StorageLevel.MEMORY_AND_DISK)
-    n_events = ev.count()
-    ingest_sec = time.perf_counter() - t0
-
-    # The reference's baseline is measured against a *warm* long-running
-    # server (DuckDB file open, <10 ms/query). Equivalent steady state here:
-    # first execution JIT-compiles the whole-stage-codegen for each plan
-    # (one-time per query shape per JVM); the warm run is the serving
-    # latency. Report warm as the headline, cold alongside.
-    # The VM shows bursty CPU-steal noise; min-of-3 warm runs is the standard
-    # noise-robust latency estimator.
-    cold: dict[str, float] = {}
-    timings: dict[str, float] = {}
-    total = 0.0
+def ops(spark, sf_dir: str, cpus: int, ev):
+    """The op table, in run order: yields an :class:`Op` per timed row
+    and a group-canary key (str) at each group boundary. Untimed set-up
+    (loading the corpus, building the indexes a served row reads) runs
+    between the yields, at its place in the sequence."""
     for name, fn in SUITE.items():
-        t = time.perf_counter()
-        fn(ev).collect()
-        cold[name] = round(time.perf_counter() - t, 4)
-        warm = []
-        for _ in range(3):
-            t = time.perf_counter()
-            fn(ev).collect()
-            warm.append(time.perf_counter() - t)
-        dt = min(warm)
-        timings[name] = round(dt, 4)
-        total += dt
-
-    group_canaries: dict[str, float] = {"after_suite": _shuffle_canary(spark)}
-    _note_canary(group_canaries["after_suite"])
+        yield Op(name, lambda fn=fn: fn(ev).collect(), suite=True, bracket=False)
+    yield "after_suite"
 
     # S17 serving split (the continuous-aggregate story): the trend
     # analytics answered from the durable day-partitioned partials —
@@ -180,50 +152,38 @@ def main() -> None:
     # the synthetic grain is degenerate (executor_id is a pure function
     # of app_id, so cells ≈ output groups ≈ rows/4) and the two paths
     # are within ~1.2x of each other; vs the UNCACHED refresh
-    # (`performance_trends_raw_uncached` below — scan + JSON-normalize
-    # + aggregate per call, the only option when the fact table does
-    # not fit in memory) the rollup wins even on this grain, and the
+    # (`performance_trends_raw_uncached` — scan + JSON-normalize +
+    # aggregate per call, the only option when the fact table does not
+    # fit in memory) the rollup wins even on this grain, and the
     # uncached row grows with n_events while the served row stays
     # O(cells). At a realistic tasks-per-(app,day) the reduction ratio
     # is the win; here the plan gates pin the shape.
-    import tempfile as _tmpmod
-
     from spark_history_server_rs_spark.sources.metrics_rollup import (
         cpu_utilization_from_rollup,
         performance_trends_from_rollup,
         write_metrics_rollup,
     )
 
-    rpath = _tmpmod.mkdtemp() + "/rollup"
-    t = time.perf_counter()
-    write_metrics_rollup(ev, rpath)
-    extended_rollup: dict[str, float] = {
-        "metrics_rollup_build": round(time.perf_counter() - t, 4)
-    }
-    for row, served in (
+    rpath = tempfile.mkdtemp() + "/rollup"
+    yield Op(
+        "metrics_rollup_build",
+        lambda: write_metrics_rollup(ev, rpath),
+        warm=0,
+        bracket=False,
+    )
+    for key, served in (
         ("performance_trends_from_rollup", performance_trends_from_rollup),
         ("cpu_utilization_from_rollup", cpu_utilization_from_rollup),
     ):
-        served(spark, rpath).collect()
-        warm = []
-        for _ in range(3):
-            t = time.perf_counter()
-            served(spark, rpath).collect()
-            warm.append(time.perf_counter() - t)
-        extended_rollup[row] = round(min(warm), 4)
-    SUITE["performance_trends"](
-        load_events(spark, sf_dir, parallelism=cpus)
-    ).collect()
-    warm = []
-    for _ in range(3):
-        t = time.perf_counter()
-        SUITE["performance_trends"](
+        yield Op(key, lambda s=served: s(spark, rpath).collect(), bracket=False)
+    yield Op(
+        "performance_trends_raw_uncached",
+        lambda: SUITE["performance_trends"](
             load_events(spark, sf_dir, parallelism=cpus)
-        ).collect()
-        warm.append(time.perf_counter() - t)
-    extended_rollup["performance_trends_raw_uncached"] = round(min(warm), 4)
-    group_canaries["after_rollup"] = _shuffle_canary(spark)
-    _note_canary(group_canaries["after_rollup"])
+        ).collect(),
+        bracket=False,
+    )
+    yield "after_rollup"
 
     # extended (beyond-reference) operator timings over documents/embeddings
     from spark_history_server_rs_spark.operators import (
@@ -240,19 +200,21 @@ def main() -> None:
     # same single-file caveat as the events scan: spread the cached corpus
     # across cores so extended-op timings measure the parallel plan, not a
     # one-partition file read (real corpora shard across many files)
-    docs = (
-        load_table(spark, sf_dir, "documents")
+    docs, emb = (
+        load_table(spark, sf_dir, t)
         .repartition(cpus)
         .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(cpus)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        for t in ("documents", "embeddings")
     )
     docs.count(), emb.count()
-    extended: dict[str, float] = dict(extended_rollup)
-    for name, fn, src in [
+    # the BPE ops cache learned merges per input plan — without a clear
+    # per run, the timed runs would measure a dict hit and a regression
+    # in the actual training loop would be invisible
+    bpe_training = {
+        llmprep.bpe_train, llmprep.bpe_fertility, llmprep.bpe_encode,
+        llmprep.bpe_compression, llmprep.bpe_vocab_curve,
+    }
+    for key, fn, src in [
         ("dedup_exact", dedup.dedup_exact, docs),
         ("dedup_simhash", dedup.simhash_pairs, docs),
         ("dedup_minhash_lsh", dedup.minhash_lsh_pairs, docs),
@@ -337,90 +299,48 @@ def main() -> None:
         # fans to the index deletion APIs (timed below)
         ("dedup_retention_ids", corpus.dedup_retention_ids, docs),
     ]:
-        # canary sample every 20 extended ops: the late-registry rows
-        # run after ~150 ops' worth of session cache/GC accumulation,
-        # and without an in-sequence canary a creep there is
-        # indistinguishable from a plan regression
-        if len(extended) and len(extended) % 20 == 0:
-            group_canaries[f"extended_after_{len(extended)}"] = (
-                _shuffle_canary(spark)
-            )
-            _note_canary(group_canaries[f"extended_after_{len(extended)}"])
-        # same methodology as the 7-query suite: one cold run, then
-        # min-of-3 warm. A single timed run samples the JVM's JIT ramp
-        # (measured on dedup_minhash_lsh: identical plan executes in
-        # 32.6 → 5.9 → 1.9 → 1.7 s across consecutive runs) and swung
-        # r2→r3 by 2.6× on unchanged code.
-        # the BPE ops cache learned merges per input plan — without a
-        # clear per run, the timed runs would measure a dict hit and a
-        # regression in the actual training loop would be invisible
-        is_bpe_training = name in (
-            "corpus_bpe_train", "corpus_bpe_fertility", "corpus_bpe_encode",
-            "corpus_bpe_compression", "corpus_bpe_vocab_curve"
+        yield Op(
+            key,
+            lambda fn=fn, src=src: fn(src).collect(),
+            reset=llmprep._clear_bpe_cache if fn in bpe_training else None,
+            paced=True,
         )
-        if is_bpe_training:
-            llmprep._clear_bpe_cache()
-        fn(src).collect()  # codegen warmup
-        warm = []
-        for _ in range(3):
-            if is_bpe_training:
-                llmprep._clear_bpe_cache()
-            t = time.perf_counter()
-            fn(src).collect()
-            warm.append(time.perf_counter() - t)
-        extended[name] = round(min(warm), 4)
-        _bracket(name, extended[name])
-
-    group_canaries["after_extended"] = _shuffle_canary(spark)
-    _note_canary(group_canaries["after_extended"])
+    yield "after_extended"
 
     # k=64 training demonstration (VERDICT r06 #1): the bounded-lineage
     # loop at 8× the registered merge count. Single timed run — the loop
     # is sequential by nature and its signal is "completes fast with
     # bounded plans", not a latency percentile worth 3× the wall clock.
-    llmprep._clear_bpe_cache()
-    t = time.perf_counter()
-    llmprep.bpe_train_k(docs, 64).collect()
-    extended["corpus_bpe_train_k64"] = round(time.perf_counter() - t, 4)
-    _bracket("corpus_bpe_train_k64", extended["corpus_bpe_train_k64"])
+    yield Op(
+        "corpus_bpe_train_k64",
+        lambda: llmprep.bpe_train_k(docs, 64).collect(),
+        warm=0,
+        reset=llmprep._clear_bpe_cache,
+    )
 
     # S16 serving split (VERDICT r07 #1): graph-expansion ANN answered
     # from the durable adjacency — the pair loop (the priciest extended
     # op, `ann_graph_expand` above) moves to a once-per-corpus index
     # build; the serving row is what every warm query pays afterwards.
-    import tempfile
-
     from spark_history_server_rs_spark.sources.knn_graph import (
+        ann_graph_expand2_from_index,
         ann_graph_expand_from_index,
         write_knn_graph,
     )
 
     gpath = tempfile.mkdtemp() + "/knng"
-    t = time.perf_counter()
-    write_knn_graph(emb, gpath)
-    extended["knn_graph_index_build"] = round(time.perf_counter() - t, 4)
-    _bracket("knn_graph_index_build", extended["knn_graph_index_build"])
-    from spark_history_server_rs_spark.sources.knn_graph import (
-        ann_graph_expand2_from_index,
-    )
-
-    for row, served in (
+    yield Op("knn_graph_index_build", lambda: write_knn_graph(emb, gpath), warm=0)
+    for key, served in (
         ("ann_graph_expand_from_index", ann_graph_expand_from_index),
         ("ann_graph_expand2_from_index", ann_graph_expand2_from_index),
     ):
-        served(spark, gpath, emb).collect()
-        warm = []
-        for _ in range(3):
-            t = time.perf_counter()
-            served(spark, gpath, emb).collect()
-            warm.append(time.perf_counter() - t)
-        extended[row] = round(min(warm), 4)
-        _bracket(row, extended[row])
+        yield Op(key, lambda s=served: s(spark, gpath, emb).collect())
 
     # the full durable-serving family at one glance: S14 raw + residual
     # IVFADC and the S13-backed dedup sweep — what a warm query pays
     # when the index already exists (the production steady state)
     from spark_history_server_rs_spark.sources.ann_index import (
+        ann_crossencoder_rerank_from_index,
         ann_ivf_pq_from_index,
         ann_ivf_pq_residual_from_index,
         write_ann_index,
@@ -434,69 +354,46 @@ def main() -> None:
 
     # one shared S13 index for the three dedup serving rows (probe's
     # batch = the last 1% of doc ids, indexed side = the rest)
-    dedup_idx_path = tempfile.mkdtemp() + "/dedup_idx"
+    dedup_idx = tempfile.mkdtemp() + "/dedup_idx"
     probe_batch = docs.where("pmod(doc_id, 100) = 0")
-    write_dedup_index(docs.where("pmod(doc_id, 100) <> 0"), dedup_idx_path)
-
-    for row, builder, server in (
-        (
-            "ann_ivf_pq_from_index",
-            lambda p: write_ann_index(emb, p),
-            lambda p: ann_ivf_pq_from_index(spark, p, emb),
-        ),
-        (
-            "ann_ivf_pq_residual_from_index",
-            lambda p: write_ann_index(emb, p, residual=True),
-            lambda p: ann_ivf_pq_residual_from_index(spark, p, emb),
-        ),
-        (
-            "dedup_threshold_sweep_from_index",
-            lambda p: write_dedup_index(docs, p),
-            lambda p: dedup_threshold_sweep_from_index(spark, p, docs),
-        ),
-        (
-            "minhash_lsh_pairs_from_index",
-            lambda p: None,
-            lambda p: minhash_lsh_pairs_from_index(spark, dedup_idx_path),
-        ),
-        (
-            "minhash_lsh_probe_index",
-            lambda p: None,
-            lambda p: minhash_lsh_probe_index(
-                spark, dedup_idx_path, probe_batch
-            ),
-        ),
-    ):
-        p = tempfile.mkdtemp() + "/idx"
-        builder(p)
-        server(p).collect()
-        warm = []
-        for _ in range(3):
-            t = time.perf_counter()
-            server(p).collect()
-            warm.append(time.perf_counter() - t)
-        extended[row] = round(min(warm), 4)
-        _bracket(row, extended[row])
+    write_dedup_index(docs.where("pmod(doc_id, 100) <> 0"), dedup_idx)
+    p = tempfile.mkdtemp() + "/idx"
+    write_ann_index(emb, p)
+    yield Op(
+        "ann_ivf_pq_from_index",
+        lambda p=p: ann_ivf_pq_from_index(spark, p, emb).collect(),
+    )
+    p = tempfile.mkdtemp() + "/idx"
+    write_ann_index(emb, p, residual=True)
+    yield Op(
+        "ann_ivf_pq_residual_from_index",
+        lambda p=p: ann_ivf_pq_residual_from_index(spark, p, emb).collect(),
+    )
+    p = tempfile.mkdtemp() + "/idx"
+    write_dedup_index(docs, p)
+    yield Op(
+        "dedup_threshold_sweep_from_index",
+        lambda p=p: dedup_threshold_sweep_from_index(spark, p, docs).collect(),
+    )
+    yield Op(
+        "minhash_lsh_pairs_from_index",
+        lambda: minhash_lsh_pairs_from_index(spark, dedup_idx).collect(),
+    )
+    yield Op(
+        "minhash_lsh_probe_index",
+        lambda: minhash_lsh_probe_index(spark, dedup_idx, probe_batch).collect(),
+    )
 
     # X14's serving stage (VERDICT r11 #7): retrieve-then-rerank from
     # the persisted S14 index — the row the meta-served coverage counts
     # exist for, tracked next to its shortlist siblings above
-    from spark_history_server_rs_spark.sources.ann_index import (
-        ann_crossencoder_rerank_from_index,
-    )
-
     rerank_idx = tempfile.mkdtemp() + "/ann_rerank_idx"
     write_ann_index(emb, rerank_idx)
-    ann_crossencoder_rerank_from_index(spark, rerank_idx, emb).collect()
-    warm = []
-    for _ in range(3):
-        t = time.perf_counter()
-        ann_crossencoder_rerank_from_index(spark, rerank_idx, emb).collect()
-        warm.append(time.perf_counter() - t)
-    extended["ann_crossencoder_rerank_from_index"] = round(min(warm), 4)
-    _bracket(
+    yield Op(
         "ann_crossencoder_rerank_from_index",
-        extended["ann_crossencoder_rerank_from_index"],
+        lambda: ann_crossencoder_rerank_from_index(
+            spark, rerank_idx, emb
+        ).collect(),
     )
 
     # the erasure arc's per-round row (VERDICT r11 #1): ONE retention
@@ -515,53 +412,39 @@ def main() -> None:
     shards_path = tempfile.mkdtemp() + "/shards"
     write_training_shards(docs, shards_path)
     losers = docs.where("pmod(doc_id, 100) = 1").select("doc_id")
-    t = time.perf_counter()
-    run_retention_pass(
-        spark, losers,
-        dedup_index_path=dedup_idx_path,
-        ann_index_path=rerank_idx,
-        knn_graph_path=gpath,
-        training_shards_path=shards_path,
-    )
-    extended["retention_pass_all_families"] = round(
-        time.perf_counter() - t, 4
-    )
-    _bracket(
+    yield Op(
         "retention_pass_all_families",
-        extended["retention_pass_all_families"],
+        lambda: run_retention_pass(
+            spark,
+            losers,
+            dedup_index_path=dedup_idx,
+            ann_index_path=rerank_idx,
+            knn_graph_path=gpath,
+            training_shards_path=shards_path,
+        ),
+        warm=0,
     )
 
     # k=64 Lloyd training (VERDICT r07 #2): the de-literalized trainer at
     # 8× the registered codebook size — centroids travel as a DataFrame,
     # driver sees per-step scalars only. Single timed run, same rationale
     # as the BPE k64 row.
-    t = time.perf_counter()
-    llmprep.kmeans_train_k(emb, 4, 64).collect()
-    extended["embedding_kmeans_train_k64"] = round(time.perf_counter() - t, 4)
-    _bracket(
-        "embedding_kmeans_train_k64", extended["embedding_kmeans_train_k64"]
+    yield Op(
+        "embedding_kmeans_train_k64",
+        lambda: llmprep.kmeans_train_k(emb, 4, 64).collect(),
+        warm=0,
     )
+    yield "after_index_family"
 
-    group_canaries["after_index_family"] = _shuffle_canary(spark)
-    _note_canary(group_canaries["after_index_family"])
-
-    # round-6 events-SQL ops take (spark, sf_dir) — they scan the raw
-    # events parquet per run (the realistic serving shape for these)
-    from spark_history_server_rs_spark.operators import relational
-
-    # cross-table op (documents × embeddings): timed through its
-    # registry callable like the events-SQL shapes below
+    # the events-SQL ops take (spark, sf_dir) — they scan the raw events
+    # parquet per run (the realistic serving shape for these); the
+    # cross-table op (documents × embeddings) is timed through its
+    # registry callable the same way
     from __spark_entry__ import queries as _entry_queries
 
-    _mix_fn = _entry_queries()["corpus_semantic_source_mix"]
-    _mix_fn(spark, sf_dir).collect()
-    warm = []
-    for _ in range(3):
-        t = time.perf_counter()
-        _mix_fn(spark, sf_dir).collect()
-        warm.append(time.perf_counter() - t)
-    extended["corpus_semantic_source_mix"] = round(min(warm), 4)
-
+    sql_ops = {"corpus_semantic_source_mix": _entry_queries()[
+        "corpus_semantic_source_mix"
+    ]}
     for name in (
         "funnel_conversion",
         "retention_cohorts",
@@ -575,39 +458,106 @@ def main() -> None:
         "table_profile_orders",
         "yoy_revenue_growth",
     ):
-        fn2 = relational.QUERIES[name]
-        fn2(spark, sf_dir).collect()
-        warm = []
-        for _ in range(3):
-            t = time.perf_counter()
-            fn2(spark, sf_dir).collect()
-            warm.append(time.perf_counter() - t)
-        extended[name] = round(min(warm), 4)
+        sql_ops[name] = relational.QUERIES[name]
+    for key, fn in sql_ops.items():
+        yield Op(key, lambda fn=fn: fn(spark, sf_dir).collect(), bracket=False)
 
-    # Machine-noise canaries: two fixed computations with zero
-    # code-under-test, timed min-of-3. Cross-round query deltas that
-    # track these are machine drift (VM contention, thermal), not
-    # regressions — measured 1.4x swings on identical code within one
-    # session on this host.
-    #   - calib_range_sum_sec: whole-stage-codegen throughput (compute)
-    #   - calib_shuffle_sec: a tiny 32-partition shuffle round-trip —
-    #     the scheduling/stage-overhead floor that dominates the warm
-    #     suite's per-query latency
-    calib_cpu, calib_shuf = [], []
-    for _ in range(3):
-        t = time.perf_counter()
-        # % bound keeps the ANSI-mode sum far from BIGINT overflow
-        spark.range(200_000_000).selectExpr(
-            "sum(xxhash64(id) % 1000000)"
-        ).collect()
-        calib_cpu.append(time.perf_counter() - t)
-        t = time.perf_counter()
-        spark.range(0, 10_000).repartition(32).selectExpr(
-            "id % 13 AS k"
-        ).groupBy("k").count().collect()
-        calib_shuf.append(time.perf_counter() - t)
 
-    calib_shuffle = min(calib_shuf)
+def _write_repo_file(name: str, mode: str, line: str) -> None:
+    """Best effort: a read-only checkout still has the stdout lines."""
+    try:
+        with open(os.path.join(os.path.dirname(__file__) or ".", name), mode) as f:
+            f.write(line + "\n")
+    except OSError:
+        pass
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.0
+    spark = get_spark("bench")
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+    # SAME-HOUR canary floor (VERDICT r13 #1): the recorded
+    # BASELINE_CANARY.json bands go stale faster than once-per-round
+    # re-calibration (r13's idle-session canary already exceeded the
+    # r12 band top). Measure a fresh floor in THIS session's prologue —
+    # fresh JVM, before any bench load, canary_floor.py's methodology
+    # at 4 trials — and report the in-band verdict against BOTH the
+    # stored bands (cross-round continuity) and the fresh ones (what
+    # the machine is doing the hour the numbers are judged).
+    range_sum(spark), tiny_shuffle(spark)  # untimed JIT warmup, as canary_floor.py
+    floor_range = [_min3(lambda: range_sum(spark)) for _ in range(4)]
+    floor_shuffle = [_shuffle_canary(spark) for _ in range(4)]
+    canary_floor_prologue = {
+        "range_sum_trials": floor_range,
+        "shuffle_trials": floor_shuffle,
+        "band_range_sum": [0.0, round(max(floor_range) * 1.25, 4)],
+        "band_shuffle": [0.0, round(max(floor_shuffle) * 1.25, 4)],
+    }
+
+    t0 = time.perf_counter()
+    # parallelism: the sf tables are single parquet files; repartition the raw
+    # scan so the JSON-normalizing projection runs on all cores (a real corpus
+    # has file-level parallelism and skips this).
+    ev = load_events(spark, sf_dir, parallelism=cpus)
+    # Warm state = the normalized columns the catalog reads (raw_data excluded:
+    # no catalog query touches it — same column-pruning a real deployment gets
+    # from its parquet sink). Equivalent of the reference's ingested DuckDB file.
+    ev = ev.drop("raw_data").persist(StorageLevel.MEMORY_AND_DISK)
+    n_events = ev.count()
+    ingest_sec = time.perf_counter() - t0
+
+    # The reference's baseline is measured against a *warm* long-running
+    # server (DuckDB file open, <10 ms/query). Equivalent steady state here:
+    # first execution JIT-compiles the whole-stage-codegen for each plan
+    # (one-time per query shape per JVM); the warm run is the serving
+    # latency. Report warm as the headline, cold alongside.
+    cold: dict[str, float] = {}
+    timings: dict[str, float] = {}
+    total = 0.0
+    extended: dict[str, float] = {}
+    group_canaries: dict[str, float] = {}
+    # rolling last canary + per-heavy-op brackets (VERDICT r13 #1):
+    # between-group canaries cannot see a load spike INSIDE a group
+    # (three same-round measurements of knn_graph_index_build disagreed
+    # 4.7x in r13). Every bracketed op slower than _HEAVY_BRACKET_SEC
+    # gets its own canary sampled immediately AFTER it; paired with the
+    # nearest preceding sample it yields a per-op sec_per_canary that
+    # survives floor drift.
+    last_canary = min(floor_shuffle)
+    op_brackets: dict[str, list] = {}
+
+    for op in ops(spark, sf_dir, cpus, ev):
+        if isinstance(op, str):
+            group_canaries[op] = last_canary = _shuffle_canary(spark)
+            continue
+        # the late-registry rows run after ~150 ops' worth of session
+        # cache/GC accumulation; without an in-sequence canary a creep
+        # there is indistinguishable from a plan regression
+        if op.paced and extended and len(extended) % _CANARY_EVERY == 0:
+            key = f"extended_after_{len(extended)}"
+            group_canaries[key] = last_canary = _shuffle_canary(spark)
+        first, best = measure(op.fn, op.warm, op.reset)
+        if op.suite:
+            cold[op.key] = round(first, 4)
+            timings[op.key] = round(best, 4)
+            total += best
+            continue
+        secs = extended[op.key] = round(best, 4)
+        if op.bracket and secs >= _HEAVY_BRACKET_SEC:
+            before, last_canary = last_canary, _shuffle_canary(spark)
+            mid = (before + last_canary) / 2
+            # 3dp keeps the headline JSON line (driver keeps ~2 KB of
+            # tail) inside the window even with ~22 bracketed rows at sf0.1
+            op_brackets[op.key] = [
+                round(before, 3), round(last_canary, 3),
+                round(secs / mid, 2) if mid else None,
+            ]
+
+    calib_range = _min3(lambda: range_sum(spark))
+    calib_shuffle = _shuffle_canary(spark)
 
     # self-reported band status vs the CANONICAL floor bands
     # (BASELINE_CANARY.json, re-measured standalone after the r11
@@ -629,17 +579,16 @@ def main() -> None:
             "kernel": floor["kernel"],
         }
         # the shuffle verdict is keyed on the MEDIAN of every shuffle
-        # sample this run took (the opening calibration + the
-        # in-sequence group canaries — same probe), not the opening
-        # sample alone: r12's opening read 1.7% under the band top and
-        # one marginally noisier trial would have read out-of-band and
-        # re-opened drift litigation (VERDICT r12 "What's wrong #3").
-        # One noisy sample cannot move a 8-9-sample median; a genuinely
-        # loaded run moves all of them, which is what the band is for.
+        # sample this run took (the closing calibration + the
+        # in-sequence group canaries — same probe), not one sample: one
+        # marginally noisier trial would read out-of-band and re-open
+        # drift litigation (VERDICT r12 "What's wrong #3"). One noisy
+        # sample cannot move a 8-9-sample median; a genuinely loaded
+        # run moves all of them, which is what the band is for.
         shuffle_samples = sorted([calib_shuffle, *group_canaries.values()])
         shuffle_median = shuffle_samples[len(shuffle_samples) // 2]
         canary_in_band = {
-            "range_sum": min(calib_cpu) <= floor["band_range_sum"][1],
+            "range_sum": calib_range <= floor["band_range_sum"][1],
             "shuffle": shuffle_median <= floor["band_shuffle"][1],
             # the pre-r13 single-sample verdict, kept informational
             "shuffle_opening": calib_shuffle <= floor["band_shuffle"][1],
@@ -650,12 +599,10 @@ def main() -> None:
             # WITHIN the session reads out-of-band here even when the
             # stale stored bands would have absorbed it
             "range_sum_fresh": (
-                min(calib_cpu)
-                <= canary_floor_prologue["band_range_sum"][1]
+                calib_range <= canary_floor_prologue["band_range_sum"][1]
             ),
             "shuffle_fresh": (
-                shuffle_median
-                <= canary_floor_prologue["band_shuffle"][1]
+                shuffle_median <= canary_floor_prologue["band_shuffle"][1]
             ),
         }
     except (OSError, KeyError, ValueError):
@@ -664,8 +611,8 @@ def main() -> None:
     out = {
         "metric": "seven_query_suite_total",
         "value": round(total, 4),
-        "calib_range_sum_sec": round(min(calib_cpu), 4),
-        "calib_shuffle_sec": round(calib_shuffle, 4),
+        "calib_range_sum_sec": calib_range,
+        "calib_shuffle_sec": calib_shuffle,
         # drift-normalized headline: warm suite total in units of the
         # shuffle-canary latency. Round-over-round regressions that show
         # in the RAW total but NOT here are machine drift (VM contention
@@ -678,8 +625,8 @@ def main() -> None:
         # same-hour floor measured in this session's prologue (fresh
         # JVM, pre-load) — the bands the _fresh verdicts key on
         "canary_floor_prologue": canary_floor_prologue,
-        # [canary_before, canary_after, sec_per_canary] for every op
-        # slower than 2 s — the in-group load-spike witness
+        # [canary_before, canary_after, sec_per_canary] for every
+        # bracketed op slower than 2 s — the in-group load-spike witness
         "op_brackets": op_brackets,
         # in-sequence canaries per bench group (same tiny-shuffle
         # probe): attribute late-registry per-op creep to session/VM
@@ -701,30 +648,18 @@ def main() -> None:
     # below must stay inside the driver's ~2 KB tail window, which
     # cannot hold every per-op bracket at sf0.1 — the file carries the
     # complete record (op_brackets for ALL >2 s rows, cold timings,
-    # canary trials) for the judge/audit trail.
-    try:
-        with open(
-            os.path.join(os.path.dirname(__file__) or ".",
-                         "BENCH_FULL_LAST.json"), "w"
-        ) as f:
-            f.write(json.dumps(out) + "\n")
-    except OSError:
-        pass  # read-only checkout: the stdout lines still carry it
-    # append-only history (VERDICT r14 "What's wrong #5"): LAST is
-    # clobbered by every run — including the driver's own post-round
-    # re-runs — so recorded end-of-round evidence was being lost. Every
-    # run also appends its full payload (with a wall-clock stamp) here;
-    # a later run can never erase an earlier one's record.
-    try:
-        with open(
-            os.path.join(os.path.dirname(__file__) or ".",
-                         "BENCH_FULL_HISTORY.jsonl"), "a"
-        ) as f:
-            f.write(json.dumps({"ts": int(time.time()), **out}) + "\n")
-    except OSError:
-        pass
+    # canary trials) for the judge/audit trail. LAST is clobbered by
+    # every run, so every run also appends its full payload (with a
+    # wall-clock stamp) to the append-only history (VERDICT r14
+    # "What's wrong #5"): a later run can never erase an earlier one's
+    # record.
+    _write_repo_file("BENCH_FULL_LAST.json", "w", json.dumps(out))
+    _write_repo_file(
+        "BENCH_FULL_HISTORY.jsonl", "a",
+        json.dumps({"ts": int(time.time()), **out}),
+    )
     # The driver records only the trailing ~2 KB of output and parses
-    # the last complete JSON it finds there. The full line above now
+    # the last complete JSON it finds there. The full line above
     # exceeds that window (BENCH_r05/r06 lost the canaries and every
     # warm number to truncation), so re-emit the headline fields —
     # noise canaries, warm suite, ingest — as a compact FINAL line that
@@ -750,23 +685,16 @@ def main() -> None:
         if extended.get(k, 0.0) >= 8.0
     }
     headline["op_brackets_full"] = "BENCH_FULL_LAST.json"
-    headline["bpe_train_k64_sec"] = extended.get("corpus_bpe_train_k64")
-    headline["kmeans_train_k64_sec"] = extended.get(
-        "embedding_kmeans_train_k64"
-    )
-    headline["graph_expand_live_sec"] = extended.get("ann_graph_expand")
-    headline["graph_expand_from_index_sec"] = extended.get(
-        "ann_graph_expand_from_index"
-    )
-    headline["rerank_from_index_sec"] = extended.get(
-        "ann_crossencoder_rerank_from_index"
-    )
-    headline["retention_pass_sec"] = extended.get(
-        "retention_pass_all_families"
-    )
-    headline["rollup_serve_sec"] = extended.get(
-        "performance_trends_from_rollup"
-    )
+    for key, row in (
+        ("bpe_train_k64_sec", "corpus_bpe_train_k64"),
+        ("kmeans_train_k64_sec", "embedding_kmeans_train_k64"),
+        ("graph_expand_live_sec", "ann_graph_expand"),
+        ("graph_expand_from_index_sec", "ann_graph_expand_from_index"),
+        ("rerank_from_index_sec", "ann_crossencoder_rerank_from_index"),
+        ("retention_pass_sec", "retention_pass_all_families"),
+        ("rollup_serve_sec", "performance_trends_from_rollup"),
+    ):
+        headline[key] = extended.get(row)
     print(json.dumps(headline), flush=True)
     spark.stop()
 

@@ -6,9 +6,10 @@ describing this VM in round 11: the per-core floor itself moved (kernel
 VERDICT.md r11 "What's wrong #1" and BENCH_SCALE_PROBE.json's
 load_caveat). Cross-round ABSOLUTE comparisons were re-litigating that
 drift every round. This script re-baselines: it runs the two bench.py
-calibration canaries N trials each (each trial min-of-3, exactly the
-bench methodology) in ONE fresh session on an otherwise-idle machine and
-records the canonical bands + environment. bench.py then self-reports
+calibration canaries (``bench.range_sum``, ``bench.tiny_shuffle``) N
+trials each (each trial ``bench._min3``, exactly the bench methodology)
+in ONE fresh session on an otherwise-idle machine and records the
+canonical bands + environment. bench.py then self-reports
 in/out-of-band against THESE bands, so "the machine moved" is a one-line
 read instead of a cross-round forensic exercise.
 
@@ -19,45 +20,25 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 from spark_history_server_rs_spark.session import get_spark
 
+from bench import _min3, _shuffle_canary, range_sum, tiny_shuffle
+
 TRIALS = int(os.environ.get("SPARK_GRAFT_CANARY_TRIALS", "12"))
-
-
-def _min3(fn) -> float:
-    vals = []
-    for _ in range(3):
-        t = time.perf_counter()
-        fn()
-        vals.append(time.perf_counter() - t)
-    return round(min(vals), 4)
 
 
 def main() -> None:
     load_before = os.getloadavg()
     spark = get_spark("canary-floor")
 
-    def range_sum():
-        # same shape as bench.py's calib_range_sum_sec
-        spark.range(200_000_000).selectExpr(
-            "sum(xxhash64(id) % 1000000)"
-        ).collect()
-
-    def tiny_shuffle():
-        # same shape as bench.py's calib_shuffle_sec / _shuffle_canary
-        spark.range(0, 10_000).repartition(32).selectExpr(
-            "id % 13 AS k"
-        ).groupBy("k").count().collect()
-
     # one untimed warmup each: the first execution JIT-compiles the
     # codegen and is not part of the steady-state floor the bands model
-    range_sum()
-    tiny_shuffle()
+    range_sum(spark)
+    tiny_shuffle(spark)
 
-    range_trials = [_min3(range_sum) for _ in range(TRIALS)]
-    shuffle_trials = [_min3(tiny_shuffle) for _ in range(TRIALS)]
+    range_trials = [_min3(lambda: range_sum(spark)) for _ in range(TRIALS)]
+    shuffle_trials = [_shuffle_canary(spark) for _ in range(TRIALS)]
 
     def _band(trials: list[float]) -> dict:
         s = sorted(trials)

@@ -31,7 +31,7 @@ from spark_history_server_rs_spark.operators import catalog
 from spark_history_server_rs_spark.session import get_spark
 from spark_history_server_rs_spark.sources.generic import load_events
 
-from bench import SUITE
+from bench import SUITE, measure, timed
 
 BASE_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PROBE_DIR = os.environ.get("SPARK_GRAFT_PROBE_DIR", "/tmp/sparkgraft_sf1")
@@ -206,12 +206,29 @@ def build_emb_corpus(spark) -> None:
     _write_marker(marker, COPIES)
 
 
+def _cold_warm(fn) -> dict:
+    """Cold and best-warm seconds of ``fn().collect()`` (bench.measure)."""
+    cold, warm = measure(lambda: fn().collect())
+    return {"cold": round(cold, 4), "warm": round(warm, 4)}
+
+
+def _secs(fn) -> float:
+    """Seconds of one run of ``fn``."""
+    return round(timed(fn)[1], 4)
+
+
 def main() -> None:
     spark = get_spark("scale-probe")
     build_corpus(spark)
     build_docs_corpus(spark)
     build_emb_corpus(spark)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+    def probe_shuffle():
+        # the probe's own shuffle canary (bigger than bench.py's)
+        spark.range(0, 2_000_000, 1, cpus).selectExpr(
+            "id % 1000 k", "id v"
+        ).groupBy("k").sum("v").collect()
 
     t0 = time.perf_counter()
     ev = load_events(spark, PROBE_DIR, parallelism=cpus)
@@ -221,18 +238,10 @@ def main() -> None:
 
     cold: dict[str, float] = {}
     warm_t: dict[str, float] = {}
-    total = 0.0
     for name, fn in SUITE.items():
-        t = time.perf_counter()
-        fn(ev).collect()
-        cold[name] = round(time.perf_counter() - t, 4)
-        warm = []
-        for _ in range(3):
-            t = time.perf_counter()
-            fn(ev).collect()
-            warm.append(time.perf_counter() - t)
-        warm_t[name] = round(min(warm), 4)
-        total += warm_t[name]
+        cw = _cold_warm(lambda fn=fn: fn(ev))
+        cold[name], warm_t[name] = cw["cold"], cw["warm"]
+    total = sum(warm_t.values())
 
     # S17 rollup tier at 10x: build the durable partials once, then the
     # trend analytics served from them (warm = the materialized-cache
@@ -250,60 +259,46 @@ def main() -> None:
         )
 
         rpath10 = "/tmp/sparkgraft_rollup10"
-        t = time.perf_counter()
-        _mr.write_metrics_rollup(ev, rpath10)
-        r_build = round(time.perf_counter() - t, 4)
+        r_build = _secs(lambda: _mr.write_metrics_rollup(ev, rpath10))
 
-        def _r_min3(fn):
-            fn().collect()
-            w = []
-            for _ in range(3):
-                t = time.perf_counter()
-                fn().collect()
-                w.append(time.perf_counter() - t)
-            return round(min(w), 4)
+        def served_trends():
+            return _mr.performance_trends_from_rollup(spark, rpath10)
 
         rollup10 = {
             "build_sec": r_build,
             "n_cells": spark.read.parquet(f"{rpath10}/counts").collect()[0][
                 "n_cells"
             ],
-            "performance_trends_from_rollup": _r_min3(
-                lambda: _mr.performance_trends_from_rollup(spark, rpath10)
-            ),
-            "capacity_trends_from_rollup": _r_min3(
+            "performance_trends_from_rollup": _cold_warm(served_trends)["warm"],
+            "capacity_trends_from_rollup": _cold_warm(
                 lambda: _mr.capacity_trends_from_rollup(spark, rpath10)
-            ),
+            )["warm"],
             "raw_performance_trends_warm": warm_t["performance_trends"],
-            "raw_performance_trends_uncached": _r_min3(
+            "raw_performance_trends_uncached": _cold_warm(
                 lambda: SUITE["performance_trends"](
                     load_events(spark, PROBE_DIR, parallelism=cpus)
                 )
-            ),
+            )["warm"],
         }
         # §2.5's sketch percentiles at the 10x tier (VERDICT r13 #5):
         # the DDSketch serve vs the exact holistic op — tolerance AND
         # the cost asymmetry (cells re-aggregation vs fact-table sort)
-        t = time.perf_counter()
-        exact_pct = {
-            r["event_type"]: r.asDict()
-            for r in catalog.task_duration_percentiles(ev).collect()
-        }
-        exact_pct_sec = round(time.perf_counter() - t, 4)
-        sketch_pct_sec = _r_min3(
-            lambda: _mr.task_duration_percentiles_from_rollup(
-                spark, rpath10
-            )
+        exact_rows, exact_pct_sec = timed(
+            lambda: catalog.task_duration_percentiles(ev).collect()
         )
+        exact_pct = {r["event_type"]: r.asDict() for r in exact_rows}
+
+        def sketch_pct():
+            return _mr.task_duration_percentiles_from_rollup(spark, rpath10)
+
+        sketch_pct_sec = _cold_warm(sketch_pct)["warm"]
         max_rel_err = 0.0
-        for r in _mr.task_duration_percentiles_from_rollup(
-            spark, rpath10
-        ).collect():
+        for r in sketch_pct().collect():
             for c in ("p50_ms", "p90_ms", "p95_ms", "p99_ms"):
                 e, s = exact_pct[r["event_type"]][c], r[c]
                 if e:
                     max_rel_err = max(max_rel_err, abs(s - e) / abs(e))
-        rollup10["pct_exact_sec"] = exact_pct_sec
+        rollup10["pct_exact_sec"] = round(exact_pct_sec, 4)
         rollup10["pct_sketch_warm_sec"] = sketch_pct_sec
         rollup10["pct_sketch_max_rel_err"] = round(max_rel_err, 5)
 
@@ -334,35 +329,23 @@ def main() -> None:
             ).partitionBy("event_date").parquet(f"{rpath10}/partials")
         rows_before = spark.read.parquet(f"{rpath10}/partials").count()
         _dd.clear_materialized_caches()
-        t = time.perf_counter()
-        _mr.performance_trends_from_rollup(spark, rpath10).collect()
-        cold_after_appends = round(time.perf_counter() - t, 4)
-        warm_after_appends = _r_min3(
-            lambda: _mr.performance_trends_from_rollup(spark, rpath10)
-        )
-        t = time.perf_counter()
-        _mr.compact_metrics_rollup(spark, rpath10)
-        compact_sec = round(time.perf_counter() - t, 4)
+        after_appends = _cold_warm(served_trends)
+        compact_sec = _secs(lambda: _mr.compact_metrics_rollup(spark, rpath10))
         rows_after = spark.read.parquet(f"{rpath10}/partials").count()
         _dd.clear_materialized_caches()
-        t = time.perf_counter()
-        _mr.performance_trends_from_rollup(spark, rpath10).collect()
-        cold_after_compact = round(time.perf_counter() - t, 4)
-        warm_after_compact = _r_min3(
-            lambda: _mr.performance_trends_from_rollup(spark, rpath10)
-        )
+        after_compact = _cold_warm(served_trends)
         rollup_stream = {
             "n_appended_batches": n_batches,
             "rows_before_compact": rows_before,
             "rows_after_compact": rows_after,
-            "serve_cold_after_appends_sec": cold_after_appends,
-            "serve_warm_after_appends_sec": warm_after_appends,
+            "serve_cold_after_appends_sec": after_appends["cold"],
+            "serve_warm_after_appends_sec": after_appends["warm"],
             "compact_sec": compact_sec,
-            "serve_cold_after_compact_sec": cold_after_compact,
+            "serve_cold_after_compact_sec": after_compact["cold"],
             # the flat-after-compaction claim: warm serve back at the
             # batch-built tier's cost (the pre-compaction warm serve
             # re-aggregates cells × batches rows every call)
-            "serve_warm_after_compact_sec": warm_after_compact,
+            "serve_warm_after_compact_sec": after_compact["warm"],
             # the payoff claim: post-compaction cold serve back at the
             # batch-built tier's shape (rollup10's serve numbers)
             "serve_batch_built_sec": rollup10[
@@ -382,6 +365,8 @@ def main() -> None:
     # attributable.
     sink_erase10 = None
     if os.environ.get("SPARK_GRAFT_PROBE_SINK_ERASE", "1") == "1":
+        import shutil as _shutil
+
         from pyspark.sql import functions as _F
 
         from spark_history_server_rs_spark.sources.event_logs import (
@@ -389,17 +374,11 @@ def main() -> None:
             write_events_sink as _write_sink,
         )
 
-        t = time.perf_counter()
-        spark.range(0, 2_000_000, 1, cpus).selectExpr(
-            "id % 1000 k", "id v"
-        ).groupBy("k").sum("v").collect()
-        canary9d = round(time.perf_counter() - t, 4)
+        canary9d = _secs(probe_shuffle)
         sink10 = "/tmp/sparkgraft_sink10"
         # the sink writer APPENDS (its production contract): a leftover
         # sink from a prior probe run would accumulate and skew both
         # the build wall and the erased-row count — start clean
-        import shutil as _shutil
-
         _shutil.rmtree(sink10, ignore_errors=True)
         # source files keyed by app (16 groups) — the realistic layout:
         # event logs arrive one file per application, so an app's rows
@@ -412,9 +391,7 @@ def main() -> None:
                 _F.pmod(_F.xxhash64("app_id"), _F.lit(16)).cast("string"),
             ),
         )
-        t = time.perf_counter()
-        _write_sink(ev_src, sink10)
-        sink_build = round(time.perf_counter() - t, 4)
+        sink_build = _secs(lambda: _write_sink(ev_src, sink10))
         n_files_clustered = len(
             glob.glob(f"{sink10}/*/*/part-*.parquet")
         )
@@ -425,13 +402,11 @@ def main() -> None:
         # removed — only the numbers are kept.
         unclustered = "/tmp/sparkgraft_sink10_unclustered"
         _shutil.rmtree(unclustered, ignore_errors=True)
-        t = time.perf_counter()
-        (
-            ev_src.withColumn("ingest_src", _F.md5("src_file"))
+        sink_build_unclustered = _secs(
+            lambda: ev_src.withColumn("ingest_src", _F.md5("src_file"))
             .write.partitionBy("event_date", "ingest_src")
             .mode("append").parquet(unclustered)
         )
-        sink_build_unclustered = round(time.perf_counter() - t, 4)
         n_files_unclustered = len(
             glob.glob(f"{unclustered}/*/*/part-*.parquet")
         )
@@ -442,12 +417,13 @@ def main() -> None:
         )
         victim_app = ev.where("app_id IS NOT NULL").groupBy("app_id").count(
         ).orderBy("count").first()["app_id"]
-        t = time.perf_counter()
-        rep9d = _erase_sink(
-            spark, sink10,
-            spark.createDataFrame([(victim_app,)], "app_id string"),
+        rep9d, erase_sec = timed(
+            lambda: _erase_sink(
+                spark, sink10,
+                spark.createDataFrame([(victim_app,)], "app_id string"),
+            )
         )
-        erase_sec = round(time.perf_counter() - t, 4)
+        erase_sec = round(erase_sec, 4)
         sink_erase10 = {
             "canary_shuffle_sec": canary9d,
             "sink_build_sec": sink_build,
@@ -476,7 +452,6 @@ def main() -> None:
     from spark_history_server_rs_spark.operators import dedup as dedup_mod
 
     dedup_mod.clear_materialized_caches()
-    docs10 = {}
     from __spark_entry__ import queries as _entry_queries
 
     qmap = _entry_queries()
@@ -490,34 +465,10 @@ def main() -> None:
     qmap["corpus_novelty_curve_approx"] = lambda s, d: (
         _corpus.novelty_curve_approx(_lt(s, d, "documents"))
     )
-    for name in DOC_SUITE:
-        fn = qmap[name]
-        t = time.perf_counter()
-        fn(spark, PROBE_DIR).collect()
-        d_cold = time.perf_counter() - t
-        warm = []
-        for _ in range(3):
-            t = time.perf_counter()
-            fn(spark, PROBE_DIR).collect()
-            warm.append(time.perf_counter() - t)
-        docs10[name] = {
-            "cold": round(d_cold, 4),
-            "warm": round(min(warm), 4),
-        }
-    for name in EMB_SUITE:
-        fn = qmap[name]
-        t = time.perf_counter()
-        fn(spark, PROBE_DIR).collect()
-        d_cold = time.perf_counter() - t
-        warm = []
-        for _ in range(3):
-            t = time.perf_counter()
-            fn(spark, PROBE_DIR).collect()
-            warm.append(time.perf_counter() - t)
-        docs10[name] = {
-            "cold": round(d_cold, 4),
-            "warm": round(min(warm), 4),
-        }
+    docs10 = {
+        name: _cold_warm(lambda fn=qmap[name]: fn(spark, PROBE_DIR))
+        for name in DOC_SUITE + EMB_SUITE
+    }
     dedup_mod.clear_materialized_caches()
 
     # S13 durable-index tier at 10x documents (round 10): the
@@ -535,32 +486,18 @@ def main() -> None:
         stored = d10.where("pmod(doc_id, 100) <> 0")
         batch = d10.where("pmod(doc_id, 100) = 0")
         ipath = "/tmp/sparkgraft_dedupidx10"
-        t = time.perf_counter()
-        _di.write_dedup_index(stored, ipath)
-        idx_build = round(time.perf_counter() - t, 4)
-
-        def _min3(fn):
-            t = time.perf_counter()
-            fn().collect()
-            c = round(time.perf_counter() - t, 4)
-            w = []
-            for _ in range(3):
-                t = time.perf_counter()
-                fn().collect()
-                w.append(time.perf_counter() - t)
-            return {"cold": c, "warm": round(min(w), 4)}
-
+        idx_build = _secs(lambda: _di.write_dedup_index(stored, ipath))
         dedup_index10 = {
             "n_docs_indexed": stored.count(),
             "n_batch": batch.count(),
             "index_build_sec": idx_build,
-            "probe_batch": _min3(
+            "probe_batch": _cold_warm(
                 lambda: _di.minhash_lsh_probe_index(spark, ipath, batch)
             ),
-            "pairs_from_index": _min3(
+            "pairs_from_index": _cold_warm(
                 lambda: _di.minhash_lsh_pairs_from_index(spark, ipath)
             ),
-            "sweep_from_index": _min3(
+            "sweep_from_index": _cold_warm(
                 lambda: _di.dedup_threshold_sweep_from_index(spark, ipath)
             ),
         }
@@ -586,19 +523,12 @@ def main() -> None:
             "ingest_sec": round(dt, 4),
             "events_per_sec": round(n100 / dt, 1),
         }
-        q100: dict[str, float] = {}
-        total100 = 0.0
-        for name, fn in SUITE.items():
-            fn(ev100).collect()  # codegen/JIT warm
-            warm = []
-            for _ in range(3):
-                t = time.perf_counter()
-                fn(ev100).collect()
-                warm.append(time.perf_counter() - t)
-            q100[name] = round(min(warm), 4)
-            total100 += q100[name]
+        q100 = {
+            name: _cold_warm(lambda fn=fn: fn(ev100))["warm"]
+            for name, fn in SUITE.items()
+        }
         queries_100x = {
-            "total_sec": round(total100, 4),
+            "total_sec": round(sum(q100.values()), 4),
             "queries": q100,
         }
         # the rollup point at 100x: raw performance_trends above scans
@@ -611,32 +541,21 @@ def main() -> None:
             )
 
             rpath100 = "/tmp/sparkgraft_rollup100"
-            t = time.perf_counter()
-            _mr100.write_metrics_rollup(ev100, rpath100)
-            r100_build = round(time.perf_counter() - t, 4)
-            _mr100.performance_trends_from_rollup(spark, rpath100).collect()
-            w = []
-            for _ in range(3):
-                t = time.perf_counter()
-                _mr100.performance_trends_from_rollup(
-                    spark, rpath100
-                ).collect()
-                w.append(time.perf_counter() - t)
-            w_unc = []
-            SUITE["performance_trends"](
-                load_events(spark, PROBE100_DIR, parallelism=cpus)
-            ).collect()
-            for _ in range(3):
-                t = time.perf_counter()
-                SUITE["performance_trends"](
-                    load_events(spark, PROBE100_DIR, parallelism=cpus)
-                ).collect()
-                w_unc.append(time.perf_counter() - t)
             queries_100x["rollup"] = {
-                "build_sec": r100_build,
-                "performance_trends_from_rollup": round(min(w), 4),
+                "build_sec": _secs(
+                    lambda: _mr100.write_metrics_rollup(ev100, rpath100)
+                ),
+                "performance_trends_from_rollup": _cold_warm(
+                    lambda: _mr100.performance_trends_from_rollup(
+                        spark, rpath100
+                    )
+                )["warm"],
                 "raw_performance_trends_warm": q100["performance_trends"],
-                "raw_performance_trends_uncached": round(min(w_unc), 4),
+                "raw_performance_trends_uncached": _cold_warm(
+                    lambda: SUITE["performance_trends"](
+                        load_events(spark, PROBE100_DIR, parallelism=cpus)
+                    )
+                )["warm"],
             }
         ev100.unpersist()
 
@@ -662,12 +581,8 @@ def main() -> None:
         emb10 = spark.read.parquet(f"{PROBE_DIR}/embeddings.parquet")
         n1, n10 = emb1.count(), emb10.count()
         g1, g10 = "/tmp/sparkgraft_knng1", "/tmp/sparkgraft_knng10"
-        t = time.perf_counter()
-        _kg.write_knn_graph(emb1, g1)
-        build1 = round(time.perf_counter() - t, 4)
-        t = time.perf_counter()
-        _kg.write_knn_graph(emb10, g10)
-        build10 = round(time.perf_counter() - t, 4)
+        build1 = _secs(lambda: _kg.write_knn_graph(emb1, g1))
+        build10 = _secs(lambda: _kg.write_knn_graph(emb10, g10))
 
         # one synthetic maintenance batch (1% of the 10x corpus, fresh
         # ids) streamed against the 10x index
@@ -676,27 +591,15 @@ def main() -> None:
         )
         bdir = "/tmp/sparkgraft_knng10_batch"
         batch.coalesce(1).write.mode("overwrite").parquet(bdir)
-        t = time.perf_counter()
-        q = _kg.stream_update_knn_graph(
-            spark.readStream.schema(
-                "vec_id long, embedding array<float>, label int"
-            ).parquet(bdir),
-            g10,
-            "/tmp/sparkgraft_knng10_ckpt",
+        stream10 = _secs(
+            lambda: _kg.stream_update_knn_graph(
+                spark.readStream.schema(
+                    "vec_id long, embedding array<float>, label int"
+                ).parquet(bdir),
+                g10,
+                "/tmp/sparkgraft_knng10_ckpt",
+            ).awaitTermination(600)
         )
-        q.awaitTermination(600)
-        stream10 = round(time.perf_counter() - t, 4)
-
-        def _cold_warm(fn):
-            t = time.perf_counter()
-            fn().collect()
-            c = round(time.perf_counter() - t, 4)
-            warm = []
-            for _ in range(3):
-                t = time.perf_counter()
-                fn().collect()
-                warm.append(time.perf_counter() - t)
-            return {"cold": c, "warm": round(min(warm), 4)}
 
         # serve with the POST-stream corpus: the graph now covers
         # emb10 ∪ batch, and the serving twin refuses a drifted frame
@@ -707,9 +610,7 @@ def main() -> None:
             lambda: _kg.ann_graph_expand_from_index(spark, g10, emb10_live)
         )
         a10 = "/tmp/sparkgraft_ann10"
-        t = time.perf_counter()
-        _write_ann(emb10, a10, residual=True)
-        ann_build10 = round(time.perf_counter() - t, 4)
+        ann_build10 = _secs(lambda: _write_ann(emb10, a10, residual=True))
         res10 = _cold_warm(lambda: _res_serve(spark, a10, emb10))
         ann10 = {
             "n_vectors_1x": n1,
@@ -723,19 +624,6 @@ def main() -> None:
             "ann_index_build_residual_10x_sec": ann_build10,
             "ivf_pq_residual_from_index_10x": res10,
         }
-        # optional honest baseline: the r08 build's engine (the live
-        # all-pairs SQL loop X6 rides) timed at 10x — expensive
-        # (~minutes), run once for the record with PROBE_BNLJ=1
-        if os.environ.get("SPARK_GRAFT_PROBE_BNLJ", "0") == "1":
-            from spark_history_server_rs_spark.operators import (
-                similarity as _sim,
-            )
-
-            t = time.perf_counter()
-            _sim.ann_knn_graph(emb10).collect()
-            ann10["bnlj_pair_loop_10x_sec"] = round(
-                time.perf_counter() - t, 4
-            )
 
     # Erasure-arc tier at 10x (VERDICT r11 #1): the deletion APIs'
     # design claims, measured where they bind — S16 eager repair wall
@@ -782,28 +670,29 @@ def main() -> None:
                     *[col for col in d10.columns if col != "doc_id"],
                 )
             )
-        t = time.perf_counter()
-        _write_shards(d20x, spath, n_shards=n_shards_probe)
-        shards_build = round(time.perf_counter() - t, 4)
+        shards_build = _secs(
+            lambda: _write_shards(d20x, spath, n_shards=n_shards_probe)
+        )
         # losers confined to ONE shard: the pruning claim is only
         # visible when the affected set is a strict subset
         one_shard_ids = d20x.selectExpr("doc_id").where(
             f"pmod(xxhash64(doc_id), {n_shards_probe}) = 3"
         )
         n_retract = one_shard_ids.count()
-        t = time.perf_counter()
-        rep15 = _retract(spark, spath, one_shard_ids)
-        retract_sec = round(time.perf_counter() - t, 4)
+        rep15, retract_sec = timed(
+            lambda: _retract(spark, spath, one_shard_ids)
+        )
+        retract_sec = round(retract_sec, 4)
 
         # ---- S13: O(batch) tombstone delete; sweep twin flat ---------
         losers13 = stored.selectExpr("doc_id").where(
             "pmod(doc_id, 100) = 1"
         )
         n13 = losers13.count()
-        t = time.perf_counter()
-        _di.delete_from_dedup_index(spark, ipath, losers13)
-        del13_sec = round(time.perf_counter() - t, 4)
-        sweep_after = _min3(
+        del13_sec = _secs(
+            lambda: _di.delete_from_dedup_index(spark, ipath, losers13)
+        )
+        sweep_after = _cold_warm(
             lambda: _di.dedup_threshold_sweep_from_index(spark, ipath)
         )
 
@@ -812,16 +701,13 @@ def main() -> None:
             "pmod(vec_id, 100) = 1"
         )
         n14 = losers_vec.count()
-        t = time.perf_counter()
-        _del_ann(spark, a10, losers_vec)
-        del14_sec = round(time.perf_counter() - t, 4)
+        del14_sec = _secs(lambda: _del_ann(spark, a10, losers_vec))
         emb10_surv = emb10.where("pmod(vec_id, 100) <> 1")
         res_after = _cold_warm(lambda: _res_serve(spark, a10, emb10_surv))
 
         # ---- S16: eager adjacency repair vs rebuild ------------------
-        t = time.perf_counter()
-        rep16 = _del_kg(spark, g10, losers_vec)
-        del16_sec = round(time.perf_counter() - t, 4)
+        rep16, del16_sec = timed(lambda: _del_kg(spark, g10, losers_vec))
+        del16_sec = round(del16_sec, 4)
         live16 = emb10_live.join(
             losers_vec.selectExpr("vec_id"), "vec_id", "left_anti"
         )
@@ -859,17 +745,13 @@ def main() -> None:
             "s16_expand_after": expand_after,
         }
 
-    # canaries (same shapes as bench.py) so drift is attributable
-    t = time.perf_counter()
-    spark.range(0, 200_000_000, 1, cpus).selectExpr(
-        "sum(id) s"
-    ).collect()
-    calib_range = round(time.perf_counter() - t, 4)
-    t = time.perf_counter()
-    spark.range(0, 2_000_000, 1, cpus).selectExpr(
-        "id % 1000 k", "id v"
-    ).groupBy("k").sum("v").collect()
-    calib_shuffle = round(time.perf_counter() - t, 4)
+    # canaries (bigger than bench.py's) so drift is attributable
+    calib_range = _secs(
+        lambda: spark.range(0, 200_000_000, 1, cpus).selectExpr(
+            "sum(id) s"
+        ).collect()
+    )
+    calib_shuffle = _secs(probe_shuffle)
 
     out = {
         "metric": "scale_probe_seven_query_suite_total",

@@ -62,12 +62,6 @@ def safe_div(num: Column, den: Column) -> Column:
     return num / F.nullif(den, F.lit(0))
 
 
-def saturating_sub(a: Column, b: Column) -> Column:
-    """GREATEST(0, a-b) — reference's host-side ``saturating_sub``
-    (``duckdb_store_backup.rs:660``)."""
-    return F.greatest(F.lit(0.0), a - b)
-
-
 def count_if(pred: Column) -> Column:
     """COUNT(CASE WHEN pred THEN 1 END) — the conditional-count idiom used
     throughout the reference's aggregates."""

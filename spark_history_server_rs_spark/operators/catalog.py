@@ -40,7 +40,8 @@ from ..functions.expressions import (
 
 #: Pinned "current time" for running-app duration (reference uses ``now()``,
 #: ``models.rs:193-197``; SURVEY §7 risk register says pin it for oracle
-#: determinism). 2025-01-01T00:00:00Z.
+#: determinism) and for an event-log line without a timestamp
+#: (``sources/event_logs.py``). 2025-01-01T00:00:00Z.
 PINNED_NOW_MS = 1735689600000
 
 

@@ -42,15 +42,12 @@ from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.catalog import PINNED_NOW_MS
 from .index_manifest import list_tree
 
 #: S2/S3 discovery globs (reference hdfs_reader.rs:131-134, :183-186).
 APP_DIR_GLOBS = ("application_*", "app-*", "eventlog_v2_*")
 EVENT_FILE_GLOBS = ("events*", "*eventLog*", "*.inprogress", "*.json")
-
-#: Pinned "now" for missing timestamps (reference falls back to ``now()``,
-#: duckdb_store.rs:726; pinned per SURVEY §7 for determinism).
-DEFAULT_NOW_MS = 1735689600000
 
 _MB = 1048576.0
 
@@ -114,7 +111,6 @@ EVENT_JSON_DDL = (
 def read_event_logs(
     spark: SparkSession,
     path: str | list[str],
-    now_ms: int = DEFAULT_NOW_MS,
     with_rejects: bool = False,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """S1-S8, S11: read JSON-lines Spark event logs into the normalized
@@ -130,7 +126,7 @@ def read_event_logs(
         .withColumnRenamed("value", "raw_data")
         .withColumn("src_file", F.input_file_name())
     )
-    events = _project_events(raw, now_ms=now_ms)
+    events = _project_events(raw)
     if with_rejects:
         rejects = raw.withColumn("event_full", _get("$['Event']")).filter(
             F.col("event_full").isNull() & (F.length(F.trim("raw_data")) > 0)
@@ -139,9 +135,7 @@ def read_event_logs(
     return events
 
 
-def _project_events(
-    raw: DataFrame, now_ms: int = DEFAULT_NOW_MS, streaming: bool = False
-) -> DataFrame:
+def _project_events(raw: DataFrame, streaming: bool = False) -> DataFrame:
     """The pure-projection normalization core (S6-S8, S11). Works on any
     DataFrame with (raw_data, src_file) — batch and streaming share it.
 
@@ -172,11 +166,12 @@ def _project_events(
             # parent dir for flat layouts, merging every app into one.
             "app_id": F.coalesce(
                 j["App ID"],
-                # the writer's suffixes are not part of the id: a flat
-                # `local-<ms>.inprogress` (or `<app>.zstd`) log keys the
-                # events after ApplicationStart by the same app as its
-                # `App ID`. The `_<attemptId>` suffix stays: it is
-                # ambiguous against YARN ids.
+                # the writer's `.inprogress` suffix is not part of the
+                # id: a flat `local-<ms>.inprogress` log keys the events
+                # after ApplicationStart by the same app as its `App ID`.
+                # (A codec extension never reaches here: the compressed
+                # reader strips it.) The `_<attemptId>` suffix stays: it
+                # is ambiguous against YARN ids.
                 F.regexp_replace(
                     F.coalesce(
                         # eventlog_v2_<appId> rollover dirs: the app id is
@@ -198,13 +193,15 @@ def _project_events(
                         ),
                         F.regexp_extract(F.col("src_file"), r"([^/]+)$", 1),
                     ),
-                    r"(\.(lz4|lzf|snappy|zstd))?(\.inprogress)?$",
+                    r"\.inprogress$",
                     "",
                 ),
             ),
             "event_ts": F.coalesce(
                 F.timestamp_millis(j["Timestamp"]),
-                F.timestamp_millis(F.lit(now_ms)),
+                # pinned "now" for a missing timestamp (the reference
+                # falls back to ``now()``, duckdb_store.rs:726)
+                F.timestamp_millis(F.lit(PINNED_NOW_MS)),
             ),
         }
     )
@@ -450,7 +447,6 @@ def configure_remote_fs(spark: SparkSession, **kwargs) -> dict[str, str]:
 def read_event_logs_auto(
     spark: SparkSession,
     paths: list[str],
-    now_ms: int = DEFAULT_NOW_MS,
 ) -> DataFrame:
     """Route an explicit file list to the right reader by extension —
     plain/gz JSON-lines through the text source, ``.zip`` through the
@@ -468,11 +464,11 @@ def read_event_logs_auto(
     plain = [p for p in paths if p not in routed]
     parts: list[DataFrame] = []
     if plain:
-        parts.append(read_event_logs(spark, plain, now_ms=now_ms))
+        parts.append(read_event_logs(spark, plain))
     if zips:
-        parts.append(read_zip_event_logs(spark, zips, now_ms=now_ms))
+        parts.append(read_zip_event_logs(spark, zips))
     if comp:
-        parts.append(read_compressed_event_logs(spark, comp, now_ms=now_ms))
+        parts.append(read_compressed_event_logs(spark, comp))
     if not parts:
         raise ValueError("no event-log files to read")
     out = parts[0]
@@ -527,7 +523,6 @@ def incremental_ingest(
     base: str,
     sink_dir: str,
     manifest_dir: str,
-    now_ms: int = DEFAULT_NOW_MS,
 ) -> int:
     """S10: one incremental pass — list, diff against the manifest, re-read
     new/grown files, atomically replace their sink partitions, update the
@@ -550,12 +545,12 @@ def incremental_ingest(
 
     Scale note: one pass reads only changed bytes' files and rewrites only
     their partitions. For 100 TB history the per-file partitioning creates
-    many small dirs — run :func:`compact_sink` on closed dates, or flip to
-    plain date partitioning once logs are immutable.
+    many small dirs — run :func:`compact_sink_inplace` on closed dates,
+    or flip to plain date partitioning once logs are immutable.
     """
     todo, new_manifest = plan_incremental(spark, base, manifest_dir)
     if todo:
-        events = read_event_logs_auto(spark, todo, now_ms=now_ms)
+        events = read_event_logs_auto(spark, todo)
         _overwrite_partitions(
             events.withColumn("ingest_src", F.md5("src_file")), sink_dir
         )
@@ -596,19 +591,6 @@ def write_bucketed_sink(
         .mode("overwrite")
         .format("parquet")
         .saveAsTable(table)
-    )
-
-
-def compact_sink(spark: SparkSession, sink_dir: str, out_dir: str) -> None:
-    """Compact the per-file incremental layout into plain date partitions
-    (for closed/immutable history) — the long-term 100 TB layout."""
-    (
-        spark.read.parquet(sink_dir)
-        .drop("ingest_src")
-        .repartition("event_date")
-        .write.partitionBy("event_date")
-        .mode("overwrite")
-        .parquet(out_dir)
     )
 
 
@@ -696,9 +678,8 @@ def compact_sink_inplace(
        partition-directory deletion and staged-file promotion loses the
        only copy of the selected partitions. Run this only on closed
        dates with the sink backed up or re-derivable from raw event
-       logs (the usual case — re-ingest regenerates it); for sinks
-       without a backing source, prefer :func:`compact_sink`, which
-       writes to a temp location and swaps.
+       logs (the usual case — re-ingest regenerates it); back up a
+       sink without a backing source before compacting it.
     """
     target_bytes = target_file_mb * 1024 * 1024
     stats = _sink_partition_stats(spark, sink_dir)
@@ -949,7 +930,7 @@ def application_details(events: DataFrame) -> DataFrame:
         .withColumn(
             "duration_ms",
             F.when(F.col("completed"), F.col("end_ms") - F.col("start_ms")).otherwise(
-                F.lit(DEFAULT_NOW_MS) - F.col("start_ms")
+                F.lit(PINNED_NOW_MS) - F.col("start_ms")
             ),
         )
         .orderBy("app_id")
@@ -1013,7 +994,7 @@ def executor_details(events: DataFrame) -> DataFrame:
     )
 
 
-def application_attempts(events: DataFrame, now_ms: int = DEFAULT_NOW_MS) -> DataFrame:
+def application_attempts(events: DataFrame) -> DataFrame:
     """Per-(app, attempt) fold — the reference's ApplicationAttemptInfo
     (models.rs:20-40), built the way its per-file parser does
     (storage/event_log.rs:26-93): each log unit (rollover dir or flat
@@ -1079,7 +1060,7 @@ def application_attempts(events: DataFrame, now_ms: int = DEFAULT_NOW_MS) -> Dat
             F.coalesce(
                 F.col("app_end_ms"),
                 F.when(F.col("completed"), F.col("last_updated_ms")).otherwise(
-                    F.lit(now_ms)
+                    F.lit(PINNED_NOW_MS)
                 ),
             ),
         )
@@ -1098,15 +1079,13 @@ def application_attempts(events: DataFrame, now_ms: int = DEFAULT_NOW_MS) -> Dat
     ).orderBy("app_id", F.desc_nulls_last("attempt_id"))
 
 
-def applications_with_attempts(
-    events: DataFrame, now_ms: int = DEFAULT_NOW_MS
-) -> DataFrame:
+def applications_with_attempts(events: DataFrame) -> DataFrame:
     """The reference's ApplicationInfo shape (models.rs:10-18): one row per
     application carrying its attempt list, newest attempt first (the
     History Server's ordering). ``sort_array`` on a struct whose FIRST
     field is attempt_id gives the descending attempt order without a
     second shuffle."""
-    att = application_attempts(events, now_ms=now_ms)
+    att = application_attempts(events)
     name = F.max(F.when(F.col("is_app_start"), F.get_json_object("raw_data", "$['App Name']")))
     names = events.groupBy("app_id").agg(name.alias("app_name"))
     per_app = att.groupBy("app_id").agg(
@@ -1133,9 +1112,7 @@ def applications_with_attempts(
     )
 
 
-def read_zip_event_logs(
-    spark: SparkSession, path: str | list[str], now_ms: int = DEFAULT_NOW_MS
-) -> DataFrame:
+def read_zip_event_logs(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """S6 compression parity for ``.zip`` archives (the reference bundles a
     zip reader, Cargo.toml:24-26). Spark's text source decompresses gz/bz2
     natively but not zip — so: ``binaryFile`` scan → Arrow-batched
@@ -1188,17 +1165,22 @@ def read_zip_event_logs(
             ]
         ),
     )
-    return _project_events(lines, now_ms=now_ms, streaming=True)
+    return _project_events(lines, streaming=True)
 
 
 #: Codec extensions Spark's EventLogFileWriter produces (reference declares
 #: the same set: Cargo.toml:24-26, config.rs:33). gz is handled natively by
-#: spark.read.text; these need the binaryFile + pyarrow path below.
+#: spark.read.text; these need the binaryFile + pyarrow path below. Spark's
+#: ``.lzf`` is not decoded: such a log goes to the text reader, whose
+#: undecodable lines are rejects.
 COMPRESSED_LOG_EXTENSIONS = (".lz4", ".zstd", ".zst", ".snappy")
+_COMPRESSED_LOG_GLOB = "*.{%s}" % ",".join(
+    ext[1:] for ext in COMPRESSED_LOG_EXTENSIONS
+)
 
 
 def read_compressed_event_logs(
-    spark: SparkSession, path: str | list[str], now_ms: int = DEFAULT_NOW_MS
+    spark: SparkSession, path: str | list[str]
 ) -> DataFrame:
     """S6 compression parity for lz4/zstd/snappy event logs — the formats
     ``spark.eventLog.compress=true`` actually writes (lz4-java block
@@ -1214,7 +1196,7 @@ def read_compressed_event_logs(
     """
     raw = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.{lz4,zstd,zst,snappy}")
+        .option("pathGlobFilter", _COMPRESSED_LOG_GLOB)
         .load(path)
         .select("path", "content")
     )
@@ -1315,4 +1297,4 @@ def read_compressed_event_logs(
             ]
         ),
     )
-    return _project_events(lines, now_ms=now_ms, streaming=True)
+    return _project_events(lines, streaming=True)

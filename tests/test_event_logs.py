@@ -462,6 +462,34 @@ def test_lz4_zstd_snappy_compressed_logs(spark, tmp_path):
     assert len(te) > 0
 
 
+def test_flat_zstd_log_keys_like_its_plain_twin(spark, tmp_path):
+    """A flat ``app-<ts>-<n>.zstd`` (or ``.zst``) log and its plain twin
+    key every event by the same app id: the compressed reader strips the
+    codec extension before the app-id rule sees the path."""
+    import pyarrow as pa
+
+    from spark_history_server_rs_spark.sources.event_logs import (
+        read_event_logs_auto,
+    )
+
+    app = "app-20260813000000-0001"
+    evs = list(_app_events(app, 3, 0.5, 1 << 28))
+    for e in evs:
+        e.pop("App ID", None)  # every event keys by the path
+    payload = "".join(json.dumps(e) + "\n" for e in evs).encode()
+    ids = {}
+    for ext in ("", ".zstd", ".zst"):
+        d = tmp_path / (ext.lstrip(".") or "plain")
+        d.mkdir()
+        path = str(d / (app + ext))
+        with pa.output_stream(path, compression="zstd" if ext else None) as f:
+            f.write(payload)
+        rows = read_event_logs_auto(spark, [path]).select("app_id").collect()
+        ids[ext] = sorted(r.app_id for r in rows)
+    assert ids[""] == [app] * len(evs)
+    assert ids[".zstd"] == ids[".zst"] == ids[""]
+
+
 def test_flat_layout_app_id_from_file_name(spark, tmp_path):
     """S8 on the default FLAT layout (log files directly under the log
     root): every event — including those without an embedded App ID — must
