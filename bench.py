@@ -136,7 +136,14 @@ def ops(spark, sf_dir: str, cpus: int, ev):
     """The op table, in run order: yields an :class:`Op` per timed row
     and a group-canary key (str) at each group boundary. Untimed set-up
     (loading the corpus, building the indexes a served row reads) runs
-    between the yields, at its place in the sequence."""
+    between the yields, at its place in the sequence. The rollup and
+    index directories the set-up writes live in one scratch directory,
+    removed when the table is exhausted (or abandoned)."""
+    with tempfile.TemporaryDirectory(prefix="bench-") as scratch:
+        yield from _ops(spark, sf_dir, cpus, ev, scratch)
+
+
+def _ops(spark, sf_dir: str, cpus: int, ev, scratch: str):
     for name, fn in SUITE.items():
         yield Op(name, lambda fn=fn: fn(ev).collect(), suite=True, bracket=False)
     yield "after_suite"
@@ -164,7 +171,7 @@ def ops(spark, sf_dir: str, cpus: int, ev):
         write_metrics_rollup,
     )
 
-    rpath = tempfile.mkdtemp() + "/rollup"
+    rpath = os.path.join(scratch, "rollup")
     yield Op(
         "metrics_rollup_build",
         lambda: write_metrics_rollup(ev, rpath),
@@ -328,7 +335,7 @@ def ops(spark, sf_dir: str, cpus: int, ev):
         write_knn_graph,
     )
 
-    gpath = tempfile.mkdtemp() + "/knng"
+    gpath = os.path.join(scratch, "knng")
     yield Op("knn_graph_index_build", lambda: write_knn_graph(emb, gpath), warm=0)
     for key, served in (
         ("ann_graph_expand_from_index", ann_graph_expand_from_index),
@@ -354,22 +361,22 @@ def ops(spark, sf_dir: str, cpus: int, ev):
 
     # one shared S13 index for the three dedup serving rows (probe's
     # batch = the last 1% of doc ids, indexed side = the rest)
-    dedup_idx = tempfile.mkdtemp() + "/dedup_idx"
+    dedup_idx = os.path.join(scratch, "dedup_idx")
     probe_batch = docs.where("pmod(doc_id, 100) = 0")
     write_dedup_index(docs.where("pmod(doc_id, 100) <> 0"), dedup_idx)
-    p = tempfile.mkdtemp() + "/idx"
+    p = os.path.join(scratch, "ann_idx")
     write_ann_index(emb, p)
     yield Op(
         "ann_ivf_pq_from_index",
         lambda p=p: ann_ivf_pq_from_index(spark, p, emb).collect(),
     )
-    p = tempfile.mkdtemp() + "/idx"
+    p = os.path.join(scratch, "ann_residual_idx")
     write_ann_index(emb, p, residual=True)
     yield Op(
         "ann_ivf_pq_residual_from_index",
         lambda p=p: ann_ivf_pq_residual_from_index(spark, p, emb).collect(),
     )
-    p = tempfile.mkdtemp() + "/idx"
+    p = os.path.join(scratch, "dedup_sweep_idx")
     write_dedup_index(docs, p)
     yield Op(
         "dedup_threshold_sweep_from_index",
@@ -387,7 +394,7 @@ def ops(spark, sf_dir: str, cpus: int, ev):
     # X14's serving stage (VERDICT r11 #7): retrieve-then-rerank from
     # the persisted S14 index — the row the meta-served coverage counts
     # exist for, tracked next to its shortlist siblings above
-    rerank_idx = tempfile.mkdtemp() + "/ann_rerank_idx"
+    rerank_idx = os.path.join(scratch, "ann_rerank_idx")
     write_ann_index(emb, rerank_idx)
     yield Op(
         "ann_crossencoder_rerank_from_index",
@@ -409,7 +416,7 @@ def ops(spark, sf_dir: str, cpus: int, ev):
         write_training_shards,
     )
 
-    shards_path = tempfile.mkdtemp() + "/shards"
+    shards_path = os.path.join(scratch, "shards")
     write_training_shards(docs, shards_path)
     losers = docs.where("pmod(doc_id, 100) = 1").select("doc_id")
     yield Op(

@@ -323,10 +323,17 @@ def write_count_row(
     pattern generalized; S14/S16 keep their build parameters in
     ``meta/``, so the count lives in its OWN relation and the stream
     updaters can invalidate it without touching the parameters the
-    encode path reads)."""
-    spark.createDataFrame([(int(n),)], f"{col} bigint").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/counts")
+    encode path reads).
+
+    The row goes to the JVM as a pandas frame over Arrow: a Python list
+    would run a Python-worker job, and the first such job of a fresh
+    process pays ~1.5 s of worker start-up (measured as the difference
+    in the first rollup build of a perfbench run on 4 vCPU)."""
+    import pandas as _pd
+
+    spark.createDataFrame(
+        _pd.DataFrame({col: [int(n)]}), f"{col} bigint"
+    ).write.mode("overwrite").parquet(f"{path}/counts")
 
 
 def invalidate_count_row(spark: SparkSession, path: str) -> None:

@@ -18,8 +18,11 @@ Reference behavior re-expressed Spark-first (SURVEY.md §2.1):
   normalize at ingest instead, so Catalyst prunes/pushes into the scan).
 - S8 app-id: from the event when present, else from the file path
   (reference ``main.rs:396-401`` uses dir/file name).
-- S9 sink: ``partitionBy(event_date)`` zstd parquet — the stand-in for
-  the reference's DuckDB indexes (partition pruning + row-group min/max).
+- S9 sink: zstd parquet in ONE layout, ``partitionBy(event_date,
+  ingest_src=md5(src_file))`` — the stand-in for the reference's DuckDB
+  indexes (partition pruning + row-group min/max). Batch ingest, the
+  streaming ingest and :func:`_rewrite_partitions` (compaction, erasure)
+  all write it.
 - S10 incremental: a manifest table ``(path, size, complete)`` drives
   re-scan; grown ``.inprogress`` files are re-read and their sink
   partitions *replaced* (dynamic partition overwrite keyed by source
@@ -35,6 +38,8 @@ Reference behavior re-expressed Spark-first (SURVEY.md §2.1):
 from __future__ import annotations
 
 import fnmatch
+import functools
+import operator
 import posixpath
 
 from py4j.protocol import Py4JJavaError
@@ -301,10 +306,11 @@ def _project_events(raw: DataFrame, streaming: bool = False) -> DataFrame:
 # --------------------------------------------------------------------------
 # S9 — partitioned sink
 # --------------------------------------------------------------------------
-def write_events_sink(events: DataFrame, sink_dir: str, mode: str = "append") -> None:
-    """S9: append the normalized events to a date-partitioned zstd parquet
-    sink. Partitioning on ``event_date`` + parquet min/max stats replace
-    the reference's three DuckDB indexes (SURVEY §4): the catalog's
+def write_events_sink(events: DataFrame, sink_dir: str) -> None:
+    """S9: append the normalized events to the sink, in its one layout:
+    zstd parquet partitioned by ``(event_date, ingest_src=md5(src_file))``.
+    Partitioning on ``event_date`` + parquet min/max stats replace the
+    reference's three DuckDB indexes (SURVEY §4): the catalog's
     date-range filters prune partitions, app/event-type filters use
     row-group statistics.
 
@@ -320,7 +326,7 @@ def write_events_sink(events: DataFrame, sink_dir: str, mode: str = "append") ->
     (
         out.repartition(F.col("event_date"), F.col("ingest_src"))
         .write.partitionBy("event_date", "ingest_src")
-        .mode(mode)
+        .mode("append")
         .parquet(sink_dir)
     )
 
@@ -448,33 +454,20 @@ def read_event_logs_auto(
     spark: SparkSession,
     paths: list[str],
 ) -> DataFrame:
-    """Route an explicit file list to the right reader by extension —
-    plain/gz JSON-lines through the text source, ``.zip`` through the
-    archive reader, lz4/zstd/snappy through the pyarrow decoder — and
-    union the normalized frames (identical schema by construction). This
-    is what the incremental planner feeds: a real history dir freely
-    mixes compressed and plain logs."""
-    zips = [p for p in paths if p.lower().endswith(".zip")]
-    comp = [
-        p
-        for p in paths
-        if p.lower().endswith(COMPRESSED_LOG_EXTENSIONS)
-    ]
-    routed = set(zips) | set(comp)
-    plain = [p for p in paths if p not in routed]
-    parts: list[DataFrame] = []
-    if plain:
-        parts.append(read_event_logs(spark, plain))
-    if zips:
-        parts.append(read_zip_event_logs(spark, zips))
-    if comp:
-        parts.append(read_compressed_event_logs(spark, comp))
+    """Route an explicit file list two ways by extension — plain/gz
+    JSON-lines through the text source, ``.zip``/lz4/zstd/snappy through
+    the binary decoder (:func:`read_compressed_event_logs`) — and union
+    the normalized frames (identical schema by construction). This is
+    what the incremental planner feeds: a real history dir freely mixes
+    compressed and plain logs."""
+    binary = [p for p in paths if p.lower().endswith(COMPRESSED_LOG_EXTENSIONS)]
+    plain = [p for p in paths if not p.lower().endswith(COMPRESSED_LOG_EXTENSIONS)]
+    parts = ([read_event_logs(spark, plain)] if plain else []) + (
+        [read_compressed_event_logs(spark, binary)] if binary else []
+    )
     if not parts:
         raise ValueError("no event-log files to read")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 #: the manifest table: one row per listed log (S10)
@@ -494,6 +487,8 @@ def plan_incremental(
     one small collect and a dict lookup per listed file replace shipping
     the listing to the JVM for a join. A missing or unreadable manifest
     means every listed file is new."""
+    import pandas as _pd
+
     listed = _list_files(spark, base)
     try:
         known = {
@@ -510,10 +505,13 @@ def plan_incremental(
         m_size, m_complete = known[path]
         if m_size is not None and size > m_size and not m_complete:
             todo.append(path)
+    # completion marker: not *.inprogress ⇒ complete (event_processor.rs:257).
+    # A pandas frame goes to the JVM over Arrow; a list of tuples would
+    # pass through a Python-worker map first (0.49-0.55 s against
+    # 0.21-0.23 s for 70 rows on 4 vCPU).
+    rows = [(p, size, not p.endswith(".inprogress")) for p, size in listed]
     new_manifest = spark.createDataFrame(
-        # completion marker: not *.inprogress ⇒ complete (event_processor.rs:257)
-        [(p, size, not p.endswith(".inprogress")) for p, size in listed],
-        _MANIFEST_DDL,
+        _pd.DataFrame(rows, columns=["path", "size", "complete"]), _MANIFEST_DDL
     )
     return todo, new_manifest
 
@@ -545,8 +543,7 @@ def incremental_ingest(
 
     Scale note: one pass reads only changed bytes' files and rewrites only
     their partitions. For 100 TB history the per-file partitioning creates
-    many small dirs — run :func:`compact_sink_inplace` on closed dates,
-    or flip to plain date partitioning once logs are immutable.
+    many small dirs — run :func:`compact_sink_inplace` on closed dates.
     """
     todo, new_manifest = plan_incremental(spark, base, manifest_dir)
     if todo:
@@ -594,11 +591,14 @@ def write_bucketed_sink(
     )
 
 
-def _sink_partition_files(spark: SparkSession, sink_dir: str):
-    """Yield ``((event_date, ingest_src), partition dir, bytes)`` per data
-    file of the incremental sink layout, from one :func:`list_tree` walk
-    (works for file://, hdfs://, s3a:// alike — same walk as
-    :func:`_list_files`).
+def _sink_partitions(
+    spark: SparkSession, sink_dir: str
+) -> dict[tuple[str, str], tuple[str, list[str], int]]:
+    """``(event_date, ingest_src) → (partition dir, data files, bytes)``
+    for the sink, from one :func:`list_tree` walk (works for file://,
+    hdfs://, s3a:// alike — same walk as :func:`_list_files`). The one
+    listing compaction, erasure and :func:`_rewrite_partitions` plan
+    from.
 
     Partition values are Hive-UNESCAPED (``%3A`` → ``:`` etc.): Spark
     percent-escapes special characters (space, ':', '%', ...) when it
@@ -611,33 +611,113 @@ def _sink_partition_files(spark: SparkSession, sink_dir: str):
     without re-deriving Spark's escaping rules."""
     from urllib.parse import unquote
 
+    parts: dict[tuple[str, str], tuple[str, list[str], int]] = {}
     for p, size, _ in list_tree(spark, sink_dir):
-        if posixpath.basename(p).startswith(("_", ".")):
+        d = posixpath.dirname(p)
+        date_seg = posixpath.basename(posixpath.dirname(d))
+        src_seg = posixpath.basename(d)
+        if posixpath.basename(p).startswith(("_", ".")) or not (
+            date_seg.startswith("event_date=") and src_seg.startswith("ingest_src=")
+        ):
             continue
-        date = src = None
-        keep = []
-        for seg in p.split("/"):
-            keep.append(seg)
-            if seg.startswith("event_date="):
-                date = unquote(seg.split("=", 1)[1])
-            elif seg.startswith("ingest_src="):
-                src = unquote(seg.split("=", 1)[1])
-                break  # the partition dir ends here
-        if date is not None and src is not None:
-            yield (date, src), "/".join(keep), size
+        key = (unquote(date_seg.split("=", 1)[1]), unquote(src_seg.split("=", 1)[1]))
+        _, files, b = parts.get(key, (d, [], 0))
+        files.append(p)
+        parts[key] = (d, files, b + size)
+    return parts
 
 
-def _sink_partition_stats(
-    spark: SparkSession, sink_dir: str
-) -> dict[tuple[str, str], tuple[int, int]]:
-    """(event_date, ingest_src) → (file_count, total_bytes) for the
-    incremental sink layout (values unescaped, see
-    :func:`_sink_partition_files`)."""
-    stats: dict[tuple[str, str], tuple[int, int]] = {}
-    for key, _, size in _sink_partition_files(spark, sink_dir):
-        n, b = stats.get(key, (0, 0))
-        stats[key] = (n + 1, b + size)
-    return stats
+#: widest OR-disjunction a sink rewrite hands Catalyst in one plan —
+#: analysis cost is linear in clauses, so very wide rewrites (erasure or
+#: compaction) are batched into chunks of this many partition clauses
+#: (each chunk an independent pruned scan + dynamic overwrite of only
+#: its partitions)
+_ERASE_CLAUSE_CAP = 256
+
+
+def _rewrite_partitions(
+    spark: SparkSession,
+    sink_dir: str,
+    keys: dict[tuple[str, str], int],
+    transform,
+) -> None:
+    """The one in-place rewrite of sink partitions (S9c compaction, S9d
+    erasure): replace each ``(event_date, ingest_src)`` partition in
+    ``keys`` with ``transform(its rows)``, written as ``keys[key]``
+    files. Everything else is untouched on disk, byte-for-byte.
+
+    1. The read is ONLY the keys' directories: a literal disjunction
+       over the native partition columns, so Catalyst partition-prunes
+       the scan (a broadcast key-frame join reads every partition).
+       Catalyst's analysis cost grows linearly in OR clauses, so the
+       keys go in chunks of at most ``_ERASE_CLAUSE_CAP`` clauses; each
+       chunk is an independent pruned scan + dynamic partition
+       overwrite of only ITS partitions (a crash between chunks leaves
+       untouched-or-fully-rewritten partitions).
+    2. ``transform`` edits the rows (erasure: the victim anti-join).
+    3. Rows hash into ``keys[key]`` slices per partition (deterministic
+       ``xxhash64(id)``; the counts join in as a broadcast key frame
+       after the pruned read), so an oversized partition splits into
+       target-sized files. The repartition is also the barrier that
+       fully materializes the scan before the first output commit can
+       touch a source file.
+    4. The commit is :func:`_overwrite_partitions`.
+    5. Dynamic partition overwrite only REPLACES partitions present in
+       the output, so a key whose rows all went (an all-victim erasure)
+       would keep serving its old files: the directories of keys whose
+       file set the rewrite left unchanged are deleted outright.
+
+    .. warning:: **Durability window.** The dynamic-overwrite COMMIT is
+       not atomic: a crash between partition-directory deletion and
+       staged-file promotion loses the only copy of the partitions
+       being rewritten. Run it in the quiesced maintenance slot, on
+       closed dates of a sink that is re-derivable from raw event logs
+       (the usual case — re-ingest regenerates it); back up a sink
+       without a backing source first.
+    """
+    import pandas as _pd
+
+    before = _sink_partitions(spark, sink_dir)
+    df = spark.read.parquet(sink_dir)
+    ordered = sorted(keys)
+    for i in range(0, len(ordered), _ERASE_CLAUSE_CAP):
+        chunk = ordered[i : i + _ERASE_CLAUSE_CAP]
+        pred = functools.reduce(
+            operator.or_,
+            [
+                (F.col("event_date") == F.to_date(F.lit(d)))
+                & (F.col("ingest_src") == s)
+                for d, s in chunk
+            ],
+        )
+        files = spark.createDataFrame(
+            _pd.DataFrame(
+                [(d, s, keys[(d, s)]) for d, s in chunk],
+                columns=["_date", "ingest_src", "_files"],
+            ),
+            "_date string, ingest_src string, _files int",
+        )
+        out = (
+            transform(df.filter(pred))
+            .join(
+                F.broadcast(files.withColumn("event_date", F.to_date("_date"))),
+                ["event_date", "ingest_src"],
+            )
+            .withColumn("_slice", F.pmod(F.xxhash64("id"), "_files"))
+        )
+        _overwrite_partitions(
+            out.repartition(
+                sum(keys[k] for k in chunk), "event_date", "ingest_src", "_slice"
+            ).drop("_date", "_files", "_slice"),
+            sink_dir,
+        )
+    after = _sink_partitions(spark, sink_dir)
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    for k in ordered:
+        if k in before and k in after and set(after[k][1]) == set(before[k][1]):
+            p = jvm.org.apache.hadoop.fs.Path(after[k][0])
+            p.getFileSystem(conf).delete(p, True)
 
 
 def compact_sink_inplace(
@@ -654,84 +734,39 @@ def compact_sink_inplace(
     that tax every subsequent scan (open/seek cost dominates under ~tens
     of MB per file). This op rewrites ONLY partitions whose file count
     exceeds what their byte size needs (⌈bytes / target⌉, and at least
-    ``min_files`` existing files), leaving everything else untouched:
-
-    - the partitions to rewrite join in as a tiny broadcast key set (at
-      scan time Spark's dynamic partition pruning keeps unaffected
-      partitions unread);
-    - rows hash into ⌈bytes/target⌉ slices per partition
-      (deterministic ``xxhash64(id)`` — no random()), so oversized
-      partitions split into target-sized files instead of one giant one;
-    - the rewrite commits via dynamic partition overwrite, replacing
-      exactly the selected partition directories. In-place safety comes
-      from the repartition barrier: the shuffle fully materializes the
-      scan before the first output commit can touch a source file.
+    ``min_files`` existing files), through :func:`_rewrite_partitions`:
+    the scan reads only those partitions' files, and each is written as
+    ⌈bytes/target⌉ target-sized files. Same durability window as that
+    rewrite.
 
     Idempotent: a second run finds every selected partition already at
     its target count and returns an empty plan. Returns the compaction
     plan as dicts: (event_date, ingest_src, files_before, bytes,
     files_target).
-
-    .. warning:: **Durability window.** Read safety is guaranteed (the
-       shuffle barrier materializes the scan before any commit), but the
-       dynamic-partition-overwrite COMMIT is not atomic: a crash between
-       partition-directory deletion and staged-file promotion loses the
-       only copy of the selected partitions. Run this only on closed
-       dates with the sink backed up or re-derivable from raw event
-       logs (the usual case — re-ingest regenerates it); back up a
-       sink without a backing source before compacting it.
     """
     target_bytes = target_file_mb * 1024 * 1024
-    stats = _sink_partition_stats(spark, sink_dir)
     plan = []
-    for (date, src), (n, b) in sorted(stats.items()):
+    parts = _sink_partitions(spark, sink_dir)
+    for (date, src), (_, files, b) in sorted(parts.items()):
         want = max(1, -(-b // target_bytes))
-        if n >= min_files and n > want:
+        if len(files) >= min_files and len(files) > want:
             plan.append(
                 {
                     "event_date": date,
                     "ingest_src": src,
-                    "files_before": n,
+                    "files_before": len(files),
                     "bytes": b,
                     "files_target": int(want),
                 }
             )
-    if not plan:
-        return []
-    keys = spark.createDataFrame(
-        [(p["event_date"], p["ingest_src"], p["files_target"]) for p in plan],
-        "event_date string, ingest_src string, want int",
-    )
-    df = spark.read.parquet(sink_dir)
-    picked = df.withColumn("event_date", F.col("event_date").cast("string")).join(
-        F.broadcast(keys), ["event_date", "ingest_src"]
-    )
-    sliced = picked.withColumn(
-        "__slice", F.pmod(F.xxhash64("id"), F.col("want"))
-    ).drop("want")
-    total_slices = sum(p["files_target"] for p in plan)
-    out = (
-        sliced.repartition(total_slices, "event_date", "ingest_src", "__slice")
-        .drop("__slice")
-        .withColumn("event_date", F.col("event_date").cast("date"))
-    )
-    _overwrite_partitions(out, sink_dir)
+    if plan:
+        _rewrite_partitions(
+            spark,
+            sink_dir,
+            {(p["event_date"], p["ingest_src"]): p["files_target"] for p in plan},
+            lambda rows: rows,
+        )
     return plan
-
-
-def _sink_partition_dirs(
-    spark: SparkSession, sink_dir: str
-) -> dict[tuple[str, str], str]:
-    """(event_date, ingest_src) → partition DIRECTORY path (raw on-disk
-    form, values unescaped in the key, see :func:`_sink_partition_files`)."""
-    return {key: d for key, d, _ in _sink_partition_files(spark, sink_dir)}
-
-
-#: widest OR-disjunction the erasure rewrite hands Catalyst in one plan —
-#: analysis cost is linear in clauses, so very wide erasures are batched
-#: into chunks of this many affected-partition clauses (each chunk an
-#: independent pruned scan + dynamic overwrite of only its partitions)
-_ERASE_CLAUSE_CAP = 256
 
 
 def erase_apps_from_sink(
@@ -748,45 +783,31 @@ def erase_apps_from_sink(
     here driven by an explicit id frame instead of the filesystem.
 
     Partition-pruned, like S15's shard retraction: ONE column-pruned
-    planning scan (r13 — previously three sink-wide jobs) computes
-    per-partition victim/survivor counts, which carry the affected
-    set, the erased-row count, and the survivor/all-victim split in a
-    #partitions-bounded driver payload; the rewrite then reads ONLY
-    the affected directories (a literal disjunction over the native
-    partition columns, so Catalyst partition-prunes the scan — batched
-    in chunks of ``_ERASE_CLAUSE_CAP`` clauses so planner analysis
-    stays bounded at ANY erasure width, VERDICT r13) and replaces them
-    via dynamic partition overwrite — everything else is untouched on
-    disk, byte-for-byte, not just value-equal.
+    planning scan computes per-partition victim/survivor counts, which
+    carry the affected set, the erased-row count, and the
+    survivor/all-victim split in a #partitions-bounded driver payload;
+    :func:`_rewrite_partitions` then reads ONLY the affected directories,
+    drops the victims' rows, replaces the partitions with survivors and
+    deletes the all-victim ones (the silent-miss class: dynamic
+    partition overwrite alone would leave those serving the erased
+    app). Everything else is untouched on disk, byte-for-byte.
 
-    The silent-miss class this guards against explicitly: dynamic
-    partition overwrite only REPLACES partitions present in the output,
-    so a partition whose every row belongs to a victim app produces no
-    survivor rows, no output partition — and its old directory would
-    silently keep serving the erased app. Those all-victim partitions
-    are deleted directly (FS delete of the listed partition dirs), and
     ``verify=True`` (default) closes the loop with one sink-wide
     semi-join probe that RAISES if any victim row survived — the same
     fail-loud contract the S15 retraction verification set. Disable it
     only when the caller audits separately; the probe is a column-
     pruned scan with row-group-stat skipping, not a full read.
 
-    Same durability window as :func:`compact_sink_inplace` (the
-    dynamic-overwrite commit is not atomic) — run in the quiesced
-    maintenance slot, on a sink that is re-derivable from raw logs.
-    Idempotent: a retry finds no victim rows and returns zeros.
+    Same durability window as :func:`_rewrite_partitions` — run in the
+    quiesced maintenance slot, on a sink that is re-derivable from raw
+    logs. Idempotent: a retry finds no victim rows and returns zeros.
 
     Returns {n_rows_erased, partitions_rewritten, partitions_deleted}.
     """
     victims = app_ids.where("app_id IS NOT NULL").select("app_id").distinct()
-    df = spark.read.parquet(sink_dir)
-    # ONE column-pruned planning scan (r13, measured: the previous
-    # shape paid three sink-wide jobs — affected-set collect, victim
-    # count, survivor-key collect — before any rewrite; per-partition
-    # victim/survivor counts from a single pass carry all three
-    # answers in a #partitions-bounded driver payload)
     stats = (
-        df.withColumn("event_date", F.col("event_date").cast("string"))
+        spark.read.parquet(sink_dir)
+        .withColumn("event_date", F.col("event_date").cast("string"))
         .join(
             F.broadcast(victims.withColumn("_victim", F.lit(1))),
             "app_id",
@@ -802,94 +823,33 @@ def erase_apps_from_sink(
         .filter(F.col("n_victims") > 0)
         .collect()
     )
-    affected_keys = {(r.event_date, r.ingest_src) for r in stats}
-    if not affected_keys:
-        return {
-            "n_rows_erased": 0,
-            "partitions_rewritten": 0,
-            "partitions_deleted": 0,
-        }
-    n_erased = sum(r.n_victims for r in stats)
-    survivor_keys = {
-        (r.event_date, r.ingest_src) for r in stats if r.n_survivors > 0
-    }
-    if survivor_keys:
-        # literal disjunction over the affected keys: partition PRUNING
-        # at the scan (a broadcast key-frame join reads every partition;
-        # a literal predicate reads only the affected directories).
-        # Applied to the NATIVE partition columns (date-typed) before
-        # any cast, so Catalyst prunes. Catalyst's analysis cost grows
-        # linearly in OR clauses and turns pathological for very wide
-        # erasures (thousands of affected partitions — VERDICT r13), so
-        # the rewrite proceeds in chunks of at most _ERASE_CLAUSE_CAP
-        # clauses: each chunk is an independent pruned scan + dynamic
-        # partition overwrite of only ITS partitions, so correctness is
-        # unchanged (partitions are rewritten exactly once, a crash
-        # between chunks leaves untouched-or-fully-rewritten partitions
-        # — the same non-atomic commit window the docstring documents,
-        # and the verify probe still closes the loop).
-        ordered = sorted(survivor_keys)
-        for i in range(0, len(ordered), _ERASE_CLAUSE_CAP):
-            pred = None
-            for d, s in ordered[i:i + _ERASE_CLAUSE_CAP]:
-                clause = (
-                    F.col("event_date") == F.to_date(F.lit(d))
-                ) & (F.col("ingest_src") == s)
-                pred = clause if pred is None else (pred | clause)
-            picked = df.filter(pred).withColumn(
-                "event_date", F.col("event_date").cast("string")
-            )
-            survivors = picked.join(
-                F.broadcast(victims), "app_id", "left_anti"
-            )
-            # repartition barrier, same reasoning as
-            # compact_sink_inplace: both joins above are broadcast
-            # (narrow, pipelined), so without a shuffle the in-place
-            # rewrite's read safety would rest on commit staging
-            # alone; the barrier materializes the scan before any
-            # output commit can touch a source file — and leaves one
-            # file per rewritten partition as a side effect
-            _overwrite_partitions(
-                survivors.repartition(
-                    F.col("event_date"), F.col("ingest_src")
-                ).withColumn("event_date", F.col("event_date").cast("date")),
-                sink_dir,
-            )
-    # all-victim partitions: no survivor output replaced them — delete
-    # their directories outright or the erased app keeps serving
-    empty_keys = affected_keys - survivor_keys
-    if empty_keys:
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        dirs = _sink_partition_dirs(spark, sink_dir)
-        for k in sorted(empty_keys):
-            path = dirs.get(k)
-            if path is None:
-                continue  # already gone (retry after a partial run)
-            p = jvm.org.apache.hadoop.fs.Path(path)
-            p.getFileSystem(conf).delete(p, True)
-    if verify:
-        # an erasure whose victims covered EVERY partition leaves an
-        # empty sink — a bare parquet read would fail schema inference
-        # there (ADVICE r12); an empty relation trivially verifies
-        if not _sink_partition_dirs(spark, sink_dir):
-            remaining = 0
-        else:
-            remaining = (
-                spark.read.parquet(sink_dir)
-                .join(F.broadcast(victims), "app_id", "left_semi")
-                .count()
-            )
+    if stats:
+        _rewrite_partitions(
+            spark,
+            sink_dir,
+            {(r.event_date, r.ingest_src): 1 for r in stats},
+            lambda rows: rows.join(F.broadcast(victims), "app_id", "left_anti"),
+        )
+    # an erasure whose victims covered EVERY partition leaves an empty
+    # sink — a bare parquet read would fail schema inference there
+    # (ADVICE r12); an empty relation trivially verifies
+    if verify and stats and _sink_partitions(spark, sink_dir):
+        remaining = (
+            spark.read.parquet(sink_dir)
+            .join(F.broadcast(victims), "app_id", "left_semi")
+            .count()
+        )
         if remaining:
             raise RuntimeError(
                 f"sink erasure verification failed: {remaining} rows of "
                 f"the victim apps remain under {sink_dir} — partial "
                 "commit (see the durability note); re-run the erasure"
             )
+    rewritten = sum(1 for r in stats if r.n_survivors > 0)
     return {
-        "n_rows_erased": int(n_erased),
-        "partitions_rewritten": len(survivor_keys),
-        "partitions_deleted": len(empty_keys),
+        "n_rows_erased": int(sum(r.n_victims for r in stats)),
+        "partitions_rewritten": rewritten,
+        "partitions_deleted": len(stats) - rewritten,
     }
 
 
@@ -1112,68 +1072,12 @@ def applications_with_attempts(events: DataFrame) -> DataFrame:
     )
 
 
-def read_zip_event_logs(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    """S6 compression parity for ``.zip`` archives (the reference bundles a
-    zip reader, Cargo.toml:24-26). Spark's text source decompresses gz/bz2
-    natively but not zip — so: ``binaryFile`` scan → Arrow-batched
-    ``mapInPandas`` unpacks each archive's entries into (raw line,
-    synthetic member path) rows → the shared normalization projection.
-
-    Scale: one archive = one input row = decompressed inside one task;
-    parallelism comes from the number of archives (zip is not splittable —
-    same constraint every engine has).
-    """
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zip")
-        .load(path)
-        .select("path", "content")
-    )
-
-    # Self-contained closure (see operators/multimodal.py note).
-    def unzip(batches):
-        import io
-        import zipfile
-
-        import pandas as _pd
-
-        for pdf in batches:
-            out = {"raw_data": [], "src_file": []}
-            for apath, content in zip(pdf["path"], pdf["content"]):
-                # the archive stands in for the app directory (S8): strip
-                # .zip so app-id-from-path sees "<archive-stem>/<member>"
-                stem = apath[:-4] if apath.endswith(".zip") else apath
-                with zipfile.ZipFile(io.BytesIO(bytes(content))) as zf:
-                    for member in zf.namelist():
-                        if member.endswith("/"):
-                            continue
-                        for line in zf.read(member).decode(
-                            "utf-8", errors="replace"
-                        ).splitlines():
-                            out["raw_data"].append(line)
-                            out["src_file"].append(f"{stem}/{member}")
-            yield _pd.DataFrame(out)
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    lines = raw.mapInPandas(
-        unzip,
-        StructType(
-            [
-                StructField("raw_data", StringType(), False),
-                StructField("src_file", StringType(), False),
-            ]
-        ),
-    )
-    return _project_events(lines, streaming=True)
-
-
-#: Codec extensions Spark's EventLogFileWriter produces (reference declares
-#: the same set: Cargo.toml:24-26, config.rs:33). gz is handled natively by
-#: spark.read.text; these need the binaryFile + pyarrow path below. Spark's
-#: ``.lzf`` is not decoded: such a log goes to the text reader, whose
-#: undecodable lines are rejects.
-COMPRESSED_LOG_EXTENSIONS = (".lz4", ".zstd", ".zst", ".snappy")
+#: Extensions the binary reader below decodes: ``.zip`` archives plus the
+#: codec extensions Spark's EventLogFileWriter produces (reference
+#: declares the same set: Cargo.toml:24-26, config.rs:33). gz is handled
+#: natively by spark.read.text. Spark's ``.lzf`` is not decoded: such a
+#: log goes to the text reader, whose undecodable lines are rejects.
+COMPRESSED_LOG_EXTENSIONS = (".zip", ".lz4", ".zstd", ".zst", ".snappy")
 _COMPRESSED_LOG_GLOB = "*.{%s}" % ",".join(
     ext[1:] for ext in COMPRESSED_LOG_EXTENSIONS
 )
@@ -1182,13 +1086,18 @@ _COMPRESSED_LOG_GLOB = "*.{%s}" % ",".join(
 def read_compressed_event_logs(
     spark: SparkSession, path: str | list[str]
 ) -> DataFrame:
-    """S6 compression parity for lz4/zstd/snappy event logs — the formats
+    """S6 compression parity: the one reader for logs Spark's text source
+    can't split or decode — lz4/zstd/snappy event logs, the formats
     ``spark.eventLog.compress=true`` actually writes (lz4-java block
     stream, zstd frame, snappy-java block stream; NOT the Hadoop codec
-    container formats). Spark's text source can't split or decode them, so:
-    ``binaryFile`` scan → Arrow-batched ``mapInPandas`` decodes each file
-    with pyarrow's raw codecs → (line, src-path-minus-extension) rows →
-    the shared normalization projection.
+    container formats), and ``.zip`` archives (the reference bundles a
+    zip reader, Cargo.toml:24-26). ``binaryFile`` scan → Arrow-batched
+    ``mapInPandas`` runs each file through its extension's decoder,
+    which yields ``(member suffix, bytes)`` pairs → (line,
+    src-path-minus-extension + suffix) rows → the shared normalization
+    projection. A codec decoder yields one member with an empty suffix;
+    the zip decoder yields every archive member as ``/<member>``, so
+    the archive stands in for the app directory (S8).
 
     Scale: one compressed log = one task (these framings are not
     splittable — the same constraint every engine has); parallelism comes
@@ -1203,7 +1112,9 @@ def read_compressed_event_logs(
 
     # Self-contained closure (see operators/multimodal.py note).
     def decode(batches):
+        import io
         import struct
+        import zipfile
 
         import pandas as _pd
         import pyarrow as _pa
@@ -1265,25 +1176,32 @@ def read_compressed_event_logs(
             with _pa.input_stream(_pa.BufferReader(data), compression="zstd") as f:
                 return f.read()
 
+        def zip_members(data: bytes):
+            with zipfile.ZipFile(io.BytesIO(data)) as zf:
+                for member in zf.namelist():
+                    if not member.endswith("/"):
+                        yield "/" + member, zf.read(member)
+
+        def one(codec):
+            return lambda data: [("", codec(data))]
+
         decoders = {
-            ".lz4": lz4_block_stream,
-            ".zstd": zstd_stream,
-            ".zst": zstd_stream,
-            ".snappy": snappy_java_stream,
+            ".zip": zip_members,
+            ".lz4": one(lz4_block_stream),
+            ".zstd": one(zstd_stream),
+            ".zst": one(zstd_stream),
+            ".snappy": one(snappy_java_stream),
         }
         for pdf in batches:
             out = {"raw_data": [], "src_file": []}
             for apath, content in zip(pdf["path"], pdf["content"]):
                 ext = "." + apath.rsplit(".", 1)[-1].lower()
-                # S8: strip the codec extension so app-id-from-path sees
-                # the same name an uncompressed log would have
-                stem = apath[: -len(ext)] if ext in decoders else apath
-                text = decoders[ext](bytes(content)).decode(
-                    "utf-8", errors="replace"
-                )
-                for line in text.splitlines():
-                    out["raw_data"].append(line)
-                    out["src_file"].append(stem)
+                # S8: strip the extension so app-id-from-path sees the
+                # same name an uncompressed log would have
+                for suffix, data in decoders[ext](bytes(content)):
+                    for line in data.decode("utf-8", errors="replace").splitlines():
+                        out["raw_data"].append(line)
+                        out["src_file"].append(apath[: -len(ext)] + suffix)
             yield _pd.DataFrame(out)
 
     from pyspark.sql.types import StringType, StructField, StructType

@@ -22,26 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sources.event_logs import read_event_logs
-
-
-def _normalize_stream(raw: DataFrame) -> DataFrame:
-    """Reuse the batch normalization logic on a streaming DataFrame.
-
-    ``read_event_logs`` is pure column algebra over ``spark.read.text``
-    output, so the same projection applies verbatim to ``readStream`` —
-    one code path for batch and streaming (the Spark-first property the
-    reference's dual ingest pipelines lacked)."""
-    from ..sources import event_logs as el
-
-    # Build the projection by calling the batch builder's column logic on
-    # the streaming frame: identical code path, streaming-legal operators
-    # only (projections + filters).
-    raw = raw.withColumnRenamed("value", "raw_data").withColumn(
-        "src_file", F.input_file_name()
-    )
-    # Delegate: read_event_logs accepts a DataFrame-shaped entry below.
-    return el._project_events(raw, streaming=True)  # type: ignore[attr-defined]
+from ..sources import event_logs as el
 
 
 def stream_ingest(
@@ -52,21 +33,36 @@ def stream_ingest(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Exactly-once streaming ingest of (immutable) event-log files into
-    the date-partitioned parquet sink. ``availableNow`` drains the backlog
-    and stops; pass ``available_now=False`` for a continuous micro-batch
-    daemon (the reference's poll loop, minus the duplicates)."""
+    the event sink, in the sink's one layout. ``availableNow`` drains the
+    backlog and stops; pass ``available_now=False`` for a continuous
+    micro-batch daemon (the reference's poll loop, minus the
+    duplicates).
+
+    The batch normalization projection applies verbatim to the
+    ``readStream`` text frame (projections + filters only — one code
+    path for batch and streaming, the Spark-first property the
+    reference's dual ingest pipelines lacked). Each micro-batch commits
+    through the batch ingest's dynamic partition overwrite
+    (``foreachBatch``), so the sink is partitioned by ``(event_date,
+    ingest_src)`` whichever path wrote it and compaction and erasure
+    work on it. The id is a content hash (``xxhash64``) and a file never
+    spans two micro-batches, so a replayed batch rewrites identical
+    partitions."""
     raw = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", 64)  # bound micro-batch size at scale
         .load(log_glob)
+        .withColumnRenamed("value", "raw_data")
+        .withColumn("src_file", F.input_file_name())
     )
-    events = _normalize_stream(raw)
     writer = (
-        events.writeStream.format("parquet")
-        .option("path", sink_dir)
+        el._project_events(raw, streaming=True)
+        .writeStream.foreachBatch(
+            lambda batch, _: el._overwrite_partitions(
+                batch.withColumn("ingest_src", F.md5("src_file")), sink_dir
+            )
+        )
         .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("event_date")
-        .outputMode("append")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -345,7 +341,7 @@ def stream_transition_counts(events: DataFrame):
     scalars per active user, independent of stream length.
 
     Input schema: ``app_id string, id long, ts_ms long, event_type
-    string`` (pre-normalized — pair with ``_normalize_stream`` /
+    string`` (pre-normalized — pair with the ``stream_ingest`` /
     ``load_events`` projections).
     """
     from pyspark.sql.streaming.state import GroupStateTimeout

@@ -85,7 +85,7 @@ SLOW_TESTS = (
 #: ``-m "not slow"``; the rest stay deselected. Each slice adds its
 #: tests' time to the default run, which must stay inside its timeout:
 #: speed up a slow admitted test rather than deselect it.
-SLOW_ROTATION = 1
+SLOW_ROTATION = 2
 SLOW_ROTATION_SLICE = 3
 
 

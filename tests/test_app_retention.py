@@ -15,8 +15,7 @@ from pyspark.sql import functions as F
 from spark_history_server_rs_spark.operators import catalog
 from spark_history_server_rs_spark.sources import metrics_rollup as mr
 from spark_history_server_rs_spark.sources.event_logs import (
-    _sink_partition_dirs,
-    _sink_partition_stats,
+    _sink_partitions,
     erase_apps_from_sink,
     write_events_sink,
 )
@@ -48,6 +47,12 @@ def _build_sink(spark, tmp_path):
     sink = str(tmp_path / "sink")
     write_events_sink(ev, sink)
     return ev, sink, min_date
+
+
+def _sink_dirs(spark, sink):
+    """(event_date, ingest_src) → partition directory, from the sink's
+    one listing."""
+    return {k: d for k, (d, _, _) in _sink_partitions(spark, sink).items()}
 
 
 def _fs_listing(spark, path):
@@ -85,7 +90,7 @@ def test_erase_apps_partition_pruned_with_all_victim_partition(
         .distinct()
         .collect()
     }
-    dirs_before = _sink_partition_dirs(spark, sink)
+    dirs_before = _sink_dirs(spark, sink)
     untouched_listing = {
         k: _fs_listing(spark, d)
         for k, d in dirs_before.items()
@@ -108,7 +113,7 @@ def test_erase_apps_partition_pruned_with_all_victim_partition(
     assert after.count() == n_total - n_victim
     # the all-victim partition directory is GONE (dynamic overwrite
     # alone would have left it serving the erased app)
-    dirs_after = _sink_partition_dirs(spark, sink)
+    dirs_after = _sink_dirs(spark, sink)
     victim_key_gone = [
         k for k in affected if k not in dirs_after and k in dirs_before
     ]
@@ -170,7 +175,7 @@ def test_erase_apps_chunked_beyond_clause_cap(spark, tmp_path, monkeypatch):
         .collect()
     }
     assert len(affected) > 3  # the cap genuinely chunks this erasure
-    dirs_before = _sink_partition_dirs(spark, sink)
+    dirs_before = _sink_dirs(spark, sink)
     untouched_listing = {
         k: _fs_listing(spark, d)
         for k, d in dirs_before.items()
@@ -256,16 +261,6 @@ def test_run_app_retention_fans_sink_and_rollup(spark, tmp_path):
         tuple(r)
         for r in mr.performance_trends_from_rollup(spark, rpath).collect()
     ]
-
-
-def test_sink_partition_stats_matches_dirs(spark, tmp_path):
-    """The two listings agree on the partition key set — the erasure's
-    delete step depends on the dirs map covering every key the stats
-    planner (compaction) sees."""
-    _, sink, _ = _build_sink(spark, tmp_path)
-    stats = _sink_partition_stats(spark, sink)
-    dirs = _sink_partition_dirs(spark, sink)
-    assert set(stats) == set(dirs)
 
 
 def test_run_app_ttl_retention_composition(spark, tmp_path):

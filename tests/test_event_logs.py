@@ -181,11 +181,18 @@ def test_sink_roundtrip(spark, log_dir, tmp_path):
     assert "event_date" in back.columns
 
 
+def _sink_partition_stats(spark, sink):
+    """(event_date, ingest_src) → (file count, bytes), from the sink's
+    one listing."""
+    from spark_history_server_rs_spark.sources.event_logs import _sink_partitions
+
+    return {k: (len(f), b) for k, (_, f, b) in _sink_partitions(spark, sink).items()}
+
+
 def test_compact_sink_inplace(spark, log_dir, tmp_path):
     """S9c: three appends → many small files per partition; one in-place
     compaction → target file counts, identical rows, second run no-op."""
     from spark_history_server_rs_spark.sources.event_logs import (
-        _sink_partition_stats,
         compact_sink_inplace,
     )
 
@@ -213,14 +220,13 @@ def test_compact_sink_inplace(spark, log_dir, tmp_path):
 
 def test_compact_sink_inplace_escaped_partition_values(spark, tmp_path):
     """Partition values Spark percent-escapes in directory names (':' in
-    a URI-ish ingest_src) must still compact: _sink_partition_stats has
-    to Hive-unescape the directory segments before joining them against
+    a URI-ish ingest_src) must still compact: _sink_partitions has
+    to Hive-unescape the directory segments before matching them against
     the DataFrame's decoded partition columns, or the partition matches
     zero rows — never rewritten, yet re-selected on every run."""
     from pyspark.sql import functions as F
 
     from spark_history_server_rs_spark.sources.event_logs import (
-        _sink_partition_stats,
         compact_sink_inplace,
     )
 
@@ -249,6 +255,86 @@ def test_compact_sink_inplace_escaped_partition_values(spark, tmp_path):
     # idempotent — and in the buggy version this second run would
     # re-select the never-rewritten partition forever
     assert compact_sink_inplace(spark, sink, target_file_mb=512) == []
+
+
+def test_compaction_scan_reads_only_selected_partitions(
+    spark, log_dir, tmp_path, monkeypatch
+):
+    """The compaction rewrite's scan is partition-pruned: it opens the
+    selected partitions' files and no other (a broadcast key-set join
+    would scan every file of the sink)."""
+    from pyspark.sql import functions as F
+
+    from spark_history_server_rs_spark.sources import event_logs as el
+
+    sink = str(tmp_path / "sink")
+    events = read_event_logs(spark, log_dir + "/*/*")
+    write_events_sink(events, sink)
+    write_events_sink(events.filter(F.col("app_id") == "application_spilly"), sink)
+    n_files = sum(f.endswith(".parquet") for _, _, fs in os.walk(sink) for f in fs)
+
+    files_read = []
+    overwrite = el._overwrite_partitions
+
+    def spy(out, sink_dir):
+        plan = out._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.inputPlan()
+        leaves = plan.collectLeaves()
+        for leaf in (leaves.apply(i) for i in range(leaves.length())):
+            if leaf.nodeName().startswith("Scan parquet"):
+                leaf.inputRDD()  # lists the pruned partitions, runs no job
+                files_read.append(leaf.metrics().apply("numFiles").value())
+        overwrite(out, sink_dir)
+
+    monkeypatch.setattr(el, "_overwrite_partitions", spy)
+    plan = el.compact_sink_inplace(spark, sink, target_file_mb=512)
+    selected = sum(p["files_before"] for p in plan)
+    assert 0 < selected < n_files
+    assert files_read == [selected]
+
+
+def test_streamed_sink_is_erasable_and_compactable(spark, log_dir, tmp_path):
+    """``stream_ingest`` writes the batch sink's layout, so the sink
+    maintenance works on it: compaction merges the multi-file partitions
+    that split reads leave, erasure removes the victim app's rows, and
+    every other row comes through unchanged."""
+    from spark_history_server_rs_spark.sources.event_logs import (
+        compact_sink_inplace,
+        erase_apps_from_sink,
+    )
+    from spark_history_server_rs_spark.streaming.ingest import stream_ingest
+
+    sink = str(tmp_path / "stream_sink")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    # 1 KB read splits: several tasks read each log, each writing its
+    # own file into the log's partitions
+    spark.conf.set(key, "1k")
+    try:
+        q = stream_ingest(spark, log_dir + "/*/*", sink, str(tmp_path / "ckpt"))
+        q.awaitTermination(120)
+    finally:
+        spark.conf.set(key, old)
+
+    def rows():
+        got = {r["id"]: r for r in read_events_sink(spark, sink).collect()}
+        assert len(got) == read_events_sink(spark, sink).count()
+        return got
+
+    before = rows()
+    assert len(before) == 3 * (1 + 1 + 12 + 1)
+    plan = compact_sink_inplace(spark, sink, target_file_mb=512)
+    assert plan, "split reads should have left multi-file partitions"
+    assert rows() == before
+    assert compact_sink_inplace(spark, sink, target_file_mb=512) == []
+
+    victim = "application_mem_hog"
+    res = erase_apps_from_sink(
+        spark, sink, spark.createDataFrame([(victim,)], "app_id string")
+    )
+    assert res["n_rows_erased"] == 1 + 1 + 12 + 1
+    assert rows() == {i: r for i, r in before.items() if r.app_id != victim}
 
 
 def test_incremental_ingest_no_duplicates(spark, tmp_path):
@@ -403,7 +489,9 @@ def test_zip_compressed_logs(spark, tmp_path):
     the same normalized events frame."""
     import zipfile
 
-    from spark_history_server_rs_spark.sources.event_logs import read_zip_event_logs
+    from spark_history_server_rs_spark.sources.event_logs import (
+        read_compressed_event_logs,
+    )
 
     d = tmp_path / "ziplogs"
     d.mkdir()
@@ -412,7 +500,7 @@ def test_zip_compressed_logs(spark, tmp_path):
     )
     with zipfile.ZipFile(d / "application_zip.zip", "w") as zf:
         zf.writestr("events_1_application_zip", payload)
-    events = read_zip_event_logs(spark, str(d))
+    events = read_compressed_event_logs(spark, str(d))
     rows = events.collect()
     assert len(rows) == 8
     assert {r.app_id for r in rows} == {"application_zip"}
